@@ -75,12 +75,6 @@ object TextFunctions {
       lowercase: Boolean = true, collapseWs: Boolean = true): Column =
     graft.plans.NormalizeText.normalize_text(text, form, lowercase, collapseWs)
 
-  /** BPE-ish token estimate: words + punctuation marks counted separately
-    * (regex splitter; approximates subword token counts for budget math). */
-  def tokenEstimate(text: Column): Column =
-    size(filter(split(text, "[\\s]+", -1), t => length(t) > 0)) +
-      length(text) - length(regexp_replace(text, "[.,;:!?]", ""))
-
   /** GPT-2-style pre-tokenizer pieces: contractions, space-prefixed letter
     * runs, digit runs, punctuation runs. The regex subset is chosen to
     * behave identically under Java regex and RE2-ish engines, so a DuckDB

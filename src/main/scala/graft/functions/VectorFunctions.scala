@@ -22,25 +22,10 @@ object VectorFunctions {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2Norm(a) * l2Norm(b))
 
-  def l2Distance(a: Column, b: Column): Column =
-    sqrt(
-      aggregate(
-        zip_with(a.cast("array<double>"), b.cast("array<double>"), (x, y) => (x - y) * (x - y)),
-        lit(0.0),
-        (acc, v) => acc + v
-      )
-    )
-
   /** Sign bit of the projection onto a fixed pseudo-random hyperplane —
     * the building block for random-hyperplane LSH (SimHash for vectors).
     * `plane` is generated driver-side from a fixed seed and inlined as an
     * array literal, so the hash is deterministic and broadcast-free. */
   def hyperplaneBit(v: Column, plane: Seq[Double]): Column =
     (dot(v, array(plane.map(lit): _*)) >= 0).cast("int")
-
-  /** k-bit LSH bucket id from k fixed hyperplanes. */
-  def lshBucket(v: Column, planes: Seq[Seq[Double]]): Column =
-    planes.zipWithIndex.foldLeft(lit(0)) { case (acc, (p, i)) =>
-      acc + (hyperplaneBit(v, p) * (1 << i))
-    }
 }

@@ -762,24 +762,6 @@ object Dedup {
         coalesce(col("max_run") + (k - 1), lit(0L)).as("longest_dup_span_tokens"))
   }
 
-  /** SimHash near-dup pairs: block-key candidates → exact hamming check. */
-  def simHashPairs(docs: DataFrame, idCol: String, textCol: String, maxHamming: Int = 3): DataFrame = {
-    val s = simHash(docs, idCol, textCol)
-    val blocks = (0 to 3).map { bIdx =>
-      s.select(col("doc_id"), lit(bIdx).as("band"), col(s"block$bIdx").as("bkey"), col("simhash"))
-    }.reduce(_ unionByName _)
-    val cand = blocks
-      .as("x")
-      .join(blocks.as("y"), Seq("band", "bkey"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"), col("x.simhash").as("sa"), col("y.simhash").as("sb"))
-      .distinct()
-    cand
-      .withColumn("hamming", bit_count(col("sa").bitwiseXOR(col("sb"))))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
-  }
-
   /** Paragraph-granularity cross-document dedup (the CCNet/MassiveText
     * operation: remove a paragraph wherever it reappears in another
     * document, keeping the first occurrence). Documents are segmented

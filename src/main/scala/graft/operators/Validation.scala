@@ -14,9 +14,6 @@ object Validation {
   /** One check outcome; `failedCount == 0` means pass. */
   final case class Check(name: String, failed: Column)
 
-  def notNull(cols: Seq[String]): Seq[Check] =
-    cols.map(c => Check(s"not_null_$c", col(c).isNull.cast("long")))
-
   def acceptedValues(c: String, values: Seq[String]): Check =
     Check(s"accepted_values_$c", (!col(c).isInCollection(values) && col(c).isNotNull).cast("long"))
 
@@ -188,24 +185,5 @@ object Validation {
         sum(col("cb")).as("n_b"),
         round(sum(col("term")), 6).as("psi"))
       .withColumn("is_drift", col("psi") > alarmAt)
-  }
-
-  /** Z-score outlier counting from exact decimal sums — single pass for
-    * moments + one filtered pass, both distributed (A11). */
-  def zscoreOutlierCount(df: DataFrame, c: String, z: Double): DataFrame = {
-    val d = col(c).cast("decimal(18,2)")
-    val stats = df.agg(
-      count(col(c)).as("n"),
-      sum(d).cast("double").as("s1"),
-      sum(d * d).cast("double").as("s2")
-    )
-    val withMoments = stats.select(
-      col("n"),
-      (col("s1") / col("n")).as("mu"),
-      sqrt(greatest(col("s2") / col("n") - (col("s1") / col("n")) * (col("s1") / col("n")), lit(0.0))).as("sigma")
-    )
-    df.crossJoin(broadcast(withMoments))
-      .filter(abs(col(c) - col("mu")) / col("sigma") > z)
-      .agg(count(lit(1)).as("outlier_cnt"))
   }
 }

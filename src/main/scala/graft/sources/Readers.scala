@@ -45,9 +45,4 @@ object Readers {
     * full row is retained — which is what a quarantine sink wants anyway.) */
   def rejects(df: DataFrame): DataFrame =
     df.filter(col("_corrupt_record").isNotNull)
-
-  /** Generic configurable source (S7): arbitrary JSON, schema inferred —
-    * the only sanctioned inference path; everything else is declared. */
-  def jsonInferred(spark: SparkSession, path: String): DataFrame =
-    spark.read.json(path)
 }

@@ -1,10 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import java.nio.file.Files
 
-import graft.operators.Upsert
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQueryProgress, Trigger}
+
+import graft.operators.{Dedup, Upsert}
 
 /** Structured Streaming re-expression of the reference's Kafka→Flink→
   * StarRocks path (SURVEY §2.9). Sources here are file streams (no Kafka
@@ -44,6 +46,53 @@ object StreamingJobs {
       finally spark.conf.set("spark.sql.shuffle.partitions", prev)
     }
 
+  /** The one memory-sink runner: starts `df` as a query named
+    * `<prefix>_<n>` under the 8-partition scope, drains everything
+    * available, stops it, and returns the sink table (a batch frame)
+    * together with the query's progress reports. */
+  private def drainToMemory(
+      spark: SparkSession,
+      df: DataFrame,
+      outputMode: String,
+      prefix: String
+  ): (DataFrame, Array[StreamingQueryProgress]) = {
+    val name = s"${prefix}_${counter.incrementAndGet()}"
+    val progress = withScopedShufflePartitions(spark, 8) {
+      val q = df.writeStream.outputMode(outputMode).format("memory").queryName(name).start()
+      try { q.processAllAvailable(); q.recentProgress }
+      finally q.stop()
+    }
+    (spark.table(name), progress)
+  }
+
+  /** File-source stream over the single `<table>.parquet` file in `sfDir`,
+    * typed with that file's schema. Events read their nanosecond `ts` as
+    * raw longs and normalize it, exactly as `Tables.events` does. */
+  private def fileStream(spark: SparkSession, sfDir: String, table: String): DataFrame = {
+    val file = s"$table.parquet"
+    val events = table == "events"
+    if (events) spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val schema = spark.read.parquet(s"$sfDir/$file").schema
+    val stream = spark.readStream.schema(schema).option("pathGlobFilter", file).parquet(sfDir)
+    if (events) graft.core.Tables.normalizeTs(stream) else stream
+  }
+
+  /** Stages `input` in a fresh temp directory, streams it back through
+    * `plan` into the memory sink, and deletes the directory after the
+    * drain: the sink table holds the result, so nothing reads the staged
+    * files afterwards, and no two calls (in one JVM or across JVMs) can
+    * share a staging path. */
+  private def drainStaged(spark: SparkSession, input: DataFrame, prefix: String)(
+      plan: DataFrame => DataFrame): DataFrame = {
+    val staged = Files.createTempDirectory(s"graft_${prefix}_input_").toFile
+    try {
+      input.write.mode("overwrite").parquet(staged.getPath)
+      val schema = spark.read.parquet(staged.getPath).schema
+      drainToMemory(spark, plan(spark.readStream.schema(schema).parquet(staged.getPath)),
+        "append", prefix)._1
+    } finally new scala.reflect.io.Directory(staged).deleteRecursively(): Unit
+  }
+
   /** ST2–ST4: pass-through pipeline — stream of typed rows, stamped with a
     * processing-time column (Flink PROCTIME parity), checkpointed, upserted
     * into a bronze parquet table via idempotent foreachBatch. */
@@ -76,33 +125,14 @@ object StreamingJobs {
     * memory sink and returned as a batch DataFrame. Complete output mode so
     * the result is the full, deterministic window set. */
   def tumblingEventCounts(spark: SparkSession, sfDir: String, window_ : String = "1 hour"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val path = s"$sfDir/events.parquet"
-    val schema = spark.read.parquet(path).schema
-    val stream = spark.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-      .transform(graft.core.Tables.normalizeTs(_))
-    val agg = stream
+    val agg = fileStream(spark, sfDir, "events")
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), window_), col("event_type"))
       .agg(
         count(lit(1)).as("event_cnt"),
         sum(col("value").cast("decimal(18,2)")).as("value_sum")
       )
-    val name = s"tumbling_${counter.incrementAndGet()}"
-    withScopedShufflePartitions(spark, 8) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark
-      .table(name)
+    drainToMemory(spark, agg, "complete", "tumbling")._1
       .select(
         col("window.start").cast("timestamp_ntz").as("hr_start"),
         col("event_type"),
@@ -120,31 +150,13 @@ object StreamingJobs {
     * a22_latency_quantiles, oracled). Complete-mode memory sink harness
     * like ST5. */
   def streamingLatencyQuantiles(spark: SparkSession, sfDir: String, window_ : String = "1 hour"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val path = s"$sfDir/events.parquet"
-    val schema = spark.read.parquet(path).schema
-    val stream = spark.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-      .transform(graft.core.Tables.normalizeTs(_))
-    val agg = stream
+    val agg = fileStream(spark, sfDir, "events")
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), window_))
       .agg(
         expr("approx_percentile(value, array(0.5D, 0.95D, 0.99D), 10000)").as("q"),
         count(lit(1)).as("n_req"))
-    val name = s"latency_q_${counter.incrementAndGet()}"
-    withScopedShufflePartitions(spark, 8) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name).select(
+    drainToMemory(spark, agg, "complete", "latency_q")._1.select(
       col("window.start").cast("timestamp_ntz").as("hr_start"),
       element_at(col("q"), 1).as("p50"),
       element_at(col("q"), 2).as("p95"),
@@ -170,41 +182,23 @@ object StreamingJobs {
       alarmAt: Double = 0.2
   ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val path = s"$sfDir/events.parquet"
-    val schema = spark.read.parquet(path).schema
     def binOf(c: Column) =
       least(greatest(floor(c / binWidth), lit(0)), lit(nBins - 1)).cast("int")
 
-    val baseline = graft.core.Tables.normalizeTs(spark.read.parquet(path))
-      .filter(col("event_id") % 2 === 0)
-      .groupBy(col("event_type"), binOf(col("value")).as("bin"))
-      .agg(count(lit(1)).as("cb"))
-
-    val stream = spark.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-      .transform(graft.core.Tables.normalizeTs(_))
+    val stream = fileStream(spark, sfDir, "events")
       .filter(col("event_id") % 2 =!= 0)
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), window_), col("event_type"), binOf(col("value")).as("bin"))
       .agg(count(lit(1)).as("ca"))
-    val name = s"drift_${counter.incrementAndGet()}"
-    withScopedShufflePartitions(spark, 8) {
-      val q = stream.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
+    val baseline = graft.core.Tables.normalizeTs(spark.read.parquet(s"$sfDir/events.parquet"))
+      .filter(col("event_id") % 2 === 0)
+      .groupBy(col("event_type"), binOf(col("value")).as("bin"))
+      .agg(count(lit(1)).as("cb"))
 
     // localCheckpoint: dense below joins back against cur (self-join on
     // the memory-sink lineage would hit conflicting-reference resolution);
     // the finalized histogram is tiny (windows × types × bins)
-    val cur = spark.table(name).select(
+    val cur = drainToMemory(spark, stream, "complete", "drift")._1.select(
       col("window.start").cast("timestamp_ntz").as("hr_start"),
       col("event_type"), col("bin"), col("ca"))
       .localCheckpoint()
@@ -240,33 +234,14 @@ object StreamingJobs {
       size: String = "2 hours",
       slide: String = "1 hour"
   ): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val path = s"$sfDir/events.parquet"
-    val schema = spark.read.parquet(path).schema
-    val stream = spark.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-      .transform(graft.core.Tables.normalizeTs(_))
-    val agg = stream
+    val agg = fileStream(spark, sfDir, "events")
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), size, slide), col("event_type"))
       .agg(
         count(lit(1)).as("event_cnt"),
         sum(col("value").cast("decimal(18,2)")).as("value_sum")
       )
-    val name = s"sliding_${counter.incrementAndGet()}"
-    withScopedShufflePartitions(spark, 8) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark
-      .table(name)
+    drainToMemory(spark, agg, "complete", "sliding")._1
       .select(
         col("window.start").cast("timestamp_ntz").as("win_start"),
         col("event_type"),
@@ -310,13 +285,7 @@ object StreamingJobs {
     * a memory sink; the inner-join append output is the exact deterministic
     * match set, so a batch SQL oracle can hash-check it. */
   def purchaseClickAttribution(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    def eventsStream() = spark.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-      .transform(graft.core.Tables.normalizeTs(_))
+    def eventsStream() = fileStream(spark, sfDir, "events")
     val purchases = eventsStream()
       .filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id"), col("ts").as("p_ts"))
@@ -330,13 +299,7 @@ object StreamingJobs {
       col("user_id") === col("c_user_id") &&
         col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
         col("c_ts") <= col("p_ts"))
-    val name = s"attribution_${counter.incrementAndGet()}"
-    withScopedShufflePartitions(spark, 8) {
-      val q = joined.writeStream.outputMode("append").format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name).select(
+    drainToMemory(spark, joined, "append", "attribution")._1.select(
       col("purchase_id"), col("click_id"), col("user_id"),
       col("p_ts").cast("timestamp_ntz").as("p_ts"),
       col("c_ts").cast("timestamp_ntz").as("c_ts"))
@@ -346,22 +309,19 @@ object StreamingJobs {
     * watermarked streaming dropDuplicates (duplicate re-deliveries within
     * the watermark horizon are suppressed). */
   def streamingDedup(spark: SparkSession, srcDir: String, keys: Seq[String]): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(srcDir).schema
-    // ts may be raw nanos, NTZ, or a proper timestamp depending on the
-    // writer; normalizeTs maps all three to TimestampType (no-op otherwise)
-    val stream = spark.readStream.schema(schema).parquet(srcDir)
-      .transform(graft.core.Tables.normalizeTs(_))
-    val deduped = stream
+    val deduped = landingEventsStream(spark, srcDir)
       .withWatermark("ts", "1 hour")
       .dropDuplicates(keys)
-    val name = s"dedup_${counter.incrementAndGet()}"
-    withScopedShufflePartitions(spark, 8) {
-      val q = deduped.writeStream.outputMode("append").format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name)
+    drainToMemory(spark, deduped, "append", "dedup")._1
+  }
+
+  /** File-source stream over every parquet file in a landing directory.
+    * `ts` may be raw nanos, NTZ, or a proper timestamp depending on the
+    * writer; normalizeTs maps all three to TimestampType. */
+  private def landingEventsStream(spark: SparkSession, srcDir: String): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val schema = spark.read.parquet(srcDir).schema
+    graft.core.Tables.normalizeTs(spark.readStream.schema(schema).parquet(srcDir))
   }
 
   /** ST9: INGEST-TIME benchmark decontamination — the d9 screen as a
@@ -373,25 +333,16 @@ object StreamingJobs {
     * ingest stream is the 100 TB firehose and the bench set stays small. */
   def streamingDecontamination(spark: SparkSession, sfDir: String, threshold: Double = 0.4): DataFrame = {
     import graft.plans.VectorExpressions.{vector_dot, vector_normalize}
-    val schema = spark.read.parquet(s"$sfDir/embeddings.parquet").schema
     val bench = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .filter(col("vec_id") % 23 === 0)
       .select(col("vec_id").as("bench_id"), vector_normalize(col("embedding")).as("bv"))
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(sfDir)
+    val stream = fileStream(spark, sfDir, "embeddings")
       .filter(col("vec_id") % 23 =!= 0)
       .select(col("vec_id"), vector_normalize(col("embedding")).as("nv"))
     val hits = stream
       .join(broadcast(bench), vector_dot(col("nv"), col("bv")) >= threshold)
       .select(col("vec_id"), col("bench_id"))
-    val name = s"decontam_${counter.incrementAndGet()}"
-    withScopedShufflePartitions(spark, 8) {
-      val q = hits.writeStream.outputMode("append").format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name)
+    drainToMemory(spark, hits, "append", "decontam")._1
   }
 
   /** ST10: ONLINE SemDeDup — the d8 semantic dedup as a stateful stream.
@@ -404,55 +355,27 @@ object StreamingJobs {
     * semantics — so this stateful query is hash-checked against the same
     * DuckDB oracle as d8. State per cell is the cell's seen vectors; at
     * 100 TB that is bounded the same way the batch op is: k grows with the
-    * corpus so cells stay small (production adds per-cell caps/TTL). */
-  /** st10's row-local stage as a standalone stream: source scan +
-    * codegen'd nearest-centroid cell assignment + normalization, no
-    * state. Shared by the full operator below and St10Profile's
-    * stage-attribution runs (profiling the assign stage in isolation
-    * must run EXACTLY the production plan). Vectors leave as primitive
-    * Array[Double]: the state tuples then encode as UnsafeArrayData
-    * primitive arrays, and the dup-scan dot loop reads unboxed doubles —
-    * the Seq[Double] predecessor paid a boxed element read per multiply
-    * in the state scan (St10Profile's table in BASELINE.md attributes
-    * the stage walls). */
-  private[graft] def semanticAssignStream(
-      spark: SparkSession,
-      sfDir: String,
-      dim: Int = 64,
-      k: Int = 64,
-      seed: Long = 42L
-  ): org.apache.spark.sql.Dataset[(Long, Int, Array[Double])] = {
-    import spark.implicits._
-    import graft.plans.VectorExpressions.{nearest_centroids, vector_normalize}
-    val cents = graft.operators.Similarity.seededCentroids(dim, k, seed)
-    val schema = spark.read.parquet(s"$sfDir/embeddings.parquet").schema
-    spark.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(sfDir)
-      .select(
-        col("vec_id").as[Long],
-        nearest_centroids(vector_normalize(col("embedding")), cents, 1)(0).as[Int],
-        vector_normalize(col("embedding")).as[Array[Double]])
-  }
-
+    * corpus so cells stay small (production adds per-cell caps/TTL).
+    * Vectors travel as primitive Array[Double]: the state tuples then
+    * encode as UnsafeArrayData primitive arrays, and the dup-scan dot loop
+    * reads unboxed doubles (a Seq[Double] state paid a boxed element read
+    * per multiply; BASELINE.md, round 12). */
   def streamingSemanticDedup(
       spark: SparkSession,
       sfDir: String,
       threshold: Double = 0.4,
       dim: Int = 64,
       k: Int = 64,
-      seed: Long = 42L,
-      phaseNanos: Option[scala.collection.concurrent.TrieMap[String, Long]] = None
+      seed: Long = 42L
   ): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val stream = semanticAssignStream(spark, sfDir, dim, k, seed)
-
-    // per-cell state-stage wall, summed across executor threads (the
-    // profile collector's numerator; a no-op when not profiling beyond
-    // two nanoTime reads per cell per batch). Includes the lazy state
-    // decode, the sorted dup scan and the state write-back.
-    val fnNanos = spark.sparkContext.longAccumulator("st10_fn_nanos")
+    import graft.plans.VectorExpressions.{nearest_centroids, vector_normalize}
+    val cents = graft.operators.Similarity.seededCentroids(dim, k, seed)
+    val stream = fileStream(spark, sfDir, "embeddings")
+      .select(
+        col("vec_id").as[Long],
+        nearest_centroids(vector_normalize(col("embedding")), cents, 1)(0).as[Int],
+        vector_normalize(col("embedding")).as[Array[Double]])
 
     def dot(a: Array[Double], b: Array[Double]): Double = {
       var s = 0.0; var i = 0
@@ -461,7 +384,6 @@ object StreamingJobs {
     }
     def fn(cell: Int, rows: Iterator[(Long, Int, Array[Double])],
            state: GroupState[Seq[(Long, Array[Double])]]): Iterator[(Long, Int, Boolean)] = {
-      val t0 = System.nanoTime()
       val sorted = rows.toArray.sortBy(_._1)
       var seen = state.getOption.getOrElse(Seq.empty).toList
       val out = new scala.collection.mutable.ArrayBuffer[(Long, Int, Boolean)](sorted.length)
@@ -471,7 +393,6 @@ object StreamingJobs {
         seen = (id, nv) :: seen
       }
       state.update(seen)
-      fnNanos.add(System.nanoTime() - t0)
       out.iterator
     }
 
@@ -479,28 +400,17 @@ object StreamingJobs {
       .groupByKey(_._2)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fn)
       .toDF("vec_id", "cluster", "is_dup")
-    val name = s"semdedup_${counter.incrementAndGet()}"
-    withScopedShufflePartitions(spark, 8) {
-      val q = flagged.writeStream.outputMode("append").format("memory").queryName(name).start()
-      try {
-        val t0 = System.nanoTime()
-        q.processAllAvailable()
-        phaseNanos.foreach { acc =>
-          acc.updateWith("drain") { v => Some(v.getOrElse(0L) + (System.nanoTime() - t0)) }: Unit
-          acc.updateWith("fn") { v => Some(v.getOrElse(0L) + fnNanos.value) }: Unit
-        }
-        // The d8-oracle equivalence (min-id-wins inside each cell) holds only
-        // when the corpus lands in ONE microbatch; across batches the flag set
-        // becomes first-seen (arrival-order) semantics. Assert the assumption
-        // instead of silently drifting from the oracle.
-        val fed = q.recentProgress.count(_.numInputRows > 0)
-        require(fed <= 1,
-          s"streamingSemanticDedup saw $fed non-empty microbatches; " +
-            "min-id oracle semantics require single-microbatch input " +
-            "(multi-batch runs are first-seen / arrival-order by design)")
-      } finally q.stop()
-    }
-    spark.table(name)
+    val (out, progress) = drainToMemory(spark, flagged, "append", "semdedup")
+    // The d8-oracle equivalence (min-id-wins inside each cell) holds only
+    // when the corpus lands in ONE microbatch; across batches the flag set
+    // becomes first-seen (arrival-order) semantics. Assert the assumption
+    // instead of silently drifting from the oracle.
+    val fed = progress.count(_.numInputRows > 0)
+    require(fed <= 1,
+      s"streamingSemanticDedup saw $fed non-empty microbatches; " +
+        "min-id oracle semantics require single-microbatch input " +
+        "(multi-batch runs are first-seen / arrival-order by design)")
+    out
   }
 
   /** ST11: ingest-time EXACT dedup — u4's fingerprint dedup as a stateful
@@ -521,11 +431,7 @@ object StreamingJobs {
     * never grows with duplicates. */
   def streamingExactDedup(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
+    val stream = fileStream(spark, sfDir, "documents")
       .select(
         md5(lower(trim(col("text")))).as[String],
         col("doc_id").as[Long])
@@ -545,15 +451,9 @@ object StreamingJobs {
       .groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fn)
       .toDF("fp", "keep_id", "dup_cnt")
-    val name = s"exactdedup_${counter.incrementAndGet()}"
-    withScopedShufflePartitions(spark, 8) {
-      val q = deduped.writeStream.outputMode("append").format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
     // keep_id is constant per fp once assigned; dup_cnt grows monotonically —
     // the max row per fingerprint IS the final state.
-    spark.table(name)
+    drainToMemory(spark, deduped, "append", "exactdedup")._1
       .groupBy("fp")
       .agg(min("keep_id").as("keep_id"), max("dup_cnt").as("dup_cnt"))
   }
@@ -577,7 +477,6 @@ object StreamingJobs {
       maxFilesPerTrigger: Option[Int] = None
   ): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = spark.read.option("pathGlobFilter", glob).parquet(sfDir).schema
     val reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
@@ -606,16 +505,10 @@ object StreamingJobs {
       .groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fn)
       .toDF("user_id", "event_id", "event_type", "value")
-    val name = s"cdcapply_${counter.incrementAndGet()}"
-    withScopedShufflePartitions(spark, 8) {
-      val q = applied.writeStream.outputMode("append").format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
     // the max-version row per key IS the final state; tombstoned keys leave
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("event_id").desc)
-    spark.table(name)
+    drainToMemory(spark, applied, "append", "cdcapply")._1
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1 && col("event_type") =!= "error")
       .select("user_id", "event_id", "event_type", "value")
@@ -633,11 +526,7 @@ object StreamingJobs {
       chunkLen: Int = 64,
       stride: Int = 48
   ): DataFrame = {
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
-    val chunks = stream
+    val chunks = fileStream(spark, sfDir, "documents")
       .select(col("doc_id"), split(col("text"), " ", -1).as("w"))
       .select(col("doc_id"),
         posexplode(sequence(lit(0),
@@ -649,33 +538,18 @@ object StreamingJobs {
         col("chunk_idx"),
         size(slice(col("w"), col("start") + 1, lit(chunkLen))).as("n_chunk_tokens"),
         concat_ws(" ", slice(col("w"), col("start") + 1, lit(chunkLen))).as("chunk_text"))
-    val name = s"chunking_${counter.incrementAndGet()}"
-    withScopedShufflePartitions(spark, 8) {
-      val q = chunks.writeStream.outputMode("append").format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name)
+    drainToMemory(spark, chunks, "append", "chunking")._1
   }
 
   /** ST14: t17's Gopher quality verdict evaluated at ingest time — a
-    * stateless 1:1 projection (no state store, no watermark, no scoped
-    * shuffle partitions needed: the plan has no exchange at all), so the
-    * stream output equals the batch filter row-for-row and reuses its
-    * oracle verbatim. This is where a 100 TB pipeline wants the quality
-    * gate: documents scored (and droppable) before they ever land. */
-  def streamingQualityGate(spark: SparkSession, sfDir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
-    val scored = graft.functions.TextFunctions.gopherFilter(stream)
-    val name = s"quality_gate_${counter.incrementAndGet()}"
-    val q = scored.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(name)
-  }
+    * stateless 1:1 projection (no state store, no watermark; the plan has
+    * no exchange at all, so the drain's partition scope changes nothing),
+    * so the stream output equals the batch filter row-for-row and reuses
+    * its oracle verbatim. This is where a 100 TB pipeline wants the
+    * quality gate: documents scored (and droppable) before they ever land. */
+  def streamingQualityGate(spark: SparkSession, sfDir: String): DataFrame =
+    drainToMemory(spark, graft.functions.TextFunctions.gopherFilter(
+      fileStream(spark, sfDir, "documents")), "append", "quality_gate")._1
 
   /** ST15: x3's sequence packing at INGEST time — per-source cumulative
     * token offset held as flatMapGroupsWithState state (ONE long per
@@ -690,11 +564,7 @@ object StreamingJobs {
     * (single input file => single microbatch here, the st11 contract). */
   def streamingPack(spark: SparkSession, sfDir: String, budget: Long = 512L): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
+    val stream = fileStream(spark, sfDir, "documents")
       .select(col("source"), col("doc_id"),
         graft.functions.TextFunctions.tokenCount(col("text")).cast("long").as("toks"))
       .as[(String, Long, Long)]
@@ -716,13 +586,7 @@ object StreamingJobs {
       .groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fn)
       .toDF("source", "doc_id", "seq_id", "toks")
-    val name = s"pack_${counter.incrementAndGet()}"
-    withScopedShufflePartitions(spark, 8) {
-      val q = assigned.writeStream.outputMode("append").format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name)
+    drainToMemory(spark, assigned, "append", "pack")._1
       .groupBy(col("source"), col("seq_id"))
       .agg(count(lit(1)).as("n_docs"), sum(col("toks")).as("seq_tokens"))
       .withColumn("fill_ratio", col("seq_tokens").cast("double") / budget.toDouble)
@@ -749,18 +613,19 @@ object StreamingJobs {
     * deterministic batch-driven test path we emit closed sessions only. */
   def sessionize(spark: SparkSession, srcDir: String, gapSeconds: Long): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(srcDir).schema
     // unix_seconds FLOORS; the former `ts div 1e9` nanos path truncated
     // toward zero — second buckets would differ by 1 s for pre-1970
     // timestamps (none exist in any feed; noted in case that changes)
-    val stream = graft.core.Tables.normalizeTs(spark.readStream.schema(schema).parquet(srcDir))
-      .withColumn("ts_s", expr("unix_seconds(ts)"))
-      .select(col("user_id").as[Long], col("ts_s").as[Long])
-      .as[(Long, Long)]
+    val stream = landingEventsStream(spark, srcDir)
+      .select(col("user_id").as[Long], expr("unix_seconds(ts)").as("ts_s").as[Long])
+    drainToMemory(spark, sessionPlan(stream, gapSeconds), "append", "sessions")._1
+  }
 
-    // state tuple: (session_start_s, last_seen_s, n_events)
+  /** Per-user gap sessionization over (user_id, ts_s) rows. State is
+    * (session_start_s, last_seen_s, n_events); a gap > `gapSeconds` emits
+    * the session it closes, and the open session stays in state. */
+  private def sessionPlan(stream: Dataset[(Long, Long)], gapSeconds: Long): DataFrame = {
+    import stream.sparkSession.implicits._
     def fn(user: Long, rows: Iterator[(Long, Long)], state: GroupState[(Long, Long, Int)]):
         Iterator[(Long, Long, Long, Int)] = {
       val sorted = rows.map(_._2).toSeq.sorted
@@ -778,16 +643,10 @@ object StreamingJobs {
       st.foreach(state.update)
       out.iterator
     }
-
-    val sessions = stream
+    stream
       .groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fn)
       .toDF("user_id", "session_start_s", "session_end_s", "n_events")
-    val name = s"sessions_${counter.incrementAndGet()}"
-    val q = sessions.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(name)
   }
 
   /** ST13: driver-graded streaming sessionization over the events table —
@@ -810,51 +669,14 @@ object StreamingJobs {
     * which any production job needs for a run horizon anyway). */
   def streamingSessionize(spark: SparkSession, sfDir: String, gapSeconds: Long = 1800L): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val ev = graft.core.Tables(spark, sfDir).events
       .select(col("user_id"), unix_timestamp(col("ts")).as("ts_s"))
     val maxS = ev.agg(max("ts_s")).head.getLong(0)
-    val staged = s"/tmp/graft_st13_input_${counter.incrementAndGet()}"
-    ev.unionByName(
-        ev.select("user_id").distinct().withColumn("ts_s", lit(maxS + gapSeconds + 1)))
-      .write.mode("overwrite").parquet(staged)
-
-    val schema = spark.read.parquet(staged).schema
-    val stream = spark.readStream.schema(schema).parquet(staged)
-      .select(col("user_id").as[Long], col("ts_s").as[Long])
-      .as[(Long, Long)]
-
-    // state tuple: (session_start_s, last_seen_s, n_events) — same rule as
-    // sessionize above; duplicated closure because gapSeconds is captured
-    def fn(user: Long, rows: Iterator[(Long, Long)], state: GroupState[(Long, Long, Int)]):
-        Iterator[(Long, Long, Long, Int)] = {
-      val sorted = rows.map(_._2).toSeq.sorted
-      var st = state.getOption
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Int)]
-      sorted.foreach { t =>
-        st match {
-          case Some((start, last, n)) if t - last <= gapSeconds => st = Some((start, t, n + 1))
-          case Some((start, last, n)) =>
-            out += ((user, start, last, n))
-            st = Some((t, t, 1))
-          case None => st = Some((t, t, 1))
-        }
-      }
-      st.foreach(state.update)
-      out.iterator
-    }
-
-    val sessions = stream
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fn)
-      .toDF("user_id", "session_start_s", "session_end_s", "n_events")
-    val name = s"sessions_all_${counter.incrementAndGet()}"
-    withScopedShufflePartitions(spark, 8) {
-      val q = sessions.writeStream.outputMode("append").format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name).withColumn("n_events", col("n_events").cast("long"))
+    val input = ev.unionByName(
+      ev.select("user_id").distinct().withColumn("ts_s", lit(maxS + gapSeconds + 1)))
+    drainStaged(spark, input, "st13") { stream =>
+      sessionPlan(stream.select(col("user_id").as[Long], col("ts_s").as[Long]), gapSeconds)
+    }.withColumn("n_events", col("n_events").cast("long"))
   }
 
   /** ST19: a23's ordered conversion funnel computed at ingest time with
@@ -875,21 +697,13 @@ object StreamingJobs {
     * |users| rows, the final card is one bounded aggregate. */
   def streamingFunnel(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val ev = graft.core.Tables(spark, sfDir).events
       .filter(col("event_type").isin("view", "click", "purchase"))
       .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("ts_us"))
-    val staged = s"/tmp/graft_st19_input_${counter.incrementAndGet()}"
-    ev.unionByName(
-        ev.select("user_id").distinct()
-          .withColumn("event_type", lit("eof"))
-          .withColumn("ts_us", lit(Long.MaxValue)))
-      .write.mode("overwrite").parquet(staged)
-
-    val schema = spark.read.parquet(staged).schema
-    val stream = spark.readStream.schema(schema).parquet(staged)
-      .select(col("user_id").as[Long], col("event_type").as[String], col("ts_us").as[Long])
-      .as[(Long, String, Long)]
+    val input = ev.unionByName(
+      ev.select("user_id").distinct()
+        .withColumn("event_type", lit("eof"))
+        .withColumn("ts_us", lit(Long.MaxValue)))
 
     // state: (t_view, t_click, t_purchase) micros, -1 = unset
     def fn(user: Long, rows: Iterator[(Long, String, Long)],
@@ -911,17 +725,13 @@ object StreamingJobs {
       else Iterator.empty
     }
 
-    val reached = stream
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fn)
-      .toDF("user_id", "stage_reached")
-    val name = s"funnel_${counter.incrementAndGet()}"
-    withScopedShufflePartitions(spark, 8) {
-      val q = reached.writeStream.outputMode("append").format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
+    val reached = drainStaged(spark, input, "st19") { stream =>
+      stream.select(col("user_id").as[Long], col("event_type").as[String], col("ts_us").as[Long])
+        .groupByKey(_._1)
+        .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fn)
+        .toDF("user_id", "stage_reached")
     }
-    val agg = spark.table(name).agg(
+    val agg = reached.agg(
       sum(when(col("stage_reached") >= 1, 1L).otherwise(0L)).as("u1"),
       sum(when(col("stage_reached") >= 2, 1L).otherwise(0L)).as("u2"),
       sum(when(col("stage_reached") >= 3, 1L).otherwise(0L)).as("u3"))
@@ -945,19 +755,10 @@ object StreamingJobs {
     * overwrite. Output card == a27's, so st20 reuses its FULL oracle. */
   def streamingAttribution(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val ev = graft.core.Tables(spark, sfDir).events
       .filter(col("event_type").isin("click", "purchase"))
       .select(col("user_id"), col("event_type"), col("event_id"),
         unix_micros(col("ts")).as("ts_us"))
-    val staged = s"/tmp/graft_st20_input_${counter.incrementAndGet()}"
-    ev.write.mode("overwrite").parquet(staged)
-
-    val schema = spark.read.parquet(staged).schema
-    val stream = spark.readStream.schema(schema).parquet(staged)
-      .select(col("user_id").as[Long], col("event_type").as[String],
-        col("event_id").as[Long], col("ts_us").as[Long])
-      .as[(Long, String, Long, Long)]
 
     // state: (click_id, click_ts_us), -1 = none yet
     // output: (user_id, purchase_id, purchase_ts_us, click_id?, click_ts_us?)
@@ -981,21 +782,29 @@ object StreamingJobs {
       out.iterator
     }
 
-    val attributed = stream
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fn)
-      .toDF("user_id", "purchase_id", "purchase_ts_us", "click_id", "click_ts_us")
-    val name = s"attribution_${counter.incrementAndGet()}"
-    withScopedShufflePartitions(spark, 8) {
-      val q = attributed.writeStream.outputMode("append").format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
+    drainStaged(spark, ev, "st20") { stream =>
+      stream.select(col("user_id").as[Long], col("event_type").as[String],
+          col("event_id").as[Long], col("ts_us").as[Long])
+        .groupByKey(_._1)
+        .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fn)
+        .toDF("user_id", "purchase_id", "purchase_ts_us", "click_id", "click_ts_us")
     }
-    spark.table(name)
       .select(col("user_id"), col("purchase_id"), col("purchase_ts_us"),
         col("click_id"), col("click_ts_us"),
         (col("purchase_ts_us") - col("click_ts_us")).as("latency_us"))
   }
+
+  // portable = true  -> md5 portableSignatures: the ORACLE pin (st22) —
+  //   DuckDB replays the signature bits, so the full recurrence is
+  //   hash-checked; ~46% of the leg's wall is this portability tax
+  //   (BASELINE.md, st22 attribution).
+  // portable = false -> seeded-xxhash64 minHashSignatures: the
+  //   PRODUCTION twin (st22b) — same pipeline, same banding/join plan,
+  //   engine-native hashes; rows-only on the board, pinned by st22 +
+  //   the Wave11 batch-replay equality spec (the d18/d18b precedent).
+  private def signaturesOf(df: DataFrame, portable: Boolean): DataFrame =
+    if (portable) Dedup.portableSignatures(df, "doc_id", "text", n = 3, k = 32)
+    else Dedup.minHashSignatures(df, "doc_id", "text", n = 3, k = 32)
 
   /** ST22: d18's incremental near-dup at INGEST time — the continuous
     * arm of the daily-ingest dedup story. The signature index IS the
@@ -1044,15 +853,7 @@ object StreamingJobs {
     *         ownership to the caller (no sweep — the caller knows its own
     *         lifecycle) and lets a test read the index listing
     *         DETERMINISTICALLY instead of guessing which /tmp dir was
-    *         this run's by mtime.
-    * @param phaseNanos optional wall-time attribution collector
-    *         (St22Profile): accumulates nanos per phase — "stage" (batch
-    *         staging + empty index init), "sigs" (per-batch signature
-    *         compute), "probe" (index probe join + match append), "append"
-    *         (delta write + file-move + cadence check), "drain" (the whole
-    *         AvailableNow drain, so drain − sigs − probe − append = the
-    *         micro-batch harness's own overhead). None (default) adds
-    *         nothing to the hot path. */
+    *         this run's by mtime. */
   /** One micro-batch of the incremental near-dup recurrence — the
     * [[streamingIncrementalNearDup]] foreachBatch body, factored out so
     * the crash-replay spec (Wave11Spec) can drive the exact production
@@ -1091,24 +892,8 @@ object StreamingJobs {
       batchId: Long,
       portable: Boolean,
       compactEveryNBatches: Int,
-      compactMaxFiles: Int,
-      phaseNanos: Option[scala.collection.concurrent.TrieMap[String, Long]] = None
+      compactMaxFiles: Int
   ): Unit = {
-    def timed[T](phase: String)(body: => T): T = phaseNanos match {
-      case None => body
-      case Some(acc) =>
-        val t0 = System.nanoTime()
-        try body
-        finally {
-          val dt = System.nanoTime() - t0
-          acc.updateWith(phase) { v => Some(v.getOrElse(0L) + dt) }: Unit
-        }
-    }
-    import graft.operators.Dedup
-    def signaturesOf(df: DataFrame): DataFrame =
-      if (portable) Dedup.portableSignatures(df, "doc_id", "text", n = 3, k = 32)
-      else Dedup.minHashSignatures(df, "doc_id", "text", n = 3, k = 32)
-
     // replay guard: drop whatever a crashed attempt of THIS batch wrote
     def cleanTagged(dir: String, prefix: String): Unit =
       Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty[java.io.File])
@@ -1118,9 +903,7 @@ object StreamingJobs {
     cleanTagged(matchDir, s"match_${batchId}_")
 
     if (compactEveryNBatches > 0 && batchId > 0 && batchId % compactEveryNBatches == 0) {
-      timed("compact") {
-        Dedup.compactSignatureIndex(spark, idxDir, maxFiles = compactMaxFiles): Unit
-      }
+      Dedup.compactSignatureIndex(spark, idxDir, maxFiles = compactMaxFiles): Unit
     }
 
     // stage a frame off-path, then file-move in under deterministic
@@ -1145,11 +928,8 @@ object StreamingJobs {
     // every downstream action (match write, admit write) reads the
     // cached blocks instead of re-running the md5-per-shingle
     // pipeline, and no extra parquet round-trip is paid
-    val sigs = timed("sigs") {
-      val s = signaturesOf(batch).persist()
-      s.count()
-      s
-    }
+    val sigs = signaturesOf(batch, portable).persist()
+    sigs.count(): Unit
     try {
       val (matches0, admitted) = Dedup.incrementalNearDupFromSigs(
         index, sigs, k = 32, bands = 8, threshold = 0.5, portable = portable)
@@ -1157,17 +937,13 @@ object StreamingJobs {
       // write below and admitted's anti-join both sit on top of the
       // band-join probe plan, and without the cache the admit write
       // re-runs the whole explode+join+verify pipeline a second time
-      // (measured ~1 s/batch-set at sf0.1, St22Profile). Populated
-      // by the match write, read by the admit write, dropped with
-      // the batch.
+      // (measured ~1 s/batch-set at sf0.1, BASELINE.md round 10).
+      // Populated by the match write, read by the admit write, dropped
+      // with the batch.
       val matches = matches0.persist()
       try {
-        timed("probe") {
-          stageAndMove(matches, s"$base/mdelta_$batchId", matchDir, s"match_${batchId}_")
-        }
-        timed("append") {
-          stageAndMove(admitted, s"$base/delta_$batchId", idxDir, s"delta_${batchId}_")
-        }
+        stageAndMove(matches, s"$base/mdelta_$batchId", matchDir, s"match_${batchId}_")
+        stageAndMove(admitted, s"$base/delta_$batchId", idxDir, s"delta_${batchId}_")
       } finally matches.unpersist()
     } finally sigs.unpersist()
   }
@@ -1179,31 +955,8 @@ object StreamingJobs {
       compactEveryNBatches: Int = 64,
       compactMaxFiles: Int = 16,
       stagingBase: Option[String] = None,
-      phaseNanos: Option[scala.collection.concurrent.TrieMap[String, Long]] = None,
       portable: Boolean = true
   ): DataFrame = {
-    // portable = true  -> md5 portableSignatures: the ORACLE pin (st22) —
-    //   DuckDB replays the signature bits, so the full recurrence is
-    //   hash-checked; ~46% of the leg's wall is this portability tax
-    //   (St22Profile attribution in BASELINE.md).
-    // portable = false -> seeded-xxhash64 minHashSignatures: the
-    //   PRODUCTION twin (st22b) — same pipeline, same banding/join plan,
-    //   engine-native hashes; rows-only on the board, pinned by st22 +
-    //   the Wave11 batch-replay equality spec (the d18/d18b precedent).
-    def timed[T](phase: String)(body: => T): T = phaseNanos match {
-      case None => body
-      case Some(acc) =>
-        val t0 = System.nanoTime()
-        try body
-        finally {
-          val dt = System.nanoTime() - t0
-          acc.updateWith(phase) { v => Some(v.getOrElse(0L) + dt) }: Unit
-        }
-    }
-    import graft.operators.Dedup
-    def signaturesOf(df: DataFrame): DataFrame =
-      if (portable) Dedup.portableSignatures(df, "doc_id", "text", n = 3, k = 32)
-      else Dedup.minHashSignatures(df, "doc_id", "text", n = 3, k = 32)
     val docs = graft.core.Tables(spark, sfDir).documents.select(col("doc_id"), col("text"))
     // pid in the path: the counter restarts with every JVM, so two
     // concurrent processes (parallel test + bench runs) would otherwise
@@ -1294,41 +1047,39 @@ object StreamingJobs {
     // the one-file-per-logical-batch harness seam without per-batch
     // filtered rescans
     val staged = s"$base/stage"
-    timed("stage") {
-      docs.withColumn("bt", pmod(col("doc_id"), lit(nBatches)))
-        .repartition(nBatches, col("bt"))
-        .write.partitionBy("bt").mode("overwrite").parquet(staged)
-      (0 until nBatches).foreach { i =>
-        // an empty residue class (fewer docs than batches, or an id gap)
-        // writes no bt=i directory — that logical batch simply never
-        // arrives, which is exactly the empty-batch semantics
-        val parts = Option(new java.io.File(s"$staged/bt=$i").listFiles())
-          .getOrElse(Array.empty[java.io.File])
-          .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
-        parts.headOption.foreach { part =>
-          val dst = new java.io.File(s"$inDir/batch_$i.parquet")
-          java.nio.file.Files.move(part.toPath, dst.toPath)
-          // pinned, strictly increasing mtimes: the file source processes
-          // oldest-first, making batch order deterministic
-          dst.setLastModified(1700000000000L + i * 60000L)
-        }
+    docs.withColumn("bt", pmod(col("doc_id"), lit(nBatches)))
+      .repartition(nBatches, col("bt"))
+      .write.partitionBy("bt").mode("overwrite").parquet(staged)
+    (0 until nBatches).foreach { i =>
+      // an empty residue class (fewer docs than batches, or an id gap)
+      // writes no bt=i directory — that logical batch simply never
+      // arrives, which is exactly the empty-batch semantics
+      val parts = Option(new java.io.File(s"$staged/bt=$i").listFiles())
+        .getOrElse(Array.empty[java.io.File])
+        .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
+      parts.headOption.foreach { part =>
+        val dst = new java.io.File(s"$inDir/batch_$i.parquet")
+        java.nio.file.Files.move(part.toPath, dst.toPath)
+        // pinned, strictly increasing mtimes: the file source processes
+        // oldest-first, making batch order deterministic
+        dst.setLastModified(1700000000000L + i * 60000L)
       }
-      // empty index with the PRE-BANDED signature schema (scheme-tagged
-      // bh_* columns alongside h0..h31), so batch 0 probes cleanly AND
-      // every probe unpivots stored band hashes instead of re-hashing
-      // the whole index per batch (Dedup.withBandHashCols — admitted
-      // deltas come back pre-banded, keeping the index uniform; the
-      // variant/k/bands ride the column names so a mismatched probe
-      // recomputes instead of silently missing)
-      Dedup.withBandHashCols(signaturesOf(docs.limit(0)), k = 32, bands = 8,
-          portable = portable)
-        .write.mode("overwrite").parquet(idxDir)
-      // empty matches frame with the output schema (no-match corpora return
-      // an empty-but-typed result instead of a missing dir)
-      spark.range(0).select(col("id").as("new_id"), col("id").as("idx_id"),
-        col("id").cast("double").as("est_jaccard"))
-        .write.mode("overwrite").parquet(matchDir)
     }
+    // empty index with the PRE-BANDED signature schema (scheme-tagged
+    // bh_* columns alongside h0..h31), so batch 0 probes cleanly AND
+    // every probe unpivots stored band hashes instead of re-hashing
+    // the whole index per batch (Dedup.withBandHashCols — admitted
+    // deltas come back pre-banded, keeping the index uniform; the
+    // variant/k/bands ride the column names so a mismatched probe
+    // recomputes instead of silently missing)
+    Dedup.withBandHashCols(signaturesOf(docs.limit(0), portable), k = 32, bands = 8,
+        portable = portable)
+      .write.mode("overwrite").parquet(idxDir)
+    // empty matches frame with the output schema (no-match corpora return
+    // an empty-but-typed result instead of a missing dir)
+    spark.range(0).select(col("id").as("new_id"), col("id").as("idx_id"),
+      col("id").cast("double").as("est_jaccard"))
+      .write.mode("overwrite").parquet(matchDir)
 
     val schema = docs.schema
     val stream = spark.readStream.schema(schema)
@@ -1341,13 +1092,11 @@ object StreamingJobs {
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           runIncrementalBatch(spark, base, idxDir, matchDir, batch, batchId,
             portable = portable, compactEveryNBatches = compactEveryNBatches,
-            compactMaxFiles = compactMaxFiles, phaseNanos = phaseNanos)
+            compactMaxFiles = compactMaxFiles)
         }
         .start()
-      timed("drain") {
-        try q.processAllAvailable()
-        finally q.stop()
-      }
+      try q.processAllAvailable()
+      finally q.stop()
     }
     // post-drain compaction point: catches whatever the in-flight cadence
     // left behind (the tail batches since the last cadence firing, or

@@ -46,4 +46,21 @@ class StreamingSpec extends SparkSpecBase {
         sum(col("value").cast("decimal(18,2)")).cast("double").as("value_sum"))
     assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
   }
+
+  test("every streaming entry stops its query, restores the partition scope and leaves no staged input") {
+    // staged-input dirs with their mtimes: a dir rewritten in place counts
+    // as left behind too
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def stagedInputs(): Set[(String, Long)] =
+      Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
+        .filter(_.getName.matches("graft_st\\d+_input_.*"))
+        .map(f => (f.getName, f.lastModified())).toSet
+    graft.queries.StreamingQueries.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      val before = stagedInputs()
+      fn(spark, Sf0001).count(): Unit
+      assert(spark.streams.active.isEmpty, s"$name left a query running")
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == "8", s"$name leaked its partition scope")
+      assert((stagedInputs() -- before).isEmpty, s"$name left staged input behind")
+    }
+  }
 }
