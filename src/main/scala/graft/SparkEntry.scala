@@ -1,5 +1,6 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -107,13 +108,11 @@ object SparkEntry {
   /** rows_only.json / ROWS_ONLY.json content — deterministic (sorted)
     * so the committed copy is byte-stable. */
   def rowsOnlyJson: String = {
-    def esc(s: String) = s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
+    val mapper = new ObjectMapper()
+    val o = mapper.createObjectNode()
+    rowsOnly.toSeq.sortBy(_._1).foreach { case (k, (why, pin)) =>
+      o.putObject(k).put("why_no_oracle", why).put("pinned_by", pin)
     }
-    rowsOnly.toSeq.sortBy(_._1).map { case (k, (why, pin)) =>
-      s"""  "${esc(k)}": {"why_no_oracle": "${esc(why)}", "pinned_by": "${esc(pin)}"}"""
-    }.mkString("{\n", ",\n", "\n}\n")
+    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(o) + "\n"
   }
 }

@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import com.fasterxml.jackson.databind.ObjectMapper
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -24,21 +25,13 @@ object Verify {
         failed += name -> s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val mapper = new ObjectMapper()
+    def writeJson(file: String, entries: Iterable[(String, String)]): Unit = {
+      val o = mapper.createObjectNode()
+      entries.foreach { case (k, v) => o.put(k, v) }
+      mapper.writeValue(new java.io.File(s"$outDir/$file"), o)
+    }
+    writeJson("oracle_sql.json", SparkEntry.oracleSql)
     // self-explaining correctness artifact: the rows-only dozen with their
     // pinning evidence rides along, so a reader of the driver's artifact
     // never needs the COVERAGE.md cross-reference (same content as the
@@ -47,9 +40,7 @@ object Verify {
     // Loud failures: a query that errors must not silently vanish from the
     // round's correctness artifact (round 4 lost 4 entries that way). The
     // driver ignores unknown files, so this is purely additive signal.
-    val failedJson = failed
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/_failed.json"), failedJson)
+    writeJson("_failed.json", failed)
     if (failed.nonEmpty)
       System.err.println(s"[verify] ${failed.size} FAILED: ${failed.map(_._1).mkString(", ")}")
     spark.stop()

@@ -33,9 +33,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     costs the next caller a recompute — results are unaffected.
   *
   * Every instance self-registers so Bench can emit one hits/recomputes
-  * block per memo (the graph_memo attribution pattern, round 12/13):
-  * the observable that separates "legs drifted because the memo
-  * thrashed" from host noise.
+  * block per memo (round 12/13): the observable that separates "legs
+  * drifted because the memo thrashed" from host noise.
   */
 final class FrameMemo private (val name: String, val maxEntries: Int) {
   private val cache =

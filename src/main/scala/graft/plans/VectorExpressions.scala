@@ -7,15 +7,16 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expressions for dense-vector math over `array<float|
-  * double>` columns. The higher-order-function formulation
-  * (zip_with/aggregate in graft.functions.VectorFunctions) is semantically
-  * identical but evaluates one lambda dispatch per element; these compile
-  * to one tight primitive loop per row inside whole-stage codegen —
-  * `doGenCode` reads elements straight out of the (Unsafe)ArrayData, so
-  * scoring a candidate pair allocates nothing. That is what makes
-  * ANN/near-dup scoring tractable at scale. Summation order is
-  * left-to-right in double precision — bit-equal to the HOF version, the
-  * interpreted path, and a sequential oracle.
+  * double>` columns. The same math written with higher-order functions
+  * (`aggregate` over `zip_with(a, b, x * y)` in double precision) is
+  * semantically identical but evaluates one lambda dispatch per element;
+  * these compile to one tight primitive loop per row inside whole-stage
+  * codegen — `doGenCode` reads elements straight out of the
+  * (Unsafe)ArrayData, so scoring a candidate pair allocates nothing. That
+  * is what makes ANN/near-dup scoring tractable at scale. Summation order
+  * is left-to-right in double precision — bit-equal to that
+  * higher-order-function fold, the interpreted path, and a sequential
+  * oracle.
   */
 object VectorExpressions {
 

@@ -49,11 +49,6 @@ object EventGraphQueries {
   /** Test hook: ids of the currently-memoized checkpoint RDDs. */
   private[graft] def tradePairsRddIds: Set[Int] = tradePairsMemo.rddIds
 
-  /** Memo traffic counters, JVM-lifetime (hits, recomputes) — Bench emits
-    * both so a per-round artifact shows whether the graph block recomputed
-    * pairs more than once per (session, dir); see [[graft.core.FrameMemo.stats]]. */
-  private[graft] def tradePairsMemoStats: (Long, Long) = tradePairsMemo.stats
-
   private def tradePairs(s: SparkSession, d: String): DataFrame =
     tradePairsMemo.get(s, d) {
       val t = Tables(s, d)

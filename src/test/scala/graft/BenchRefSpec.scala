@@ -1,7 +1,8 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Staleness gate for the committed per-class retry-ceiling reference
@@ -13,12 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class BenchRefSpec extends AnyFunSuite {
 
-  private lazy val refKeys: Set[String] = {
-    val txt = Files.readString(Paths.get("tools/bench_ref_sf0.01.json"))
-    // flat {"name": seconds} map (json.dump sort_keys) — keys carry no
-    // escapes, so a quoted-token scan is an exact parse of the key set
-    "\"([^\"]+)\"\\s*:".r.findAllMatchIn(txt).map(_.group(1)).toSet
-  }
+  /** Keys of the flat {"name": seconds} map. */
+  private lazy val refKeys: Set[String] =
+    new ObjectMapper().readTree(new java.io.File("tools/bench_ref_sf0.01.json"))
+      .properties.asScala.map(_.getKey).toSet
 
   test("bench_ref covers every timed board query (regen gen_bench_ref.sh)") {
     val timed = SparkEntry.queries.keySet -- Bench.TwinEntries
@@ -31,7 +30,8 @@ class BenchRefSpec extends AnyFunSuite {
   test("bench_ref carries no entries outside the timed board") {
     // diff against the TIMED set, not all queries: a ceiling for a twin
     // (never timed by default) is exactly the dead entry this gate exists
-    // to catch — e.g. a ref regenerated under SPARK_GRAFT_BENCH_TWINS=1
+    // to catch — e.g. a ref regenerated from a run whose
+    // SPARK_GRAFT_BENCH_QUERIES allowlist named a twin
     val timed = SparkEntry.queries.keySet -- Bench.TwinEntries
     val dead = refKeys -- timed
     assert(dead.isEmpty,

@@ -2,7 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.core.FrameMemo
 
 /** Staleness gate for the committed ×10 scale-leg artifact
   * (SCALE_r<N>.json, written by tools/scale_leg.sh) — the BenchRefSpec
@@ -35,50 +40,25 @@ class ScaleRefSpec extends AnyFunSuite {
     latestScale.get
   }
 
-  /** Keys of the artifact's TOP-LEVEL "queries" object only — a
-    * brace-depth scan (no JSON lib on the offline classpath), so a future
+  /** Keys of the artifact's TOP-LEVEL "queries" object only, so a
     * check_scale.py top-level key whose value is an object (the round-9
     * regex trap: it scanned the whole document minus a hand-maintained
-    * stop-set) can never masquerade as board coverage. The artifact's
-    * string values are plain identifiers/sentences (no embedded braces or
-    * escaped quotes), so a quote-toggling depth counter is exact here. */
+    * stop-set) can never masquerade as board coverage. */
   private def scaleKeys(file: String): Set[String] =
     scaleKeysOf(Files.readString(Paths.get(file)))
 
-  private[graft] def scaleKeysOf(txt: String): Set[String] = {
-    val keys = Set.newBuilder[String]
-    var i = 0
-    var depth = 0            // brace depth, quotes excluded
-    var inStr = false
-    var lastStr = ""         // most recently closed string literal
-    var strStart = -1
-    var queriesDepth = -1    // depth INSIDE the queries object, or -1
-    while (i < txt.length) {
-      val c = txt.charAt(i)
-      if (inStr) {
-        if (c == '\\') i += 1 // skip escaped char
-        else if (c == '"') { inStr = false; lastStr = txt.substring(strStart, i) }
-      } else c match {
-        case '"' => inStr = true; strStart = i + 1
-        case '{' =>
-          depth += 1
-          // `"queries" : {` at top level opens the scoped object
-          if (queriesDepth < 0 && depth == 2 && lastStr == "queries" &&
-              txt.substring(0, i).reverseIterator
-                .takeWhile(ch => ch == ':' || ch.isWhitespace).exists(_ == ':'))
-            queriesDepth = depth
-        case '}' =>
-          if (depth == queriesDepth) queriesDepth = -1
-          depth -= 1
-        case ':' =>
-          // a key is a string immediately preceding ':' one level inside
-          // the queries object
-          if (queriesDepth > 0 && depth == queriesDepth) keys += lastStr
-        case _ =>
-      }
-      i += 1
-    }
-    keys.result()
+  private[graft] def scaleKeysOf(txt: String): Set[String] =
+    new ObjectMapper().readTree(txt).path("queries").properties.asScala.map(_.getKey).toSet
+
+  /** Artifact keys outside the timed board. `build:<memo>` entries ARE
+    * timed-board members since round 16 (Bench charges FrameMemo recompute
+    * builds to the board), but only while <memo> is still a registered
+    * FrameMemo: a renamed or deleted memo's key is dead. Reading
+    * SparkEntry.queries initialises every query object, which registers
+    * every production memo. */
+  private def deadKeys(keys: Set[String]): Set[String] = {
+    val timed = SparkEntry.queries.keySet -- Bench.TwinEntries
+    keys -- timed -- FrameMemo.allStats.map { case (n, _, _) => s"build:$n" }
   }
 
   test("a SCALE_r<N>.json artifact exists (run tools/scale_leg.sh <round>)") {
@@ -118,15 +98,21 @@ class ScaleRefSpec extends AnyFunSuite {
 
   test("the latest scale artifact carries no entries outside the timed board") {
     val (round, file) = latestScaleOrFail
-    val timed = SparkEntry.queries.keySet -- Bench.TwinEntries
     // negative controls (toy_quadratic) live only in SCALE_selftest.json,
-    // never in the round artifact. `build:<memo>` entries ARE timed-board
-    // members since round 16 (Bench charges FrameMemo recompute builds to
-    // the board), so their ×10 ratios riding the artifact is the gate
-    // covering them, not staleness.
-    val dead = (scaleKeys(file) -- timed).filterNot(_.startsWith("build:"))
+    // never in the round artifact
+    val dead = deadKeys(scaleKeys(file))
     assert(dead.isEmpty,
       s"$file (round $round) names queries outside the timed board — rerun " +
         s"tools/scale_leg.sh; dead: ${dead.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("a build: entry whose memo is no longer registered reads as dead") {
+    val fabricated =
+      """{"queries": {
+        |  "a1_conditional_agg": {"base_sec": 0.5, "x10_sec": 1.0, "ratio": 2.0},
+        |  "build:trade_pairs": {"base_sec": 0.5, "x10_sec": 1.0, "ratio": 2.0},
+        |  "build:gone_memo": {"base_sec": 0.5, "x10_sec": 1.0, "ratio": 2.0}
+        |}}""".stripMargin
+    assert(deadKeys(scaleKeysOf(fabricated)) == Set("build:gone_memo"))
   }
 }

@@ -46,10 +46,8 @@ run_bench() { # sf_dir out_file [extra env pairs...]
 
 if [ "${1:?usage: scale_leg.sh <round> [--incremental]|--selftest}" = "--selftest" ]; then
   echo "[scale] selftest: planted quadratic must trip the gate"
-  run_bench "$SF01" /tmp/scale_self_base.json \
-    SPARK_GRAFT_BENCH_EXTRA=toy_quadratic SPARK_GRAFT_BENCH_QUERIES=toy_quadratic
-  run_bench "$SF1_DIR" /tmp/scale_self_x10.json \
-    SPARK_GRAFT_BENCH_EXTRA=toy_quadratic SPARK_GRAFT_BENCH_QUERIES=toy_quadratic
+  run_bench "$SF01" /tmp/scale_self_base.json SPARK_GRAFT_BENCH_QUERIES=toy_quadratic
+  run_bench "$SF1_DIR" /tmp/scale_self_x10.json SPARK_GRAFT_BENCH_QUERIES=toy_quadratic
   python3 tools/check_scale.py /tmp/scale_self_base.json /tmp/scale_self_x10.json \
     --json SCALE_selftest.json --expect-fail toy_quadratic
   exit $?
