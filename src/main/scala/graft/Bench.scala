@@ -307,13 +307,13 @@ object Bench {
       // query doesn't absorb one-time JIT/session costs.
       Seq("region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "documents", "embeddings").foreach { t =>
-        spark.read.parquet(s"$sfDir/$t.parquet").limit(1).count(): Unit
+        graft.core.Tables.parquet(spark, s"$sfDir/$t.parquet").limit(1).count(): Unit
       }
       locally {
         import org.apache.spark.sql.expressions.Window
         import org.apache.spark.sql.functions._
-        val o = spark.read.parquet(s"$sfDir/orders.parquet").limit(5000)
-        val c = spark.read.parquet(s"$sfDir/customer.parquet").limit(5000)
+        val o = graft.core.Tables.parquet(spark, s"$sfDir/orders.parquet").limit(5000)
+        val c = graft.core.Tables.parquet(spark, s"$sfDir/customer.parquet").limit(5000)
         o.join(c, col("o_custkey") === col("c_custkey"))
           .groupBy("o_orderstatus").agg(sum("o_totalprice"), countDistinct("o_custkey"))
           .count(): Unit

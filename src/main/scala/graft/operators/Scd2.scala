@@ -48,6 +48,12 @@ object Scd2 {
     * and re-open on EVERY merge (Scd2Spec pins this churn), and same-key
     * same-ts duplicates make the keep-latest pick arbitrary. Collapse
     * upstream first (the agricultural_risk_snapshot device).
+    *
+    * UPDATED-AT CONTRACT: `updatedAt` must be NON-NULL on the batch and on
+    * the open history rows — the merge reads each side's presence in the
+    * full-outer join from it. Enforced in-plan: the first violating row
+    * fails the action with the side and key in the message, instead of
+    * being hard-closed or kept open silently.
     */
   def merge(
       history: DataFrame,
@@ -63,19 +69,30 @@ object Scd2 {
         "pass the snapshot run time")
     val bizCols = history.columns.filterNot(Seq("valid_from", "valid_to", "is_current").contains)
 
+    // assert_true yields null on every clean row (the filter keeps them
+    // all) and raises on the first null updatedAt — no extra action, the
+    // check rides the merge plan (the IntervalJoin device)
+    def nonNullUpdatedAt(df: DataFrame, side: String): DataFrame =
+      df.filter(assert_true(col(updatedAt).isNotNull,
+        concat(lit(s"Scd2.merge: $side row for key ("),
+          concat_ws(", ", keys.map(k => col(k).cast("string")): _*),
+          lit(s") has a null `$updatedAt`; side presence is read from it — fill or drop it upstream")))
+        .isNull)
+
     // latest record per key within the batch (idempotent re-ingest, S15)
     val w = Window.partitionBy(keys.map(col): _*).orderBy(col(updatedAt).desc)
-    val latest = batch.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
+    val latest = nonNullUpdatedAt(batch, "batch")
+      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
 
     val closed = history.filter(!col("is_current"))
-    val open = history.filter(col("is_current"))
+    val open = nonNullUpdatedAt(history.filter(col("is_current")), "open history")
 
     val joined = open
       .as("o")
       .join(latest.as("n"), keys, "full_outer")
 
     // with a using-columns join the key columns are coalesced; detect side
-    // presence via the (never-null) updatedAt column of each side
+    // presence via the (asserted non-null) updatedAt column of each side
     val hasOld = col(s"o.$updatedAt").isNotNull
     val changed = col(s"n.$updatedAt").isNotNull && hasOld && col(s"n.$updatedAt") > col(s"o.$updatedAt")
 

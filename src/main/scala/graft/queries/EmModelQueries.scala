@@ -72,13 +72,13 @@ object EmModelQueries {
   }
 
   private def stgFema(s: SparkSession): DataFrame =
-    Staging.femaDisasters(s.read.parquet(s"$FixtureDir/fema.parquet"), RunTs)
+    Staging.femaDisasters(graft.core.Tables.parquet(s, s"$FixtureDir/fema.parquet"), RunTs)
   private def stgNoaa(s: SparkSession): DataFrame =
-    Staging.noaaWeather(s.read.parquet(s"$FixtureDir/noaa.parquet"), RunTs)
+    Staging.noaaWeather(graft.core.Tables.parquet(s, s"$FixtureDir/noaa.parquet"), RunTs)
   private def stgCoag(s: SparkSession): DataFrame =
-    Staging.coagmetData(s.read.parquet(s"$FixtureDir/coagmet.parquet"), RunTs)
+    Staging.coagmetData(graft.core.Tables.parquet(s, s"$FixtureDir/coagmet.parquet"), RunTs)
   private def stgUsda(s: SparkSession): DataFrame =
-    Staging.usdaData(s.read.parquet(s"$FixtureDir/usda.parquet"), RunTs)
+    Staging.usdaData(graft.core.Tables.parquet(s, s"$FixtureDir/usda.parquet"), RunTs)
 
   /** Session-scoped memos of the three shared mart frames — the round-14
     * answer to em_api_performance sitting closest to the ×10 scale

@@ -5,15 +5,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Bronze-layer readers (SURVEY §2.1 S8/S9 + ST3's lenient parse): typed
-  * parquet/CSV/JSON scans with explicit schemas (fail-fast) and a
+  * CSV/JSON scans with explicit schemas (fail-fast) and a
   * PERMISSIVE JSON path that quarantines corrupt records instead of
   * failing the batch (Flink's json.ignore-parse-errors parity,
   * scrapers/main.py:92).
   */
 object Readers {
-
-  def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 
   /** Typed CSV with header (seed-dim loading, dbt_project.yml:86-104). */
   def csv(spark: SparkSession, path: String, schema: StructType): DataFrame =

@@ -72,7 +72,7 @@ object StreamingJobs {
     val file = s"$table.parquet"
     val events = table == "events"
     if (events) spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$sfDir/$file").schema
+    val schema = graft.core.Tables.parquet(spark, s"$sfDir/$file").schema
     val stream = spark.readStream.schema(schema).option("pathGlobFilter", file).parquet(sfDir)
     if (events) graft.core.Tables.normalizeTs(stream) else stream
   }
@@ -190,7 +190,7 @@ object StreamingJobs {
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), window_), col("event_type"), binOf(col("value")).as("bin"))
       .agg(count(lit(1)).as("ca"))
-    val baseline = graft.core.Tables.normalizeTs(spark.read.parquet(s"$sfDir/events.parquet"))
+    val baseline = graft.core.Tables.normalizeTs(graft.core.Tables.parquet(spark, s"$sfDir/events.parquet"))
       .filter(col("event_id") % 2 === 0)
       .groupBy(col("event_type"), binOf(col("value")).as("bin"))
       .agg(count(lit(1)).as("cb"))
@@ -333,7 +333,7 @@ object StreamingJobs {
     * ingest stream is the 100 TB firehose and the bench set stays small. */
   def streamingDecontamination(spark: SparkSession, sfDir: String, threshold: Double = 0.4): DataFrame = {
     import graft.plans.VectorExpressions.{vector_dot, vector_normalize}
-    val bench = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val bench = graft.core.Tables.parquet(spark, s"$sfDir/embeddings.parquet")
       .filter(col("vec_id") % 23 === 0)
       .select(col("vec_id").as("bench_id"), vector_normalize(col("embedding")).as("bv"))
     val stream = fileStream(spark, sfDir, "embeddings")

@@ -45,19 +45,25 @@ object CheckpointBridge {
     * in single-wave tasks (what AQE's coalescing achieved per exchange,
     * achieved here once for every downstream stage), while a 100 TB
     * frame saturates the configured parallelism — no constant tuned to
-    * either scale. */
+    * either scale. When the storage-info lookup has no entry for the
+    * checkpoint (blocks dropped, or block-status reporting not caught up)
+    * the count falls back to the checkpoint's own partition count, under
+    * the same clamp: the layout the data already has, never a silent
+    * single partition. */
   def sizedPartitionsFor(checkpointed: org.apache.spark.sql.DataFrame): Int = {
     val conf = checkpointed.sparkSession.sessionState.conf
     val maxP = conf.numShufflePartitions
     val advisory = math.max(1L,
       conf.getConf(org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
-    val bytes = backingRdd(checkpointed) match {
+    val wanted = backingRdd(checkpointed) match {
       case Some(rdd) =>
-        checkpointed.sparkSession.sparkContext.getRDDStorageInfo
-          .find(_.id == rdd.id).map(i => i.memSize + i.diskSize).getOrElse(0L)
+        checkpointed.sparkSession.sparkContext.getRDDStorageInfo.find(_.id == rdd.id)
+          .fold(rdd.getNumPartitions.toLong) { i =>
+            (i.memSize + i.diskSize + advisory - 1) / advisory
+          }
       case None => 0L
     }
-    math.max(1, math.min(maxP.toLong, (bytes + advisory - 1) / advisory)).toInt
+    math.max(1, math.min(maxP.toLong, wanted)).toInt
   }
 
   /** Eager `localCheckpoint` that KEEPS a usable hash partitioning.

@@ -62,4 +62,16 @@ class PartitionedCheckpointSpec extends SparkSpecBase {
       localCheckpointHashPartitioned(base, 4, "nope")
     }
   }
+
+  test("sizedPartitionsFor falls back to the checkpoint's own partition count on a lookup miss") {
+    import org.apache.spark.sql.graftbridge.CheckpointBridge.{backingRdd, sizedPartitionsFor}
+    assert(spark.sessionState.conf.numShufflePartitions >= 8)
+    val cp = spark.range(0, 1000, 1, 8).toDF("x").localCheckpoint(true)
+    // a hit sizes by the persisted bytes: a few KB is one advisory partition
+    assert(sizedPartitionsFor(cp) === 1)
+    // with the blocks gone the storage-info lookup misses; the count is the
+    // layout the checkpoint has, not a silent single partition
+    backingRdd(cp).get.unpersist(blocking = true)
+    assert(sizedPartitionsFor(cp) === 8)
+  }
 }

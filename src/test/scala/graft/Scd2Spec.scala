@@ -145,6 +145,28 @@ class Scd2Spec extends SparkSpecBase {
       col("valid_to") === ts("2024-02-01 00:00:00")).count() == 1)
   }
 
+  test("merge fails loudly on a null updatedAt in the batch or the open history") {
+    // presence in the full-outer join is read from updatedAt; a null there
+    // used to hard-close (batch side) or slip past the hard-delete path
+    // (history side) silently
+    val nullTs = null.asInstanceOf[Timestamp]
+    val clean = Seq(("a", 1, ts("2024-01-01 00:00:00"))).toDF("id", "v", "updated_at")
+    def failure(h: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): String = {
+      val err = intercept[Exception] {
+        Scd2.merge(h, b, Seq("id"), "updated_at",
+          invalidateHardDeletes = true, deleteTs = Some(ts("2024-03-01 00:00:00"))).collect()
+      }
+      Option(err.getMessage).getOrElse("") +
+        Option(err.getCause).flatMap(c => Option(c.getMessage)).getOrElse("")
+    }
+    val nullBatch = Seq(("a", 2, nullTs)).toDF("id", "v", "updated_at")
+    val batchMsg = failure(Scd2.init(clean, "updated_at"), nullBatch)
+    assert(batchMsg.contains("batch row for key (a) has a null `updated_at`"), batchMsg)
+    val nullHistory = Scd2.init(Seq(("b", 1, nullTs)).toDF("id", "v", "updated_at"), "updated_at")
+    val historyMsg = failure(nullHistory, clean)
+    assert(historyMsg.contains("open history row for key (b) has a null `updated_at`"), historyMsg)
+  }
+
   test("mergeCheckCols treats null -> value and value -> null as changes (null-safe diff)") {
     val b1 = Seq(("k1", null.asInstanceOf[String]), ("k2", "x")).toDF("id", "v")
     val h1 = Scd2.initAt(b1, ts("2024-01-01 00:00:00"))
