@@ -1,10 +1,13 @@
 package graft
+import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{JsonNodeFactory, NullNode, ObjectNode}
 import org.apache.spark.sql.SparkSession
+
+import graft.core.{FrameMemo, QueryMetrics}
 object Bench {
   // NEGATIVE CONTROLS for the scale gate (tools/scale_leg.sh --selftest),
   // run only when SPARK_GRAFT_BENCH_QUERIES names them — never part of
@@ -43,8 +46,9 @@ object Bench {
     * signature math that exists only so DuckDB can replay the index —
     * st22b (xxhash64, the production path) holds the timed slot; st22
     * stays fully hash-graded in Verify/CORRECTNESS like the other twins.
-    * d17 joined in round 15: FuzzyProfile attributed its scale growth to
-    * the id-level pair OUTPUT itself (64 distinct p_names → identical
+    * d17 joined in round 15: the attribution in BASELINE.md ("Round 15:
+    * d17_fuzzy_join") put its scale growth on the id-level pair OUTPUT
+    * itself (64 distinct p_names → identical
     * names collide under any blocking key; matched pairs ×103 on a ×10
     * corpus) — an output-size floor no plan can beat. d17b (canonical
     * distinct-name match carrying multiplicities, linear) holds the
@@ -205,12 +209,14 @@ object Bench {
     * window whole, so the official artifact is self-contained: total +
     * count + the slowest legs, parseable. `results` holds (query, best
     * seconds or the -1 failure marker, retries) per timed query, `memos`
-    * is [[graft.core.FrameMemo.allStatsWithBuild]], `refTimes` the sf0.01
-    * reference costs behind the retry ceilings, and `steal` the run's
-    * (ticks, pct) hypervisor-steal delta. */
+    * is [[graft.core.FrameMemo.allStatsWithBuild]], `counters` the
+    * [[graft.core.QueryMetrics]] reading per timed query and per
+    * `build:<memo>`, `refTimes` the sf0.01 reference costs behind the
+    * retry ceilings, and `steal` the run's (ticks, pct) hypervisor-steal
+    * delta. */
   private[graft] def artifactLines(sfDir: String, results: Seq[(String, Double, Int)],
-      memos: Seq[(String, Long, Long, Double)], refTimes: Map[String, Double],
-      steal: Option[(Long, Double)]): (String, String) = {
+      memos: Seq[(String, Long, Long, Double)], counters: Map[String, ListMap[String, Long]],
+      refTimes: Map[String, Double], steal: Option[(Long, Double)]): (String, String) = {
     // Charge FrameMemo recompute builds to the timed board (round-16
     // verdict item 2): min-of-two passes report only WARM consumer times —
     // the first consumer's warmup pass builds each shared frame, so the
@@ -264,6 +270,15 @@ object Bench {
     val full = mapper.createObjectNode().put("metric", "total_full").put("value", total)
       .put("unit", "sec")
     full.set[JsonNode]("queries", secs(charged.map { case (k, v, _) => (k, v) }, 4))
+    // Spark counters of each board entry's reported pass and each charged
+    // build, full line only: the compact line must stay bounded
+    val perEntry = full.putObject("counters")
+    charged.foreach { case (k, _, _) =>
+      counters.get(k).foreach { c =>
+        val o = perEntry.putObject(k)
+        c.foreach { case (n, v) => o.put(n, v) }
+      }
+    }
     // per-class ceilings actually raised above the flat base ride the FULL
     // line only — the compact final line must stay inside the bounded
     // stdout tail
@@ -300,8 +315,13 @@ object Bench {
       mapper.readTree(new java.io.File(CeilingRefPath)).properties.asScala
         .collect { case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble }.toMap
     }.getOrElse(Map.empty)
+    // Spark counters per timed query (its reported pass) and per memo
+    // build (summed over the run, as build_sec is)
+    val counters = scala.collection.mutable.Map.empty[String, ListMap[String, Long]]
     val results = ordered.grouped(BlockSize).toSeq.flatMap { block =>
       val spark = graft.core.SparkSessionFactory.local("graft-bench")
+      val sc = spark.sparkContext
+      val metrics = QueryMetrics.attach(sc)
       // Warm the fresh JVM session: parquet footers + one pass through the
       // shuffle, join, window and codegen machinery so the first timed
       // query doesn't absorb one-time JIT/session costs.
@@ -328,28 +348,35 @@ object Bench {
         try { force(fn(spark, sfDir)): Unit } catch { case _: Throwable => () }
       }
       val timed = block.map { case (name, fn) =>
-        def onePass(): (Double, Boolean) = {
+        def onePass(): (Double, Boolean, ListMap[String, Long]) = {
           val t0 = System.nanoTime()
-          val ok = try { force(fn(spark, sfDir)); true } catch { case _: Throwable => false }
-          ((System.nanoTime() - t0) / 1e9, ok)
+          val ok = try { QueryMetrics.scoped(sc, name)(force(fn(spark, sfDir))); true }
+            catch { case _: Throwable => false }
+          val t = (System.nanoTime() - t0) / 1e9
+          (t, ok, metrics.take(name))
         }
         // min over SUCCESSFUL passes only: a pass that throws typically
         // fails fast, and letting its short elapsed time win the min would
         // mask a regression behind a fast failure. All-passes-failed
-        // records the -1 failure marker (never a time).
+        // records the -1 failure marker (never a time) and the counters
+        // of the last failed pass.
         val first = (1 to Passes).map(_ => onePass())
-        var best = first.collect { case (t, true) => t } match {
-          case ok if ok.nonEmpty => ok.min
-          case _ => -1.0
-        }
+        var (best, _, bestCounters) = first.filter(_._2).minByOption(_._1)
+          .getOrElse((-1.0, false, first.last._3))
         var retries = 0
         val ceiling = ceilingFor(refTimes, name)
         while (best > ceiling && retries < MaxRetries) {
           retries += 1
-          val (t, ok) = onePass()
-          if (ok && t < best) best = t
+          val (t, ok, c) = onePass()
+          if (ok && t < best) { best = t; bestCounters = c }
         }
+        counters(name) = bestCounters
         (name, best, retries)
+      }
+      FrameMemo.allStats.foreach { case (n, _, _) =>
+        val k = s"build:$n"
+        val c = metrics.take(k)
+        counters(k) = counters.get(k).fold(c)(QueryMetrics.merge(_, c))
       }
       spark.stop()
       SparkSession.clearActiveSession()
@@ -359,7 +386,7 @@ object Bench {
     val steal = for ((s0, t0) <- stealStart; (s1, t1) <- stealSample() if t1 > t0)
       yield (s1 - s0, (s1 - s0).toDouble / (t1 - t0) * 100.0)
     val (full, compact) =
-      artifactLines(sfDir, results, graft.core.FrameMemo.allStatsWithBuild, refTimes, steal)
+      artifactLines(sfDir, results, FrameMemo.allStatsWithBuild, counters.toMap, refTimes, steal)
     println(full)
     println(compact)
   }

@@ -91,7 +91,9 @@ final class FrameMemo private (val name: String, val maxEntries: Int) {
       // are released eagerly and the winner's entry is returned.
       recomputeCount.incrementAndGet(): Unit
       val t0 = System.nanoTime()
-      val cp = build.localCheckpoint(true)
+      // the build's jobs count under its own metrics scope, also when it
+      // runs inside a consumer's scope or another memo's build
+      val cp = QueryMetrics.scoped(s.sparkContext, s"build:$name")(build.localCheckpoint(true))
       buildNanos.add(System.nanoTime() - t0)
       val entry = (cp, checkpointedRdd(cp))
       val prev = cache.putIfAbsent(k, entry)

@@ -134,8 +134,9 @@ object Marts {
     // interval side): alerts exploded over covered days, observations
     // equi-joined on the day key; CO bounding-box gate in the join condition.
     //
-    // Round-14 physical rewrite (EmProfile attribution: this join was ~79%
-    // of em_api_performance's ×10 scale leg): the day key has only ~90
+    // Round-14 physical rewrite (BASELINE.md "Round 14: em_api_performance"
+    // attribution: this join was ~79% of em_api_performance's ×10 scale
+    // leg): the day key has only ~90
     // distinct values and the box gate depends ONLY on the station, so the
     // raw join fanned every in-box station-day out over every CO alert
     // alive that day (~stations × alerts-per-day rows) before a window

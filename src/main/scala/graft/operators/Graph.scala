@@ -475,9 +475,9 @@ object Graph {
     backingRdd(e).foreach(_.unpersist(false))
     val nV = math.max(nodes.count(), 1L)
 
-    // SPARSE half-round (round 15 — GraphProfile attributed the old
-    // per-iteration 1.08 s, 1.7× pageRank's on half the edges, to the
-    // dense normalize: a node-spine left join + TWO checkpoints + a
+    // SPARSE half-round (round 15 — the attribution in BASELINE.md "Round
+    // 15: graph family" put the old per-iteration 1.08 s, 1.7× pageRank's
+    // on half the edges, on the dense normalize: a node-spine left join + TWO checkpoints + a
     // separate 1-row agg job per half-round). A node absent from the
     // aggregated raw frame has mass exactly 0, and 0·scale div norm = 0,
     // so the zero rows the spine used to add are value-free: carry only

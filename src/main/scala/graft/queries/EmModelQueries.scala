@@ -82,7 +82,8 @@ object EmModelQueries {
 
   /** Session-scoped memos of the three shared mart frames — the round-14
     * answer to em_api_performance sitting closest to the ×10 scale
-    * ceiling (EmProfile attribution: its wall was ~79% weatherImpacts +
+    * ceiling (BASELINE.md "Round 14: em_api_performance" attribution: its
+    * wall was ~79% weatherImpacts +
     * ~27% disasterAnalytics recomputed from staging; em_weather_impacts /
     * em_analytics / the public-layer entries recomputed the same DAG
     * prefixes again). In the reference these marts are MATERIALIZED dbt

@@ -383,7 +383,8 @@ object EventGraphQueries {
       // levenshtein <= 3 evaluated post-join (banded-Ukkonen codegen).
       // maxBlock=1000 is the degenerate-block skew guard, mirrored in
       // the oracle. UNTIMED TWIN since round 15 (Bench.TwinEntries;
-      // still fully hash-graded here): FuzzyProfile attribution showed
+      // still fully hash-graded here): the attribution in BASELINE.md
+      // ("Round 15: d17_fuzzy_join") showed
       // the id-level pair OUTPUT is Θ(n²) by construction on this
       // corpus — part has only 64 distinct p_names, so identical names
       // collide under ANY blocking key (matched pairs ×103 on a ×10

@@ -30,8 +30,9 @@ object RetrievalQueries {
 
   /** Session-scoped memo of the per-(query, candidate-doc) BM25 score
     * frame for the board's fixed 8-doc query set — the k-free half both
-    * s8 (top-10) and s9's lexical arm (top-20) rank. RetrievalProfile's
-    * round-14 attribution: ~90% of each base was the postings build +
+    * s8 (top-10) and s9's lexical arm (top-20) rank. The round-14
+    * attribution (BASELINE.md "Round 14: s8/s9 retrieval"): ~90% of each
+    * base was the postings build +
     * score reduce (two corpus tokenize scans + the one exchange), and s9
     * re-paid all of it. One build per (session, dir) is also the honest
     * 100 TB posture: a postings index is a materialized table probed per

@@ -100,7 +100,8 @@ object StreamingQueries {
       // st22's PRODUCTION twin (the d18/d18b precedent): identical
       // pipeline and plans, seeded-xxhash64 signatures instead of the
       // md5 portability tax st22 pays so DuckDB can replay its bits —
-      // St22Profile attributes ~46% of st22's wall to that tax.
+      // BASELINE.md "st22 wall-time attribution" puts ~46% of st22's
+      // wall on that tax.
       // Rows-only by design; pinned by st22 + the Wave11 equality spec
       // (stream == batch 3-stage xxhash64 replay).
       StreamingJobs.streamingIncrementalNearDup(s, d, portable = false))

@@ -242,7 +242,7 @@ object TextQueries {
       // max scan per doc, O(bytes)) replaces the round-12 explode → wide
       // (doc_id, n, gram) exchange → two keyed reductions → join-back
       // skeleton, whose shuffle of ~2 rows per corpus word was the whole
-      // ×10 cost (T18Profile attribution table in BASELINE.md). Tie-break
+      // ×10 cost (BASELINE.md "Round 13: t18 repetition filter"). Tie-break
       // = max count then max gram, identical on both engines (struct-max
       // semantics inside the expression / ORDER BY cnt DESC, g DESC).
       // The PAIR form tokenizes once for both widths (the boundary scan

@@ -840,7 +840,8 @@ object StreamingJobs {
     *         index when it is rewritten — the same
     *         never-rewrite-a-read-path rule the delta file-move exists
     *         for. 0 disables (the post-drain pass still runs). Default 64
-    *         per the IndexCompactionMicro curve: probe cost is flat to
+    *         per the index-fragmentation table in BASELINE.md (round
+    *         12, after the st10 attribution): probe cost is flat to
     *         ~10² fragments and ×2.1 by ~10³, so compacting every 64
     *         admitted deltas keeps the index an order of magnitude below
     *         the measured pain point for the cost of one bounded rewrite

@@ -15,6 +15,18 @@ object ColumnBridge {
   def toExpr(c: Column): Expression = ExpressionUtils.expression(c)
 }
 
+/** SparkContext's listener bus is `private[spark]`: `drain` waits until
+  * every event posted so far has reached every listener (a read after it
+  * sees the events of the jobs that already returned, where a sleep would
+  * race the bus), and `post` puts an application event on the bus. */
+object ListenerBusBridge {
+  import org.apache.spark.SparkContext
+  import org.apache.spark.scheduler.SparkListenerEvent
+
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+  def post(sc: SparkContext, e: SparkListenerEvent): Unit = sc.listenerBus.post(e)
+}
+
 /** Handle to the persisted RDD backing a `localCheckpoint`ed Dataset, so
   * iterative operators (graft.operators.Graph) can release intermediate
   * checkpoints deterministically instead of waiting for the
@@ -49,7 +61,8 @@ object CheckpointBridge {
     * checkpoint (blocks dropped, or block-status reporting not caught up)
     * the count falls back to the checkpoint's own partition count, under
     * the same clamp: the layout the data already has, never a silent
-    * single partition. */
+    * single partition. The miss adds 1 to the `sizing_misses` counter of
+    * the calling thread's [[graft.core.QueryMetrics]] scope. */
   def sizedPartitionsFor(checkpointed: org.apache.spark.sql.DataFrame): Int = {
     val conf = checkpointed.sparkSession.sessionState.conf
     val maxP = conf.numShufflePartitions
@@ -57,10 +70,13 @@ object CheckpointBridge {
       conf.getConf(org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
     val wanted = backingRdd(checkpointed) match {
       case Some(rdd) =>
-        checkpointed.sparkSession.sparkContext.getRDDStorageInfo.find(_.id == rdd.id)
-          .fold(rdd.getNumPartitions.toLong) { i =>
-            (i.memSize + i.diskSize + advisory - 1) / advisory
-          }
+        val sc = checkpointed.sparkSession.sparkContext
+        sc.getRDDStorageInfo.find(_.id == rdd.id) match {
+          case Some(i) => (i.memSize + i.diskSize + advisory - 1) / advisory
+          case None =>
+            graft.core.QueryMetrics.count(sc, "sizing_misses")
+            rdd.getNumPartitions.toLong
+        }
       case None => 0L
     }
     math.max(1, math.min(maxP.toLong, wanted)).toInt

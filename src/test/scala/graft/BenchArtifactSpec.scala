@@ -1,5 +1,6 @@
 package graft
 
+import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
@@ -17,8 +18,12 @@ class BenchArtifactSpec extends AnyFunSuite {
   // memos only the recomputed one is charged as build:<memo>
   private val results =
     Seq((oddName, 0.12345, 1), ("failed_q", -1.0, 0)) ++ (1 to 12).map(i => (f"q$i%02d", i.toDouble, 0))
+  private def reading(jobs: Long) = ListMap("jobs" -> jobs, "tasks" -> 3 * jobs, "task_ends" -> 3 * jobs)
+  // counters for every entry and both memos; the idle memo's are not charged
+  private val counters = (results.map(_._1) ++ Seq("build:spec_built", "build:spec_idle"))
+    .zipWithIndex.map { case (k, i) => k -> reading(i.toLong) }.toMap
   private val (fullLine, compactLine) = Bench.artifactLines(oddSf, results,
-    memos = Seq(("spec_built", 2L, 1L, 20.5), ("spec_idle", 4L, 0L, 0.0)),
+    memos = Seq(("spec_built", 2L, 1L, 20.5), ("spec_idle", 4L, 0L, 0.0)), counters = counters,
     refTimes = Map(oddName -> 1.0), steal = Some((7L, 1.234)))
   private val full = mapper.readTree(fullLine)
   private val compact = mapper.readTree(compactLine)
@@ -35,13 +40,22 @@ class BenchArtifactSpec extends AnyFunSuite {
     val env = Set("sf", "commit", "cores", "load_avg_1m", "cold", "recycle_every", "passes",
       "retry_ceiling_sec", "ceiling_ref", "frame_memo", "steal", "closing_board", "retries",
       "n_failed", "twins_excluded", "metric", "value", "unit")
-    assert(keys(full) == env ++ Set("queries", "ceilings_raised"))
+    assert(keys(full) == env ++ Set("queries", "ceilings_raised", "counters"))
     assert(keys(compact) == env ++ Set("n_queries", "slowest"))
     assert(keys(full.get("frame_memo")) == Set("spec_built", "spec_idle"))
     // re-emitted from the committed tools/closing_board.json
     assert(keys(compact.get("closing_board")) == Set("round", "value_sec", "n_queries",
       "per_query_sec", "load_avg_1m", "steal_pct", "n_retried", "commit"))
     assert(full.get("n_failed").asInt == 1 && compact.get("n_queries").asInt == results.size)
+  }
+
+  test("the full line carries the counters of every timed entry and every charged build") {
+    assert(keys(full.get("counters")) == keys(full.get("queries")))
+    assert(keys(full.get("counters")).contains("build:spec_built"))
+    for ((k, c) <- counters if k != "build:spec_idle") {
+      val o = full.get("counters").get(k)
+      assert(o.properties.asScala.toSeq.map(e => e.getKey -> e.getValue.asLong) == c.toSeq, k)
+    }
   }
 
   test("numbers keep their decimal places; the -1 marker counts as zero in the total") {

@@ -65,13 +65,22 @@ class PartitionedCheckpointSpec extends SparkSpecBase {
 
   test("sizedPartitionsFor falls back to the checkpoint's own partition count on a lookup miss") {
     import org.apache.spark.sql.graftbridge.CheckpointBridge.{backingRdd, sizedPartitionsFor}
+    import graft.core.QueryMetrics
     assert(spark.sessionState.conf.numShufflePartitions >= 8)
-    val cp = spark.range(0, 1000, 1, 8).toDF("x").localCheckpoint(true)
-    // a hit sizes by the persisted bytes: a few KB is one advisory partition
-    assert(sizedPartitionsFor(cp) === 1)
-    // with the blocks gone the storage-info lookup misses; the count is the
-    // layout the checkpoint has, not a silent single partition
-    backingRdd(cp).get.unpersist(blocking = true)
-    assert(sizedPartitionsFor(cp) === 8)
+    val sc = spark.sparkContext
+    val scope = s"sizing-${java.util.UUID.randomUUID()}"
+    val metrics = QueryMetrics.attach(sc)
+    try {
+      val cp = spark.range(0, 1000, 1, 8).toDF("x").localCheckpoint(true)
+      // a hit sizes by the persisted bytes: a few KB is one advisory partition
+      assert(QueryMetrics.scoped(sc, scope)(sizedPartitionsFor(cp)) === 1)
+      assert(metrics.take(scope)("sizing_misses") === 0)
+      // with the blocks gone the storage-info lookup misses; the count is the
+      // layout the checkpoint has, not a silent single partition, and the
+      // miss shows in the scope's counters
+      backingRdd(cp).get.unpersist(blocking = true)
+      assert(QueryMetrics.scoped(sc, scope)(sizedPartitionsFor(cp)) === 8)
+      assert(metrics.take(scope)("sizing_misses") === 1)
+    } finally metrics.detach()
   }
 }

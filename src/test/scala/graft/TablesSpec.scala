@@ -2,12 +2,10 @@ package graft
 
 import java.nio.file.{Files, Path => JPath}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ListenerBusBridge
 import org.apache.spark.sql.types.{BinaryType, DateType, StringType, TimestampType}
-import graft.core.Tables
+import graft.core.{QueryMetrics, Tables}
 
 /** Tables.normalizeTs: all three on-disk ts forms → one logical schema.
   * The engine session reads parquet with NTZ inference OFF, but sessions
@@ -26,26 +24,16 @@ class TablesSpec extends SparkSpecBase {
     finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
-  /** Spark jobs started on this thread while `body` runs: the listener
-    * counts only jobs in a job group of its own, and the bus is drained
-    * before the count is read. */
-  private def jobsDuring(body: => Unit): Int = {
+  /** Spark jobs started on this thread while `body` runs, counted in a
+    * metrics scope of its own. */
+  private def jobsDuring(body: => Unit): Long = {
     val sc = spark.sparkContext
-    val group = s"tables-spec-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet(): Unit
-    }
-    ListenerBusBridge.drain(sc)
-    sc.addSparkListener(listener)
+    val scope = s"tables-spec-${java.util.UUID.randomUUID()}"
+    val metrics = QueryMetrics.attach(sc)
     try {
-      sc.setJobGroup(group, "Tables.parquet memo")
-      try body finally sc.clearJobGroup()
-      ListenerBusBridge.drain(sc)
-      jobs.get()
-    } finally sc.removeSparkListener(listener)
+      QueryMetrics.scoped(sc, scope)(body)
+      metrics.take(scope)("jobs")
+    } finally metrics.detach()
   }
 
   private def assertSameRows(a: DataFrame, b: DataFrame): Unit =
