@@ -10,14 +10,10 @@ import org.apache.spark.sql.SparkSession
 import graft.core.{FrameMemo, QueryMetrics}
 object Bench {
   // NEGATIVE CONTROLS for the scale gate (tools/scale_leg.sh --selftest),
-  // run only when SPARK_GRAFT_BENCH_QUERIES names them — never part of
-  // SparkEntry.queries, never verified, never in the official board total.
-  // toy_quadratic is the shape every operator on the board exists to
-  // avoid: an uncapped within-group self-join whose pair product grows as
-  // the SQUARE of the corpus, so the x10 documents fixture must blow past
-  // the gate's ratio ceiling — proving the gate catches a planted
-  // regression (the d4 x76 / j11 x16.9 class) rather than vacuously
-  // passing.
+  // run only when SPARK_GRAFT_BENCH_QUERIES names them; never on the
+  // board. toy_quadratic is an uncapped within-group self-join whose pair
+  // count grows as the SQUARE of the corpus, so the x10 fixture must
+  // blow past the gate's ratio ceiling.
   private val extraQueries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
     Map(
       "toy_quadratic" -> { (s, dir) =>
@@ -39,35 +35,14 @@ object Bench {
   private def force(df: org.apache.spark.sql.DataFrame): Long =
     df.queryExecution.toRdd.count()
 
-  /** Portable-oracle twins excluded from the timed pass by default (see
-    * the comment at the use site). Exposed so BenchRefSpec can assert the
-    * committed retry-ceiling reference covers exactly the timed board.
-    * st22 joined in round 14 (verdict item 2): ~3.5 s of its wall is md5
-    * signature math that exists only so DuckDB can replay the index —
-    * st22b (xxhash64, the production path) holds the timed slot; st22
-    * stays fully hash-graded in Verify/CORRECTNESS like the other twins.
-    * d17 joined in round 15: the attribution in BASELINE.md ("Round 15:
-    * d17_fuzzy_join") put its scale growth on the id-level pair OUTPUT
-    * itself (64 distinct p_names → identical
-    * names collide under any blocking key; matched pairs ×103 on a ×10
-    * corpus) — an output-size floor no plan can beat. d17b (canonical
-    * distinct-name match carrying multiplicities, linear) holds the
-    * timed slot.
-    * d18 joined in round 15 (same argument as st22): its 2.95 s sf0.1
-    * wall vs d18b's 1.32 s is the md5-hex signature math (32 digests per
-    * shingle, lexicographic mins) that exists only so DuckDB can replay
-    * the persisted index; d18b (xxhash64 signatures, the production
-    * path, Wave8Spec-pinned == the cross-batch slice) holds the timed
-    * slot and d18 stays fully hash-graded in Verify/CORRECTNESS.
-    * d3b joined in round 16 (verdict item 7 — the same argument as
-    * d2b/t5b/d18): its md5-derived 60-bit SimHash exists only so DuckDB
-    * can replay the votes→bits→blocks pipeline; d3 (the production
-    * xxhash64 SimHash) holds the timed slot, and d3b stays fully
-    * hash-graded in Verify/CORRECTNESS. */
-  val TwinEntries: Set[String] =
-    Set("t5b_rolling_fingerprint_portable", "d2b_minhash_portable", "d13_corpus_overlap",
-      "st22_stream_incremental_neardup", "d17_fuzzy_join", "d18_incremental_neardup",
-      "d3b_simhash_portable")
+  /** Board entries kept off the default timed pass, each for the reason
+    * its [[QuerySpec.untimedBecause]] gives; they run only when the
+    * allowlist names them and stay fully graded in Verify. */
+  val TwinEntries: Set[String] = SparkEntry.board.filter(_.untimedBecause.nonEmpty).map(_.name).toSet
+
+  /** The default timed pass: every other board entry. */
+  private[graft] val timedBoard: Seq[String] =
+    SparkEntry.board.filter(_.untimedBecause.isEmpty).map(_.name)
 
   // Recycle the SparkSession every BlockSize queries: one long-lived session
   // running 150+ queries x 2 passes outgrows the JVM code cache, and the
@@ -201,6 +176,31 @@ object Bench {
     }.getOrElse(NullNode.instance)
   }
 
+  /** The entries an allowlist names, failing on any unknown name;
+    * `build:<memo>` stands for every board entry that reads the memo, so
+    * the build is charged again. */
+  private[graft] def selected(csv: String): Seq[String] = {
+    val readers = SparkEntry.board.flatMap(q => q.memos.map(m => s"build:$m" -> q.name))
+      .groupMap(_._1)(_._2)
+    SparkEntry.allowlist(csv, SparkEntry.queries.keySet ++ extraQueries.keySet ++ readers.keySet)
+      .flatMap(n => readers.getOrElse(n, Seq(n))).distinct
+  }
+
+  /** Session blocks of at most `size` entries, memo readers placed first,
+    * so all readers of a memo share the block whose warmup pass builds it:
+    * one build per memo per run, and a retried pass hits the live memo.
+    * Within a block the readers run last, so a build follows the block's
+    * other warmups instead of a cold JVM. Fails if one memo's readers
+    * would span two blocks. */
+  private[graft] def blocks(names: Seq[String], memos: String => Set[String],
+      size: Int = BlockSize): Seq[Seq[String]] = {
+    val placed = names.sortBy(n => (memos(n).isEmpty, n)).grouped(size).toSeq
+    val split = placed.flatMap(_.flatMap(memos).distinct).groupBy(identity)
+      .collect { case (m, in) if in.size > 1 => m }
+    require(split.isEmpty, s"readers of ${split.toSeq.sorted.mkString(", ")} would span two blocks")
+    placed.map(_.sortBy(n => (memos(n).nonEmpty, n)))
+  }
+
   /** The two stdout lines of a run: the full per-query record first (for
     * the build log / BASELINE.md), then a compact summary as the LAST
     * line. The official artifact keeps a bounded tail of stdout, and the
@@ -217,16 +217,12 @@ object Bench {
   private[graft] def artifactLines(sfDir: String, results: Seq[(String, Double, Int)],
       memos: Seq[(String, Long, Long, Double)], counters: Map[String, ListMap[String, Long]],
       refTimes: Map[String, Double], steal: Option[(Long, Double)]): (String, String) = {
-    // Charge FrameMemo recompute builds to the timed board (round-16
-    // verdict item 2): min-of-two passes report only WARM consumer times —
-    // the first consumer's warmup pass builds each shared frame, so the
-    // build cost appeared in no reported number. Every memo that recomputed
-    // this run rides the board as a `build:<memo>` entry whose value is
-    // the ACCUMULATED wall seconds of its recompute builds (eager
-    // localCheckpoint included), measured inside FrameMemo — so the charge
-    // reconciles with the recompute counters by construction, the oracle
-    // surface is untouched, and the per-query entries keep their round-15
-    // meaning (warm consumer time) for cross-round comparison.
+    // Charge memo builds to the timed board: min-of-two passes report only
+    // WARM consumer times, and the block's warmup pass builds each memo
+    // once. Every memo that recomputed rides the board as `build:<memo>`,
+    // valued at the wall seconds of its builds (eager localCheckpoint
+    // included) as FrameMemo measured them, so the charge reconciles with
+    // the recompute counters by construction.
     val charged = results ++ memos.collect { case (n, _, r, b) if r > 0 => (s"build:$n", b, 0) }
     val total = charged.map { case (_, v, _) => math.max(v, 0.0) }.sum
     def secs(entries: Seq[(String, Double)], places: Int): ObjectNode = {
@@ -299,16 +295,9 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // optional comma-separated allowlist — lets scale/skew experiments time
     // a query subset on fixture dirs that only carry the tables they need
-    val only = sys.env.get("SPARK_GRAFT_BENCH_QUERIES").map(_.split(",").map(_.trim).toSet)
-    // Portable-oracle TWINS are correctness artifacts, not performance
-    // paths: md5-based DuckDB-expressible stand-ins whose production
-    // counterparts (xxhash64 / native exprs) run 10x+ faster and are timed
-    // on the board already. They and the negative controls run only when
-    // the allowlist names them; twins stay fully graded in
-    // Verify/CORRECTNESS regardless.
-    val ordered = (SparkEntry.queries ++ extraQueries).toSeq.sortBy(_._1).filter { case (name, _) =>
-      only.fold(!TwinEntries.contains(name) && !extraQueries.contains(name))(_.contains(name))
-    }
+    val names = sys.env.get("SPARK_GRAFT_BENCH_QUERIES").fold(timedBoard)(selected)
+    val memos = SparkEntry.board.map(q => q.name -> q.memos).toMap.withDefaultValue(Set.empty[String])
+    val runs = SparkEntry.queries ++ extraQueries
     // flat {"name": sec} map; a missing or malformed ref falls back to the
     // flat base ceiling
     val refTimes: Map[String, Double] = Try {
@@ -318,7 +307,8 @@ object Bench {
     // Spark counters per timed query (its reported pass) and per memo
     // build (summed over the run, as build_sec is)
     val counters = scala.collection.mutable.Map.empty[String, ListMap[String, Long]]
-    val results = ordered.grouped(BlockSize).toSeq.flatMap { block =>
+    val results = blocks(names, memos).flatMap { blockNames =>
+      val block = blockNames.map(n => n -> runs(n))
       val spark = graft.core.SparkSessionFactory.local("graft-bench")
       val sc = spark.sparkContext
       val metrics = QueryMetrics.attach(sc)

@@ -7,9 +7,9 @@ import com.fasterxml.jackson.databind.ObjectMapper
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated query names (builder-side quick
-    // iteration — the driver always runs the full board)
-    val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
+    // optional 3rd arg: comma-separated query names for a targeted
+    // re-check; an unknown name fails before the session starts
+    val only = args.lift(2).map(SparkEntry.allowlist(_, SparkEntry.queries.keySet).toSet)
     // int64-micros parquet timestamps (factory default) matter here: the
     // driver's DuckDB/pyarrow read must see exactly what DuckDB's SQL produces
     val spark = graft.core.SparkSessionFactory.local("graft-verify", defaultCpus = 4)
@@ -32,10 +32,8 @@ object Verify {
       mapper.writeValue(new java.io.File(s"$outDir/$file"), o)
     }
     writeJson("oracle_sql.json", SparkEntry.oracleSql)
-    // self-explaining correctness artifact: the rows-only dozen with their
-    // pinning evidence rides along, so a reader of the driver's artifact
-    // never needs the COVERAGE.md cross-reference (same content as the
-    // committed ROWS_ONLY.json, spec-enforced in sync)
+    // self-explaining correctness artifact: the rows-only entries with
+    // their pinning evidence, as in the committed ROWS_ONLY.json
     Files.writeString(Paths.get(s"$outDir/rows_only.json"), SparkEntry.rowsOnlyJson)
     // Loud failures: a query that errors must not silently vanish from the
     // round's correctness artifact (round 4 lost 4 entries that way). The

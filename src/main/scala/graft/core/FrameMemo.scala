@@ -47,11 +47,9 @@ final class FrameMemo private (val name: String, val maxEntries: Int) {
   private val recomputeCount = new java.util.concurrent.atomic.AtomicLong
   /** Wall seconds spent in recompute builds (including the eager
     * localCheckpoint), JVM-lifetime — the cost the memo's hits amortize.
-    * Bench charges it to the timed board as a `build:<name>` entry
-    * (round-16 verdict item 2: the min-of-two pass structure otherwise
-    * reports only warm consumer times and the build cost appears in NO
-    * number). LongAdder in nanos: cheap, race-free under the rare
-    * concurrent duplicate build (both builds genuinely ran). */
+    * Bench charges it to the timed board as a `build:<name>` entry.
+    * LongAdder in nanos: cheap, race-free under the rare concurrent
+    * duplicate build (both builds genuinely ran). */
   private val buildNanos = new java.util.concurrent.atomic.LongAdder
 
   /** The persisted RDD behind an eagerly localCheckpoint'd Dataset — the

@@ -247,8 +247,8 @@ object AdvancedQueries {
       // x7's 100 TB path made concrete: the quartile cuts come from
       // approx_percentile (KLL-style mergeable sketch — one pass, fixed
       // memory, no exact-percentile sort buffer), shard assignment stays
-      // the same map-side comparison. Sketch results have no SQL twin ->
-      // rows-only; Wave3Spec bounds the shard-size deviation vs exact x7.
+      // the same map-side comparison; Wave3Spec bounds the shard-size
+      // deviation vs exact x7.
       val docs = Tables(s, d).documents.select(
         col("doc_id"),
         (col("n_chars").cast("double") /

@@ -17,30 +17,21 @@ import graft.plans.VectorExpressions.{vector_dot, vector_normalize}
 object DedupQueries {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Session-memoized near-dup cluster map (doc_id → component), the
-    * frame FOUR board entries consume (d5 projects it, d6 picks keepers
-    * over it, d14 rolls token savings up from it, x9 splits on it) and
-    * each used to rebuild from raw text: shingle → banded candidate →
-    * Jaccard pairs → iterative connected components, the most expensive
-    * DAG in the dedup block executed four times per bench session. A
-    * production curation stack materializes the cluster assignment ONCE
-    * per corpus snapshot and every downstream job (keeper selection,
-    * savings card, leakage-safe split) reads that table — the
-    * [[graft.core.FrameMemo]] posture the round-14 EM marts / BM25
-    * postings established. Keyed by the data dir; results are
-    * bit-identical (consumers read the same rows either way) and a lone
-    * oracle replay simply recomputes. The un-memoized builder plan stays
-    * audited in PlanAuditSpec (`build:neardup_clusters`). */
+  /** Session-memoized near-dup cluster map (doc_id → component): Jaccard
+    * pairs → iterative connected components, the most expensive DAG in
+    * the dedup block, built once per (session, dir) for every reader
+    * [[graft.SparkEntry.board]] declares, as a curation stack
+    * materializes the cluster assignment once per corpus snapshot. A lone
+    * oracle replay recomputes; the un-memoized build plan stays audited
+    * in PlanAuditSpec (`build:neardup_clusters`). */
   private val clustersMemo = graft.core.FrameMemo("neardup_clusters")
 
   /** Session-memoized candidate-pair statistics frame
     * ([[graft.operators.Dedup.pairShingleStats]]: (id_a, id_b, inter,
-    * n_a, n_b) at the board's n=3 / source-blocked / maxDf=100 params) —
-    * the expensive shingle → inverted-index → pair-reduce DAG that
-    * Jaccard (d1), containment (d12) AND the cluster builder all score
-    * from with pure projections. One build per (session, dir); the
-    * un-memoized build plan stays audited in PlanAuditSpec
-    * (`build:shingle_pair_stats`). */
+    * n_a, n_b) at the board's n=3 / source-blocked / maxDf=100 params),
+    * the shingle → inverted-index → pair-reduce DAG that its readers and
+    * the cluster build score from with pure projections. The un-memoized
+    * build plan stays audited in PlanAuditSpec (`build:shingle_pair_stats`). */
   private val pairStatsMemo = graft.core.FrameMemo("shingle_pair_stats")
 
   /** The un-memoized pair-stats builder (the PlanAuditSpec audit target). */
@@ -52,10 +43,8 @@ object DedupQueries {
     pairStatsMemo.get(s, d)(buildPairStats(s, d))
 
   /** The un-memoized cluster builder — CC over the thresholded Jaccard
-    * pairs; also what PlanAuditSpec audits fresh so the CC build-plan
-    * shape stays pinned. Scores off the memoized stats frame (the pair
-    * DAG below it has its own audit + memo), so a bench session pays the
-    * shingle machinery once for the whole d1/d12/d5/d6/d14/x9 family. */
+    * pairs scored off the memoized stats frame; also what PlanAuditSpec
+    * audits fresh so the CC build-plan shape stays pinned. */
   private[graft] def buildNeardupClusters(s: SparkSession, d: String): DataFrame = {
     val docs = Tables(s, d).documents
     val pairs = Dedup.jaccardFromStats(pairStats(s, d), threshold = 0.5)
@@ -207,8 +196,6 @@ object DedupQueries {
       // drops only stopword-grade shingles that carry no dedup signal.
       // The clean testdata's df sits far below the cap, and the oracle
       // applies the identical cap, so parity holds by construction.
-      // Round 15: scores the session-memoized pair-stats frame (see
-      // pairStats) — the materialized-pair-index posture d12 shares.
       Dedup.jaccardFromStats(pairStats(s, d), threshold = 0.5)
     }),
     "d13_corpus_overlap" -> ((s, d) => {
@@ -229,8 +216,6 @@ object DedupQueries {
       // by the host's size; threshold 0.6 > d1's 0.5 because the measure
       // is one-sided
       // skew guard ON by default, mirrored in the oracle (see d1 note)
-      // Round 15: scores the session-memoized pair-stats frame (see
-      // pairStats) — same shingle DAG as d1, different measure on top.
       Dedup.containmentFromStats(pairStats(s, d), threshold = 0.6)
     }),
     "d2_minhash_lsh" -> ((s, d) => {
@@ -272,9 +257,7 @@ object DedupQueries {
     "d18b_incremental_fast" -> ((s, d) => {
       // d18's production twin: identical index/probe recurrence on the
       // xxhash64 signature path (half the hash cost of the md5 portable
-      // sigs; Spark-only, so rows-only — the d18 portable twin is the
-      // hash-green pin, and Wave8Spec pins fast-incremental == the
-      // cross-batch slice of fast-batch LSH)
+      // sigs)
       val docs = Tables(s, d).documents.select("doc_id", "text")
       val mx = docs.agg(max("doc_id").as("mx"))
       val t = docs.crossJoin(broadcast(mx))
@@ -455,8 +438,6 @@ object DedupQueries {
       // pair->cluster resolution over the FULL corpus: connected components
       // on Jaccard pairs (min-label propagation; oracle = DuckDB recursive
       // CTE). The corpus' genuine near-dup pair merges into one cluster.
-      // Round 15: reads the session-memoized cluster map (see
-      // neardupClusters) — the materialized-cluster-table posture.
       neardupClusters(s, d)
         .select(col("id").as("doc_id"), col("comp").as("cluster_id"))
     }),
@@ -494,9 +475,8 @@ object DedupQueries {
       Graph.keepersByWeight(cc, docs, "doc_id", "n_chars")
     }),
     "s3_ann_ivf" -> ((s, d) => {
-      // IVF coarse-quantized ANN (k-means cells + nprobe probing); no SQL
-      // equivalent (k-means training) -> rows-only check; recall vs brute
-      // force asserted in OperatorsSpec
+      // IVF coarse-quantized ANN (k-means cells + nprobe probing); recall
+      // vs brute force asserted in OperatorsSpec
       val e = Tables(s, d).embeddings
       // sample-trained quantizer: at 100 TB the coarse centroids come from
       // a ~0.1% sample — quantizer quality converges long before full data.
@@ -558,8 +538,7 @@ object DedupQueries {
     "s5_ann_ivfpq" -> ((s, d) => {
       // the production 100 TB ANN layout: IVF cell pruning × PQ byte codes
       // (ADC scoring) × exact shortlist rerank — FAISS IndexIVFPQ shape.
-      // No SQL equivalent (two trained quantizers) -> rows-only; recall vs
-      // brute force asserted in Wave3Spec.
+      // Recall vs brute force asserted in Wave3Spec.
       val e = Tables(s, d).embeddings
       Similarity.ivfPqTopK(e, e.filter(col("vec_id") < 10), "vec_id", "embedding",
         k = 5, dim = 64, nlist = 16, nprobe = 8, m = 8, ksub = 32, refine = 10,
@@ -568,9 +547,8 @@ object DedupQueries {
     "s4_ann_pq" -> ((s, d) => {
       // product-quantization ANN: m=8 byte codes (32x compression) scored
       // via ADC lookup tables, then the k·refine shortlist exact-cosine
-      // re-ranked — the production high-recall PQ serving shape. No SQL
-      // equivalent (k-means codebooks) -> rows-only; recall asserted in
-      // OperatorsSpec.
+      // re-ranked — the production high-recall PQ serving shape. Recall
+      // asserted in OperatorsSpec.
       val e = Tables(s, d).embeddings
       Similarity.pqTopK(e, e.filter(col("vec_id") < 10), "vec_id", "embedding",
         k = 5, dim = 64, m = 8, ksub = 32, refine = 10,

@@ -80,22 +80,15 @@ object EmModelQueries {
   private def stgUsda(s: SparkSession): DataFrame =
     Staging.usdaData(graft.core.Tables.parquet(s, s"$FixtureDir/usda.parquet"), RunTs)
 
-  /** Session-scoped memos of the three shared mart frames — the round-14
-    * answer to em_api_performance sitting closest to the ×10 scale
-    * ceiling (BASELINE.md "Round 14: em_api_performance" attribution: its
-    * wall was ~79% weatherImpacts +
-    * ~27% disasterAnalytics recomputed from staging; em_weather_impacts /
-    * em_analytics / the public-layer entries recomputed the same DAG
-    * prefixes again). In the reference these marts are MATERIALIZED dbt
-    * tables every downstream model reads — recomputing them per board
-    * entry was the bench-session artifact, not the engine posture; the
-    * memo ([[graft.core.FrameMemo]], the graph trade-pairs lifecycle) is
-    * the single-process analog. Keyed by the fixture multiplier
-    * (`ensureFixtures` runs first in every entry, so [[writtenMult]] is
-    * current): fixtures are a pure function of mult, so same mult ⇒ same
-    * bits even across the in-place rewrite. Results are bit-identical —
-    * consumers read the same rows either way; the DuckDB oracle replays
-    * the full DAG from the same fixture parquet regardless. */
+  /** Session-scoped memos of the three shared mart frames. In the
+    * reference these marts are MATERIALIZED dbt tables every downstream
+    * model reads; recomputing them from staging per board entry cost
+    * em_api_performance ~79% weatherImpacts + ~27% disasterAnalytics
+    * (BASELINE.md "Round 14: em_api_performance"). Keyed by the fixture
+    * multiplier (`ensureFixtures` runs first in every entry, so
+    * [[writtenMult]] is current): fixtures are a pure function of mult,
+    * so same mult ⇒ same bits even across the in-place rewrite. The
+    * DuckDB oracle replays the full DAG from the same fixture parquet. */
   private val eventsMemo = graft.core.FrameMemo("em_events")
   private val impactsMemo = graft.core.FrameMemo("em_impacts")
   private val analyticsMemo = graft.core.FrameMemo("em_analytics")

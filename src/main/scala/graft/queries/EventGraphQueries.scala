@@ -19,20 +19,11 @@ object EventGraphQueries {
   type Q = (SparkSession, String) => DataFrame
 
   /** Session-scoped memo of the distinct customer->supplier trade pair
-    * list every graph entry (g1/g1b/g2/g3) starts from — the orders ⋈
-    * lineitem projection, parity-encoded and deduplicated, eagerly
-    * localCheckpoint'd so a bench session runs the join+distinct ONCE
-    * for the whole graph block instead of once per entry. Queries stay
-    * self-contained (each calls this accessor; a lone oracle replay
-    * computes it fresh) and results stay bit-identical: the pair SET is
-    * what downstream integer recurrences consume, and they are
-    * order-free. Keyed by (session, dir) so Verify/Bench session
-    * recycling and multi-SF runs can't cross wires.
-    *
-    * Mechanics (bounded lifecycle, dead-session purge, hit/recompute
-    * counters) live in [[graft.core.FrameMemo]] — this was the original
-    * instance, factored out in round 14 so the EM mart frames and the
-    * retrieval postings index share the proven implementation. */
+    * list the graph entries start from — the orders ⋈ lineitem
+    * projection, parity-encoded and deduplicated, built once per
+    * (session, dir). Results stay bit-identical: the pair SET is what
+    * the downstream integer recurrences consume, and they are order-free;
+    * a lone oracle replay computes it fresh. */
   private val tradePairsMemo = graft.core.FrameMemo("trade_pairs")
 
   /** Release hook: frees the checkpoint blocks and map entries of one
@@ -151,9 +142,7 @@ object EventGraphQueries {
       // the raw (day, user) pairs, while sketches reduce the corpus ONCE
       // to |days| fixed-size (lgK=12 ≈ 1.6% err) sketch rows, and the
       // window union runs over |days|×7 rows — a different complexity
-      // class when users/day is huge. Rows-only by design (sketch
-      // estimate is engine-specific); a25 is the exact hash-green twin
-      // and Wave7Spec bounds the relative error.
+      // class when users/day is huge.
       val e = Tables(s, d).events
       val perDay = e.groupBy(to_date(col("ts")).as("d"))
         .agg(hll_sketch_agg(col("user_id"), lit(12)).as("sk"))
@@ -382,14 +371,10 @@ object EventGraphQueries {
       // bucket so candidate generation is an equi join, with
       // levenshtein <= 3 evaluated post-join (banded-Ukkonen codegen).
       // maxBlock=1000 is the degenerate-block skew guard, mirrored in
-      // the oracle. UNTIMED TWIN since round 15 (Bench.TwinEntries;
-      // still fully hash-graded here): the attribution in BASELINE.md
-      // ("Round 15: d17_fuzzy_join") showed
-      // the id-level pair OUTPUT is Θ(n²) by construction on this
-      // corpus — part has only 64 distinct p_names, so identical names
-      // collide under ANY blocking key (matched pairs ×103 on a ×10
-      // corpus) and no physical plan can beat an output-size floor.
-      // d17b holds the timed slot with the scale-true canonical form.
+      // the oracle. The id-level pair OUTPUT is Θ(n²) on this corpus:
+      // part has only 64 distinct p_names, so identical names collide
+      // under ANY blocking key (BASELINE.md, "Round 15: d17_fuzzy_join");
+      // its SparkEntry.board declaration keeps it off the timed pass.
       val p = Tables(s, d).part
         .select(col("p_partkey"), col("p_name"),
           element_at(split(col("p_name"), " "), 2).as("noun"), col("p_size"))

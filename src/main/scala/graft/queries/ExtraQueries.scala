@@ -94,8 +94,6 @@ object ExtraQueries {
     }),
     "a5b_approx_distinct" -> ((s, d) => {
       // 100 TB scale path for A5: HLL sketch instead of exact expansion.
-      // No DuckDB oracle (different sketch impls) -> rows-only; exact-vs-
-      // approx tolerance asserted in QueriesSmokeSpec.
       Tables(s, d).lineitem
         .groupBy("l_returnflag")
         .agg(

@@ -29,16 +29,12 @@ object RetrievalQueries {
   private val RpSeed = 42
 
   /** Session-scoped memo of the per-(query, candidate-doc) BM25 score
-    * frame for the board's fixed 8-doc query set — the k-free half both
-    * s8 (top-10) and s9's lexical arm (top-20) rank. The round-14
-    * attribution (BASELINE.md "Round 14: s8/s9 retrieval"): ~90% of each
-    * base was the postings build +
-    * score reduce (two corpus tokenize scans + the one exchange), and s9
-    * re-paid all of it. One build per (session, dir) is also the honest
-    * 100 TB posture: a postings index is a materialized table probed per
-    * query batch, never rebuilt per query (the d18 signature-index
-    * pattern). Results are bit-identical — the memoized frame is the
-    * same rows either way; a lone oracle replay recomputes it fresh. */
+    * frame for the board's fixed 8-doc query set — the k-free half its
+    * readers rank at their own k. The postings build + score reduce were
+    * ~90% of each reader's cost (BASELINE.md "Round 14: s8/s9
+    * retrieval"); a postings index is a materialized table probed per
+    * query batch, never rebuilt per query. A lone oracle replay
+    * recomputes it fresh. */
   private val bm25ScoredMemo = graft.core.FrameMemo("bm25_scored")
   private def bm25ScoredQ8(s: SparkSession, d: String): DataFrame =
     bm25ScoredMemo.get(s, s"$d|doc_id<8") {
@@ -50,17 +46,14 @@ object RetrievalQueries {
     "s8_bm25_topk" -> ((s, d) => {
       // Okapi BM25 lexical top-k: 8 query docs against the full corpus.
       // Query-term semi-join BEFORE the tf shuffle keeps the postings
-      // exchange proportional to query-term hits, not corpus tokens;
-      // the scored candidate frame is memoized across the retrieval
-      // block (shared with s9's k=20 lexical arm).
+      // exchange proportional to query-term hits, not corpus tokens.
       Retrieval.bm25TopKFromScores(bm25ScoredQ8(s, d), k = 10)
     }),
     "s9_hybrid_rrf" -> ((s, d) => {
       // Hybrid retrieval: BM25 (text) and brute-force cosine (embedding)
       // lists fused with reciprocal-rank fusion (Cormack et al. 2009).
       // vec_id is the embedding-side doc key (row-aligned corpora), so
-      // the fused frame re-ranks one doc id space. The lexical arm ranks
-      // the SAME memoized score frame as s8 at k=20.
+      // the fused frame re-ranks one doc id space.
       val emb = Tables(s, d).embeddings
       val lex = Retrieval.bm25TopKFromScores(bm25ScoredQ8(s, d), k = 20)
       val sem = Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 8), "vec_id", "embedding", k = 20)

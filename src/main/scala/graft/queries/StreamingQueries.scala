@@ -49,8 +49,7 @@ object StreamingQueries {
     "st17_stream_latency_quantiles" -> ((s, d) =>
       // the reference's API latency dashboard (simulated p50/p95/p99
       // constants, ops/public_ops.py:543-549) as a real windowed sketch
-      // aggregation; rows-only (sketch ≠ exact), cross-checked against the
-      // exact batch twin a22 in Streaming2Spec
+      // aggregation
       StreamingJobs.streamingLatencyQuantiles(s, d)),
     "st18_stream_drift_psi" -> ((s, d) =>
       // a21's PSI drift at ingest time: static broadcast baseline
@@ -102,8 +101,6 @@ object StreamingQueries {
       // md5 portability tax st22 pays so DuckDB can replay its bits —
       // BASELINE.md "st22 wall-time attribution" puts ~46% of st22's
       // wall on that tax.
-      // Rows-only by design; pinned by st22 + the Wave11 equality spec
-      // (stream == batch 3-stage xxhash64 replay).
       StreamingJobs.streamingIncrementalNearDup(s, d, portable = false))
   )
 

@@ -49,8 +49,7 @@ object TextQueries {
       )
     }),
     "t5_rolling_fingerprint" -> ((s, d) => {
-      // Rabin-Karp rolling 16-byte fingerprint (native Catalyst expr);
-      // no SQL equivalent -> rows-only check + determinism asserted in spec
+      // Rabin-Karp rolling 16-byte fingerprint (native Catalyst expr)
       Tables(s, d).documents.select(
         col("doc_id"),
         graft.plans.VectorExpressions.rolling_fingerprint(col("text"), 16).as("roll_fp")
@@ -267,8 +266,8 @@ object TextQueries {
     "t14_compression_ratio" -> ((s, d) => {
       // compression-ratio quality signal (model-free redundancy detector:
       // templated/boilerplate text deflates far below natural prose, noise
-      // barely deflates). Deflate output has no SQL-engine twin -> rows-only
-      // check; ordering + determinism are spec-asserted in Wave3Spec.
+      // barely deflates); ordering + determinism are spec-asserted in
+      // Wave3Spec.
       val csize = graft.plans.DeflateSize.deflate_size(col("text"))
       Tables(s, d).documents.select(
         col("doc_id"),
@@ -304,10 +303,9 @@ object TextQueries {
       // BPE with merges LEARNED from this corpus (operators/Bpe): one
       // distributed word-histogram job trains 200 merges on the top-5000
       // words; encoding is the codegen'd BpeEncode expression carrying the
-      // merge table as one reference object. Learned merges are iterative
-      // corpus state no single SQL statement can express -> rows-only
-      // check; the merge learner itself is verified against the classic
-      // Sennrich ground truth + partitioning independence in Wave3Spec.
+      // merge table as one reference object. The merge learner is
+      // verified against the classic Sennrich ground truth + partitioning
+      // independence in Wave3Spec.
       val docs = Tables(s, d).documents
       val merges = graft.operators.Bpe.learnMerges(
         docs, "text", numMerges = 200, vocabWords = 5000,

@@ -20,7 +20,7 @@ class BenchRefSpec extends AnyFunSuite {
       .properties.asScala.map(_.getKey).toSet
 
   test("bench_ref covers every timed board query (regen gen_bench_ref.sh)") {
-    val timed = SparkEntry.queries.keySet -- Bench.TwinEntries
+    val timed = Bench.timedBoard.toSet
     val missing = timed -- refKeys
     assert(missing.isEmpty,
       s"tools/bench_ref_sf0.01.json is stale — run tools/gen_bench_ref.sh; " +
@@ -32,7 +32,7 @@ class BenchRefSpec extends AnyFunSuite {
     // (never timed by default) is exactly the dead entry this gate exists
     // to catch — e.g. a ref regenerated from a run whose
     // SPARK_GRAFT_BENCH_QUERIES allowlist named a twin
-    val timed = SparkEntry.queries.keySet -- Bench.TwinEntries
+    val timed = Bench.timedBoard.toSet
     val dead = refKeys -- timed
     assert(dead.isEmpty,
       s"tools/bench_ref_sf0.01.json names queries outside the timed board " +

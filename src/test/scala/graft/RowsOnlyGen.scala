@@ -1,8 +1,8 @@
 package graft
 
-/** Regenerates the committed ROWS_ONLY.json from SparkEntry.rowsOnly
-  * (the single source of truth; QueriesSmokeSpec fails the suite when
-  * the two drift).
+/** Regenerates the committed ROWS_ONLY.json from the RowsOnly
+  * declarations in SparkEntry.board (QueriesSmokeSpec fails the suite
+  * when the two drift).
   *
   *   sbt "Test/runMain graft.RowsOnlyGen"
   */

@@ -7,8 +7,6 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.FrameMemo
-
 /** Staleness gate for the committed ×10 scale-leg artifact
   * (SCALE_r<N>.json, written by tools/scale_leg.sh) — the BenchRefSpec
   * pattern applied to the one regression class nothing else catches: a
@@ -51,15 +49,11 @@ class ScaleRefSpec extends AnyFunSuite {
     new ObjectMapper().readTree(txt).path("queries").properties.asScala.map(_.getKey).toSet
 
   /** Artifact keys outside the timed board. `build:<memo>` entries ARE
-    * timed-board members since round 16 (Bench charges FrameMemo recompute
-    * builds to the board), but only while <memo> is still a registered
-    * FrameMemo: a renamed or deleted memo's key is dead. Reading
-    * SparkEntry.queries initialises every query object, which registers
-    * every production memo. */
-  private def deadKeys(keys: Set[String]): Set[String] = {
-    val timed = SparkEntry.queries.keySet -- Bench.TwinEntries
-    keys -- timed -- FrameMemo.allStats.map { case (n, _, _) => s"build:$n" }
-  }
+    * timed-board members (Bench charges memo builds to the board), but
+    * only while a board entry declares it reads <memo>: a renamed or
+    * deleted memo's key is dead. */
+  private def deadKeys(keys: Set[String]): Set[String] =
+    keys -- Bench.timedBoard -- SparkEntry.board.flatMap(_.memos).map(m => s"build:$m")
 
   test("a SCALE_r<N>.json artifact exists (run tools/scale_leg.sh <round>)") {
     assert(latestScale.nonEmpty, "no SCALE_r<N>.json at the repo root")
@@ -89,8 +83,7 @@ class ScaleRefSpec extends AnyFunSuite {
 
   test("the latest scale artifact covers every timed board query (rerun tools/scale_leg.sh)") {
     val (round, file) = latestScaleOrFail
-    val timed = SparkEntry.queries.keySet -- Bench.TwinEntries
-    val missing = timed -- scaleKeys(file)
+    val missing = Bench.timedBoard.toSet -- scaleKeys(file)
     assert(missing.isEmpty,
       s"$file (round $round) is stale — a board entry shipped without a ×10 scale ratio; " +
         s"run tools/scale_leg.sh; missing: ${missing.toSeq.sorted.mkString(", ")}")

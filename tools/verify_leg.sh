@@ -25,12 +25,10 @@ if [ "${2:-}" = "--since" ]; then
     echo "[verify] no src/main change since $SINCE -> nothing to re-check"
     exit 0
   else
-    # intersect with the board (changed_queries also reports oracle-only
-    # names from edited files; Verify ignores unknown names silently, so
-    # filter here to keep the log honest). An EMPTY intersection means the
-    # detector's names don't map onto the board — fall back to the FULL
-    # board rather than passing unknown names Verify would silently skip
-    # (which would report green having checked nothing).
+    # intersect with the board: changed_queries also reports oracle-only
+    # names from edited files, and Verify fails on any name that is not a
+    # board query. An EMPTY intersection means the detector's names don't
+    # map onto the board — fall back to the FULL board.
     ONLY=$(python3 - "$CHANGED" <<'EOF'
 import sys
 changed = set(sys.argv[1].split(","))
