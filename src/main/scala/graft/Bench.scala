@@ -51,7 +51,14 @@ object Bench {
   // official vs 0.2 s isolated, round 5), so a real regression could hide
   // in the noise. Dropping the session releases the generated-class
   // loaders, letting the sweeper reclaim whole nmethod regions instead of
-  // evicting live ones. Session startup is untimed.
+  // evicting live ones. Session startup is untimed. Spark's class cache
+  // (2000 classes, SparkSessionFactory) holds a stopped block's classes,
+  // and through them its executor loader, until they are evicted; the
+  // driver-side classes serve later blocks. The code heap stays far inside
+  // the code cache with it (build.sbt); same-window sf0.01 boards (4
+  // cores) read 0 failed, 25 ceilings raised, and 2 and 0 retries
+  // (st11/st13 at 11% host steal: executor run time tripled at flat CPU
+  // time) against the 100-class cache's 0 and 23 (at 7% and 37% steal).
   private val BlockSize = 40
   // Two timed passes per query, per-query MIN: this host shows bursty
   // hypervisor steal that inflates a rotating victim 5-20x per pass

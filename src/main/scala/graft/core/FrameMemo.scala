@@ -45,9 +45,12 @@ final class FrameMemo private (val name: String, val maxEntries: Int) {
     new java.util.concurrent.ConcurrentLinkedQueue[(SparkSession, String)]()
   private val accessCount = new java.util.concurrent.atomic.AtomicLong
   private val recomputeCount = new java.util.concurrent.atomic.AtomicLong
-  /** Wall seconds spent in recompute builds (including the eager
-    * localCheckpoint), JVM-lifetime — the cost the memo's hits amortize.
-    * Bench charges it to the timed board as a `build:<name>` entry.
+  /** Exclusive wall seconds spent in recompute builds (including the
+    * eager localCheckpoint), JVM-lifetime — the cost the memo's hits
+    * amortize. Bench charges it to the timed board as a `build:<name>`
+    * entry. Exclusive: a memo built inside this memo's build on the same
+    * thread (em_events inside em_analytics) is charged to that memo only,
+    * so the `build:*` entries add up to the builds' wall time once.
     * LongAdder in nanos: cheap, race-free under the rare concurrent
     * duplicate build (both builds genuinely ran). */
   private val buildNanos = new java.util.concurrent.atomic.LongAdder
@@ -88,11 +91,11 @@ final class FrameMemo private (val name: String, val maxEntries: Int) {
       // the loser's frame was never handed out, so its checkpoint blocks
       // are released eagerly and the winner's entry is returned.
       recomputeCount.incrementAndGet(): Unit
-      val t0 = System.nanoTime()
       // the build's jobs count under its own metrics scope, also when it
       // runs inside a consumer's scope or another memo's build
-      val cp = QueryMetrics.scoped(s.sparkContext, s"build:$name")(build.localCheckpoint(true))
-      buildNanos.add(System.nanoTime() - t0)
+      val cp = FrameMemo.buildClock(ns => buildNanos.add(ns(0))) {
+        QueryMetrics.scoped(s.sparkContext, s"build:$name")(build.localCheckpoint(true))
+      }
       val entry = (cp, checkpointedRdd(cp))
       val prev = cache.putIfAbsent(k, entry)
       if (prev == null) { order.add(k): Unit; entry }
@@ -157,13 +160,16 @@ final class FrameMemo private (val name: String, val maxEntries: Int) {
     (accessCount.get() - r, r)
   }
 
-  /** Accumulated recompute-build wall seconds (see buildNanos). */
+  /** Accumulated exclusive recompute-build wall seconds (see buildNanos). */
   def buildSeconds: Double = buildNanos.sum() / 1e9
 }
 
 object FrameMemo {
   private val registry =
     new java.util.concurrent.ConcurrentLinkedQueue[FrameMemo]()
+
+  /** Wall nanos of builds, less those of the builds nested in them. */
+  private val buildClock = new Exclusive(() => Array(System.nanoTime()))
 
   /** A new registered memo. `name` keys the Bench stats block — one
     * instance per shared frame family, created at object-init time. */

@@ -4,7 +4,9 @@ import scala.collection.immutable.ListMap
 import scala.collection.mutable
 
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.graftbridge.ListenerBusBridge
 
 /** Per-scope Spark counters for one SparkContext. A scope is the value of
@@ -65,7 +67,7 @@ final class QueryMetrics private (sc: SparkContext) extends SparkListener {
   }
 
   override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-    case Counted(scope, counter) => synchronized(add(scope, counter, 1))
+    case Counted(scope, counter, n) => synchronized(add(scope, counter, n))
     case _ =>
   }
 
@@ -82,12 +84,23 @@ final class QueryMetrics private (sc: SparkContext) extends SparkListener {
 object QueryMetrics {
   val ScopeProperty = "graft.metrics.scope"
   private val PeakKey = "peak_execution_memory_bytes"
-  private val Zero = Seq("jobs", "stages", "tasks", "task_ends", "executor_run_ms", "executor_cpu_ns",
-    "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes", PeakKey, "sizing_misses").map(_ -> 0L)
+  /** The counters of every reading, in order. */
+  val Keys: Seq[String] = Seq("jobs", "stages", "tasks", "task_ends", "executor_run_ms", "executor_cpu_ns",
+    "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes", PeakKey, "sizing_misses",
+    "codegen_compiles", "codegen_ms")
+  private val Zero = Keys.map(_ -> 0L)
 
-  /** One degraded-path occurrence in `scope`, posted on the listener bus
-    * so it is ordered with, and read like, the scope's job events. */
-  final case class Counted(scope: String, counter: String) extends SparkListenerEvent
+  /** `n` occurrences of `counter` in `scope` (1 for a degraded path),
+    * posted on the listener bus so it is ordered with, and read like, the
+    * scope's job events. */
+  final case class Counted(scope: String, counter: String, n: Long = 1) extends SparkListenerEvent
+
+  /** (classes compiled, compile nanos) of Spark's code generator, JVM-wide.
+    * The first read initialises `CodeGenerator`, which sizes its class
+    * cache from the active session's conf then, once per JVM; scopes run
+    * inside a session, so that is the engine's conf. */
+  private val codegen = new Exclusive(() =>
+    Array(CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime))
 
   def attach(sc: SparkContext): QueryMetrics = {
     val m = new QueryMetrics(sc)
@@ -96,11 +109,23 @@ object QueryMetrics {
   }
 
   /** Runs `body` with jobs submitted from this thread counted under
-    * `name`; the enclosing scope (or none) is restored afterwards. */
+    * `name`; the enclosing scope (or none) is restored afterwards.
+    *
+    * The scope's `codegen_compiles` and `codegen_ms` are the classes Spark
+    * compiled, and the compile time, in its wall window, less those of the
+    * scopes nested in it on this thread: a `build:<memo>` inside an entry
+    * is charged to the build alone. Both counters are JVM-wide, so they
+    * also hold the executor threads' compiles in the window (in local mode
+    * each executor compiles its own copy of a class) and those of any
+    * other thread running a query at the same time. */
   def scoped[T](sc: SparkContext, name: String)(body: => T): T = {
     val outer = sc.getLocalProperty(ScopeProperty)
     sc.setLocalProperty(ScopeProperty, name)
-    try body finally sc.setLocalProperty(ScopeProperty, outer)
+    try codegen { d =>
+      if (d(0) > 0) ListenerBusBridge.post(sc, Counted(name, "codegen_compiles", d(0)))
+      if (d(1) >= 1000000L) ListenerBusBridge.post(sc, Counted(name, "codegen_ms", d(1) / 1000000L))
+    }(body)
+    finally sc.setLocalProperty(ScopeProperty, outer)
   }
 
   /** Adds 1 to `counter` of this thread's current scope; no-op outside one. */

@@ -26,6 +26,20 @@ import org.apache.spark.sql.SparkSession
   *     tables at 100 TB are storage-bound before they are CPU-bound.
   *   - int64-micros parquet timestamps: modern engines (DuckDB, Trino,
   *     Arrow) read them natively — no INT96 legacy path.
+  *   - a 2000-class generated-code cache (Spark's default is 100):
+  *     repeated plans — a board entry's second pass, the next session
+  *     block's driver-side plans, a daily refresh replaying one DAG —
+  *     reuse their compiled classes instead of paying Janino again. The
+  *     conf is static and JVM-wide: `CodeGenerator` sizes its cache once,
+  *     from the conf active when it first initialises, so only the first
+  *     session of a JVM sets it. The cache key is (context class loader,
+  *     source), so the driver and each SparkContext's executor threads
+  *     hold their own copy of a class. The largest working set measured
+  *     is Bench's first 40-entry session block at sf0.01 (the memo
+  *     readers): 1,120 distinct classes, driver and executor copies
+  *     together, counted with an unbounded cache (4 cores, 2026-10); the
+  *     other four blocks compiled 564–878 more. The cache splits its size
+  *     over four LRU segments, hence the headroom above 1,120.
   */
 object SparkSessionFactory {
 
@@ -48,6 +62,7 @@ object SparkSessionFactory {
     // stable logical schema regardless of writer.
     .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.codegen.cache.maxEntries", "2000")
 
   /** Local session sized by SPARK_GRAFT_CPUS (driver contract default 32,
     * mirroring the grading harness), shuffle partitions = 32 per the

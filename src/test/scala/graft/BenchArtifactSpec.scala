@@ -18,7 +18,8 @@ class BenchArtifactSpec extends AnyFunSuite {
   // memos only the recomputed one is charged as build:<memo>
   private val results =
     Seq((oddName, 0.12345, 1), ("failed_q", -1.0, 0)) ++ (1 to 12).map(i => (f"q$i%02d", i.toDouble, 0))
-  private def reading(jobs: Long) = ListMap("jobs" -> jobs, "tasks" -> 3 * jobs, "task_ends" -> 3 * jobs)
+  private def reading(jobs: Long) = ListMap("jobs" -> jobs, "tasks" -> 3 * jobs, "task_ends" -> 3 * jobs,
+    "codegen_compiles" -> 2 * jobs, "codegen_ms" -> 15 * jobs)
   // counters for every entry and both memos; the idle memo's are not charged
   private val counters = (results.map(_._1) ++ Seq("build:spec_built", "build:spec_idle"))
     .zipWithIndex.map { case (k, i) => k -> reading(i.toLong) }.toMap
@@ -56,6 +57,16 @@ class BenchArtifactSpec extends AnyFunSuite {
       val o = full.get("counters").get(k)
       assert(o.properties.asScala.toSeq.map(e => e.getKey -> e.getValue.asLong) == c.toSeq, k)
     }
+  }
+
+  test("each counters record says how much of its entry was compilation") {
+    for (k <- keys(full.get("counters"))) {
+      val o = full.get("counters").get(k)
+      assert(o.get("codegen_compiles").asLong == counters(k)("codegen_compiles") &&
+        o.get("codegen_ms").asLong == counters(k)("codegen_ms"), k)
+    }
+    // the keys are those of every QueryMetrics reading
+    assert(Set("codegen_compiles", "codegen_ms").subsetOf(graft.core.QueryMetrics.Keys.toSet))
   }
 
   test("numbers keep their decimal places; the -1 marker counts as zero in the total") {

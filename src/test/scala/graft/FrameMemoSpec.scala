@@ -36,6 +36,22 @@ class FrameMemoSpec extends SparkSpecBase {
     memo.release()
   }
 
+  test("a memo built inside another memo's build is charged to the inner memo only") {
+    val (outer, inner) = (FrameMemo("spec_charge_outer"), FrameMemo("spec_charge_inner"))
+    val t0 = System.nanoTime()
+    outer.get(spark, "k") {
+      Thread.sleep(200)
+      inner.get(spark, "k") { Thread.sleep(600); frame(1) }
+    }
+    val wall = (System.nanoTime() - t0) / 1e9
+    assert(inner.buildSeconds >= 0.6 && outer.buildSeconds >= 0.2, (outer.buildSeconds, inner.buildSeconds))
+    // charged once: the two charges add up to no more than the outer call took
+    assert(outer.buildSeconds + inner.buildSeconds <= wall,
+      s"outer ${outer.buildSeconds} + inner ${inner.buildSeconds} > wall $wall")
+    outer.release()
+    inner.release()
+  }
+
   test("release frees the checkpoint blocks; the next access recomputes identically") {
     val memo = FrameMemo("spec_release")
     val a = memo.get(spark, "k")(frame(7))

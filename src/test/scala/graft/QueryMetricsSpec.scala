@@ -1,13 +1,16 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions._
 
 import graft.core.{FrameMemo, QueryMetrics}
 
 /** [[graft.core.QueryMetrics]]: stage totals reconcile with task-end
   * events, scopes keep their jobs apart, a memo build counts under its own
-  * `build:<memo>` scope (the innermost one when builds nest), and the
-  * enclosing scope survives a build that throws. */
+  * `build:<memo>` scope (the innermost one when builds nest), codegen
+  * compiles are charged once, to the innermost scope, and the enclosing
+  * scope survives a build that throws. */
 class QueryMetricsSpec extends SparkSpecBase {
   private def sc = spark.sparkContext
   private def unique(tag: String) = s"$tag-${java.util.UUID.randomUUID()}"
@@ -57,7 +60,8 @@ class QueryMetricsSpec extends SparkSpecBase {
           pairs.groupBy((col("x") % 7).as("k")).count()
         }
       }
-      assert(m.take(consumer)("jobs") == 0, "the consumer ran no job of its own yet")
+      val c = m.take(consumer)
+      assert(c("jobs") == 0 && c("codegen_compiles") == 0, s"the consumer ran no job of its own yet: $c")
       val (o, i) = (m.take("build:spec_metrics_outer"), m.take("build:spec_metrics_inner"))
       assert(i("jobs") >= 1 && i("tasks") == i("task_ends"), i)
       assert(o("jobs") >= 1 && o("shuffle_write_bytes") > 0 && o("tasks") == o("task_ends"), o)
@@ -66,6 +70,28 @@ class QueryMetricsSpec extends SparkSpecBase {
     }
     outer.release()
     inner.release()
+  }
+
+  test("codegen counters charge each compile once, to the innermost scope") {
+    withMetrics { m =>
+      val (outer, inner) = (unique("codegen-outer"), unique("codegen-inner"))
+      // a literal no other plan used, so the plan compiles new classes
+      def fresh(): Unit = spark.range(0, 100, 1, 2)
+        .select((col("id") + lit(scala.util.Random.nextInt())).as("x")).collect(): Unit
+      val (compiles0, nanos0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+      QueryMetrics.scoped(sc, outer) {
+        fresh()
+        QueryMetrics.scoped(sc, inner)(fresh())
+      }
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      val ms = (CodeGenerator.compileTime - nanos0) / 1000000L
+      val (o, i) = (m.take(outer), m.take(inner))
+      assert(o("codegen_compiles") >= 1 && i("codegen_compiles") >= 1, (o, i))
+      assert(o("codegen_compiles") + i("codegen_compiles") == compiles, s"$compiles compiles: $o $i")
+      // each scope's milliseconds are rounded down apart
+      val charged = o("codegen_ms") + i("codegen_ms")
+      assert(charged <= ms && charged >= ms - 1, s"$ms ms: $o $i")
+    }
   }
 
   test("the enclosing scope is restored after a build that throws") {
