@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,6 +19,12 @@ import org.apache.spark.sql.functions._
   * (null = open), `is_current`. The merge is a deterministic full-outer
   * reconciliation of current-open rows vs the incoming batch, suitable for
   * partition-overwrite rewrite; idempotent when re-run with the same batch.
+  * Both strategies share one physical shape: ONE sort-merge join of the
+  * open rows to the batch, each joined row expanded into its outcomes by
+  * one generator, unioned with the already-closed rows. With AQE off that
+  * is two shuffle exchanges (one per side; a keep-latest window on the
+  * batch already partitions it by key, so the join reuses it) and no
+  * broadcast (PlanAuditSpec pins it).
   */
 object Scd2 {
 
@@ -67,7 +73,6 @@ object Scd2 {
       "invalidateHardDeletes requires deleteTs: a hard-closed row with valid_to = NULL " +
         "is indistinguishable from an open row (null = open is the history contract); " +
         "pass the snapshot run time")
-    val bizCols = history.columns.filterNot(Seq("valid_from", "valid_to", "is_current").contains)
 
     // assert_true yields null on every clean row (the filter keeps them
     // all) and raises on the first null updatedAt — no extra action, the
@@ -79,68 +84,17 @@ object Scd2 {
           lit(s") has a null `$updatedAt`; side presence is read from it — fill or drop it upstream")))
         .isNull)
 
-    // latest record per key within the batch (idempotent re-ingest, S15)
+    // latest record per key within the batch (idempotent re-ingest, S15);
+    // the window's key partitioning is the join's batch-side exchange
     val w = Window.partitionBy(keys.map(col): _*).orderBy(col(updatedAt).desc)
     val latest = nonNullUpdatedAt(batch, "batch")
       .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
 
-    val closed = history.filter(!col("is_current"))
-    val open = nonNullUpdatedAt(history.filter(col("is_current")), "open history")
-
-    val joined = open
-      .as("o")
-      .join(latest.as("n"), keys, "full_outer")
-
-    // with a using-columns join the key columns are coalesced; detect side
-    // presence via the (asserted non-null) updatedAt column of each side
-    val hasOld = col(s"o.$updatedAt").isNotNull
-    val changed = col(s"n.$updatedAt").isNotNull && hasOld && col(s"n.$updatedAt") > col(s"o.$updatedAt")
-
-    val hasNew = col(s"n.$updatedAt").isNotNull
-
-    // open rows that stay open (unchanged, or no newer version). Under
-    // invalidateHardDeletes a key absent from the batch does NOT stay
-    // open — it hard-closes below — so presence in the batch joins the
-    // predicate; without the flag absent keys pass through open. Both
-    // conditions read the ONE full-outer join (round 16, guide §2.4 —
-    // this used to be a separate left_semi join re-shuffling both sides,
-    // and hard deletes a third left_anti join; the full-outer row set
-    // already distinguishes all four cases by side presence, the same
-    // device mergeCheckCols always used).
-    val stillOpen = joined
-      .filter(hasOld && (if (invalidateHardDeletes) hasNew && col(s"n.$updatedAt") <= col(s"o.$updatedAt")
-                         else col(s"n.$updatedAt").isNull || col(s"n.$updatedAt") <= col(s"o.$updatedAt")))
-      .select(keys.map(col) ++ bizCols.filterNot(keys.contains).map(c => col(s"o.$c")) :+
-        col("o.valid_from") :+ col("o.valid_to") :+ col("o.is_current"): _*)
-
-    // open rows superseded by the batch -> closed
-    val nowClosed = joined
-      .filter(changed)
-      .select(keys.map(col) ++ bizCols.filterNot(keys.contains).map(c => col(s"o.$c")) :+
-        col("o.valid_from") :+ col(s"n.$updatedAt").as("valid_to") :+ lit(false).as("is_current"): _*)
-
-    // hard deletes: open rows whose key vanished from the batch —
-    // old-side-only rows of the same full-outer join
-    val hardClosed =
-      if (!invalidateHardDeletes) open.limit(0)
-      else joined
-        .filter(hasOld && !hasNew)
-        .select(keys.map(col) ++ bizCols.filterNot(keys.contains).map(c => col(s"o.$c")) :+
-          col("o.valid_from") :+ lit(deleteTs.orNull).cast("timestamp").as("valid_to") :+
-          lit(false).as("is_current"): _*)
-    val openKept = stillOpen
-
-    // new versions and brand-new keys -> open rows
-    val newOpen = joined
-      .filter(changed || !hasOld)
-      .select(keys.map(col) ++ bizCols.filterNot(keys.contains).map(c => col(s"n.$c")) :+
-        col(s"n.$updatedAt").as("valid_from") :+ lit(null).cast("timestamp").as("valid_to") :+ lit(true).as("is_current"): _*)
-
-    closed
-      .unionByName(openKept)
-      .unionByName(nowClosed)
-      .unionByName(hardClosed)
-      .unionByName(newOpen)
+    reconcile(history, nonNullUpdatedAt(history.filter(col("is_current")), "open history"),
+      latest, keys, present = updatedAt,
+      changed = col(s"n.$updatedAt") > col(s"o.$updatedAt"),
+      versionTs = col(s"n.$updatedAt"),
+      deleteTs = if (invalidateHardDeletes) deleteTs else None)
   }
 
   /** Initialize a history table stamped at a snapshot run time (the
@@ -160,8 +114,9 @@ object Scd2 {
     * current_timestamp): changed keys close at `runTs` and reopen at
     * `runTs` with the batch's values; unchanged keys keep their open row
     * untouched; new keys open at `runTs`; keys absent from the batch
-    * close at `runTs` when `invalidateHardDeletes`. Idempotent: re-running
-    * with the same batch changes nothing (every checkCol then matches).
+    * close at `runTs` when `invalidateHardDeletes` and otherwise keep
+    * their open row. Idempotent: re-running with the same batch changes
+    * nothing (every checkCol then matches).
     *
     * The batch must be one row per key (pre-collapse upstream — there is
     * no updated_at to pick "latest" by, so this operator refuses to guess
@@ -196,49 +151,66 @@ object Scd2 {
           .filter(assert_true(col("__kc") === 1, msg).isNull)
           .drop("__kc")
       }
+
+    // the check strategy has no column known non-null on both sides, so
+    // each side carries a literal presence flag into the join
+    reconcile(history, history.filter(col("is_current")).withColumn("__p", lit(true)),
+      checkedBatch.withColumn("__p", lit(true)), keys, present = "__p",
+      // null-safe inequality on any check column = dbt's row-changed test
+      changed = checkCols.map(c => !(col(s"o.$c") <=> col(s"n.$c"))).reduce(_ || _),
+      versionTs = lit(runTs).cast("timestamp"),
+      deleteTs = if (invalidateHardDeletes) Some(runTs) else None)
+  }
+
+  // the outcomes of one joined row: at most one for its old (open
+  // history) side, at most one for its new (batch) side
+  private val Stays = 0
+  private val Closes = 1
+  private val HardCloses = 2
+  private val Opens = 3
+
+  /** The step both strategies share. `open` (aliased `o`) is joined to
+    * `batch` (aliased `n`) ONCE, full outer on `keys`; `present` names a
+    * column non-null on every row of both sides, so a null there means the
+    * side is absent. An old-side row closes at `versionTs` when `changed`
+    * holds, hard-closes at `deleteTs` when absent from the batch (None =
+    * absent keys stay open), and otherwise stays open; a batch row opens at
+    * `versionTs` when its key is new or `changed`. One explode over the
+    * two-slot outcome array (nulls dropped) and one projection emit the
+    * rows. No filter reads side presence above the join — such a filter
+    * would let Catalyst's outer-join elimination plan a different join per
+    * branch.
+    */
+  private def reconcile(
+      history: DataFrame,
+      open: DataFrame,
+      batch: DataFrame,
+      keys: Seq[String],
+      present: String,
+      changed: Column,
+      versionTs: Column,
+      deleteTs: Option[java.sql.Timestamp]
+  ): DataFrame = {
+    val hasOld = col(s"o.$present").isNotNull
+    val hasNew = col(s"n.$present").isNotNull
+    val superseded = hasOld && hasNew && changed
+    val oldOutcome = when(superseded, Closes)
+      .when(hasOld && !hasNew && lit(deleteTs.nonEmpty), HardCloses)
+      .when(hasOld, Stays)
+    val newOutcome = when(hasNew && (!hasOld || superseded), Opens)
+
+    val outcome = col("__t")
+    val opens = outcome === Opens
     val bizCols = history.columns.filterNot(Seq("valid_from", "valid_to", "is_current").contains)
-
-    val closed = history.filter(!col("is_current"))
-    val open = history.filter(col("is_current"))
-
-    // presence flags survive the coalescing using-join (the merge()
-    // device uses updatedAt; check strategy has none, so tag explicitly)
-    val joined = open.withColumn("__has_old", lit(true)).as("o")
-      .join(checkedBatch.withColumn("__has_new", lit(true)).as("n"), keys, "full_outer")
-    val hasOld = col("o.__has_old").isNotNull
-    val hasNew = col("n.__has_new").isNotNull
-    // null-safe inequality on any check column = dbt's row-changed test
-    val differs = checkCols.map(c => !(col(s"o.$c") <=> col(s"n.$c"))).reduce(_ || _)
-
-    def oRow(extra: Seq[org.apache.spark.sql.Column]) =
-      keys.map(col) ++ bizCols.filterNot(keys.contains).map(c => col(s"o.$c")) ++ extra
-    def nRow(extra: Seq[org.apache.spark.sql.Column]) =
-      keys.map(col) ++ bizCols.filterNot(keys.contains).map(c => col(s"n.$c")) ++ extra
-
-    val stillOpen = joined
-      .filter(hasOld && hasNew && !differs)
-      .select(oRow(Seq(col("o.valid_from"), col("o.valid_to"), col("o.is_current"))): _*)
-    val nowClosed = joined
-      .filter(hasOld && hasNew && differs)
-      .select(oRow(Seq(col("o.valid_from"), lit(runTs).cast("timestamp").as("valid_to"),
-        lit(false).as("is_current"))): _*)
-    val hardClosed =
-      if (!invalidateHardDeletes) open.limit(0)
-      else joined
-        .filter(hasOld && !hasNew)
-        .select(oRow(Seq(col("o.valid_from"), lit(runTs).cast("timestamp").as("valid_to"),
-          lit(false).as("is_current"))): _*)
-    val newOpen = joined
-      .filter(hasNew && (!hasOld || differs))
-      .select(nRow(Seq(lit(runTs).cast("timestamp").as("valid_from"),
-        lit(null).cast("timestamp").as("valid_to"), lit(true).as("is_current"))): _*)
-
-    // oRow/nRow define the exact output schema — the presence flags never
-    // reach any branch's select list
-    closed
-      .unionByName(stillOpen)
-      .unionByName(nowClosed)
-      .unionByName(hardClosed)
-      .unionByName(newOpen)
+    val rows = open.as("o").join(batch.as("n"), keys, "full_outer")
+      .withColumn("__t", explode(array_compact(array(oldOutcome, newOutcome))))
+      .select(bizCols.map(c =>
+          if (keys.contains(c)) col(c) else when(opens, col(s"n.$c")).otherwise(col(s"o.$c")).as(c)) :+
+        when(opens, versionTs).otherwise(col("o.valid_from")).as("valid_from") :+
+        when(outcome === Closes, versionTs)
+          .when(outcome === HardCloses, lit(deleteTs.orNull).cast("timestamp"))
+          .when(outcome === Stays, col("o.valid_to")).as("valid_to") :+
+        (outcome === Stays || opens).as("is_current"): _*)
+    history.filter(!col("is_current")).unionByName(rows)
   }
 }

@@ -90,7 +90,8 @@ object Upsert {
       case Some(cur) => latestByKey(cur.unionByName(batch, allowMissingColumns = true), keys, versionCol, tiebreak)
       case None      => latestByKey(batch, keys, versionCol, tiebreak)
     }
-    // write via temp dir, then swap — parquet sources can't overwrite in place
+    // write via temp dir, then swap — parquet sources can't overwrite in
+    // place; Files.move throws on a failed swap instead of leaving no table
     val tmp = path + "__tmp"
     merged.write.mode(SaveMode.Overwrite).parquet(tmp)
     val target = new java.io.File(path)
@@ -101,12 +102,13 @@ object Upsert {
       }
       rm(target)
     }
-    new java.io.File(tmp).renameTo(target): Unit
+    java.nio.file.Files.move(new java.io.File(tmp).toPath, target.toPath): Unit
   }
 
   /** Partition-scoped upsert: only the date partitions present in the batch
-    * are read+merged+overwritten (dynamic partition overwrite) — the 100 TB
-    * path, where a batch touches a handful of recent dates. */
+    * are read+merged+overwritten (dynamic partition overwrite, set on this
+    * write alone — the session's overwrite mode is left as it is) — the
+    * 100 TB path, where a batch touches a handful of recent dates. */
   def upsertPartitioned(
       spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame,
@@ -116,7 +118,6 @@ object Upsert {
       versionCol: String,
       tiebreak: String
   ): Unit = {
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val exists = new java.io.File(path).exists()
     val merged = if (exists) {
       val parts = batch.select(partCol).distinct()
@@ -124,6 +125,7 @@ object Upsert {
       latestByKey(affected.unionByName(batch, allowMissingColumns = true), keys, versionCol, tiebreak)
     } else latestByKey(batch, keys, versionCol, tiebreak)
     merged.write.mode(if (exists) SaveMode.Overwrite else SaveMode.ErrorIfExists)
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCol).parquet(path)
   }
 }

@@ -236,6 +236,25 @@ class OperatorsSpec extends SparkSpecBase {
     assert(rows == Map(1L -> "v1", 2L -> "v2", 3L -> "v1"))
   }
 
+  test("upsertPartitioned rewrites only the batch's partitions and leaves the session conf as it was") {
+    val dir = java.nio.file.Files.createTempDirectory("upsert_part").toString + "/t"
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.getOption(modeKey)
+    def files(day: String) =
+      new java.io.File(s"$dir/day=$day").listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet
+    val b1 = Seq((1L, 1L, "v1", "d1"), (2L, 1L, "v1", "d2")).toDF("id", "version", "payload", "day")
+    Upsert.upsertPartitioned(spark, b1, dir, "day", Seq("id"), "version", "id")
+    val d1Before = files("d1")
+    val b2 = Seq((2L, 2L, "v2", "d2"), (3L, 1L, "v1", "d2")).toDF("id", "version", "payload", "day")
+    Upsert.upsertPartitioned(spark, b2, dir, "day", Seq("id"), "version", "id")
+    val rows = spark.read.parquet(dir).collect()
+      .map(r => (r.getAs[Long]("id"), r.getAs[String]("payload"), r.getAs[String]("day"))).toSet
+    assert(rows == Set((1L, "v1", "d1"), (2L, "v2", "d2"), (3L, "v1", "d2")))
+    assert(files("d1") == d1Before, "a partition the batch does not touch was rewritten")
+    assert(spark.conf.getOption(modeKey) == modeBefore,
+      "the upsert changed the session's partition overwrite mode")
+  }
+
   test("validation: pii scan, accepted values, ranges, broken references") {
     val df = Seq(
       ("ok row", "CO", 5.0),

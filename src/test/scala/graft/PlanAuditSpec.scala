@@ -142,10 +142,10 @@ class PlanAuditSpec extends SparkSpecBase {
     "em_public_disasters" -> 1,
     "em_quality_metrics" -> 6,
     "em_scalar_suite" -> 0,
-    // round 16: Scd2.merge reads hard-deletes and batch presence off the
-    // ONE full-outer join (side-presence flags, the mergeCheckCols device)
-    // instead of separate anti/semi joins — 18 → 13
-    "em_snapshots" -> 13,
+    // three Scd2 merges, each one sort-merge join over two exchanges: no
+    // side-presence filter sits above the join (one explode over per-row
+    // outcomes), so outer-join elimination cannot split it per merge case
+    "em_snapshots" -> 6,
     "em_surrogate_ids" -> 0,
     "em_usage_metrics" -> 2,
     "em_weather_impacts" -> 0,
@@ -251,7 +251,9 @@ class PlanAuditSpec extends SparkSpecBase {
     "t9_array_suite" -> 0,
     "u10_snapshot_diff" -> 3,
     "u11_incremental_rollup" -> 2,
-    "u12_scd2_checkcols" -> 6,
+    // mergeCheckCols reads its four cases off one sort-merge join (one
+    // explode over per-row outcomes)
+    "u12_scd2_checkcols" -> 3,
     "u1_union_align" -> 0,
     "u3_union_missing_cols" -> 0,
     "u4_exact_dedup" -> 1,
@@ -450,6 +452,43 @@ class PlanAuditSpec extends SparkSpecBase {
           if (shuffles != budget)
             Some(s"$name: $shuffles shuffles != pinned $budget") else None
         ).flatten
+      }
+      assert(violations.isEmpty, violations.mkString("\n"))
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+  }
+
+  test("Scd2 merges plan one sort-merge join, two shuffle exchanges and no broadcast") {
+    // both strategies, both hard-delete flags: the four SCD2 cases come
+    // off ONE join — a side-presence filter above it would let outer-join
+    // elimination plan a different (broadcast) join per case
+    import java.sql.Timestamp
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, SortMergeJoinExec}
+    import graft.operators.Scd2
+    import spark.implicits._
+    val (t1, t2, t3) = (Timestamp.valueOf("2024-01-01 00:00:00"),
+      Timestamp.valueOf("2024-02-01 00:00:00"), Timestamp.valueOf("2024-03-01 00:00:00"))
+    val history = Scd2.init(Seq(("a", "x", t1), ("b", "y", t1)).toDF("id", "v", "updated_at"), "updated_at")
+    val batch = Seq(("a", "x2", t2), ("c", "z", t2)).toDF("id", "v", "updated_at")
+    val checkHistory = Scd2.initAt(Seq(("a", "x"), ("b", "y")).toDF("id", "v"), t1)
+    val checkBatch = batch.drop("updated_at")
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val merges = Seq(
+        "merge" -> Scd2.merge(history, batch, Seq("id"), "updated_at"),
+        "merge(invalidateHardDeletes)" -> Scd2.merge(history, batch, Seq("id"), "updated_at",
+          invalidateHardDeletes = true, deleteTs = Some(t3)),
+        "mergeCheckCols" -> Scd2.mergeCheckCols(checkHistory, checkBatch, Seq("id"), Seq("v"), t3),
+        "mergeCheckCols(invalidateHardDeletes)" -> Scd2.mergeCheckCols(checkHistory, checkBatch,
+          Seq("id"), Seq("v"), t3, invalidateHardDeletes = true))
+      val violations = merges.flatMap { case (name, df) =>
+        val plan = df.queryExecution.executedPlan
+        val joins = plan.collect { case j: BaseJoinExec => j.getClass.getSimpleName }
+        val shuffles = PlanAudit.shuffleCount(df)
+        val broadcasts = plan.collect { case b: BroadcastExchangeExec => b }.size
+        if (joins == Seq(classOf[SortMergeJoinExec].getSimpleName) && shuffles == 2 && broadcasts == 0) None
+        else Some(s"$name: joins $joins, $shuffles shuffles, $broadcasts broadcasts in:\n$plan")
       }
       assert(violations.isEmpty, violations.mkString("\n"))
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)

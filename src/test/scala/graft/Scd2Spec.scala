@@ -3,10 +3,13 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => Check}
+import org.scalacheck.Prop.propBoolean
+import org.scalacheck.util.Pretty
 
-import graft.operators.Scd2
+import graft.operators.{Scd2, Upsert}
 
-/** SCD2 snapshot-merge semantics (dbt timestamp strategy +
+/** SCD2 snapshot-merge semantics (dbt timestamp and check strategies +
   * invalidate_hard_deletes). */
 class Scd2Spec extends SparkSpecBase {
   import spark.implicits._
@@ -176,5 +179,104 @@ class Scd2Spec extends SparkSpecBase {
       .map(r => r.getString(0) -> Option(r.getString(1))).toMap
     assert(open == Map("k1" -> Some("now-set"), "k2" -> None))
     assert(h2.filter(!col("is_current")).count() == 2)
+  }
+
+  test("mergeCheckCols without invalidateHardDeletes keeps a key absent from the batch open") {
+    // dbt's check strategy leaves absent keys untouched unless
+    // invalidate_hard_deletes is set — as merge() does
+    val runTs1 = ts("2024-01-01 00:00:00")
+    val h1 = Scd2.initAt(Seq(("k1", "a"), ("k2", "b")).toDF("id", "v"), runTs1)
+    val h2 = Scd2.mergeCheckCols(h1, Seq(("k1", "a")).toDF("id", "v"), Seq("id"), Seq("v"),
+      ts("2024-02-01 00:00:00"))
+    val rows = h2.collect().map(r => (r.getString(0), r.getString(1),
+      r.getAs[Timestamp]("valid_from"), Option(r.getAs[Timestamp]("valid_to")), r.getBoolean(4))).toSet
+    assert(rows == Set(("k1", "a", runTs1, None, true), ("k2", "b", runTs1, None, true)))
+  }
+
+  // ---- both strategies against a plain-Scala model of the four SCD2 cases ----
+
+  // one history/batch row: composite key (g, k), one payload v (null
+  // allowed: the check strategy diffs null-safely), a version day
+  private case class Version(g: Int, k: String, v: Option[String], day: Int)
+  // a history row; `at` is the timestamp strategy's updatedAt column
+  private case class Hist(g: Int, k: String, v: Option[String], at: Int,
+      from: Int, to: Option[Int], current: Boolean)
+  private case class Scenario(open: Seq[Hist], closed: Seq[Hist], batch: Seq[Version])
+
+  private def day(d: Int) = ts(f"2024-01-$d%02d 00:00:00")
+  private val RunDay = 20 // check strategy's run time and the hard-delete time
+
+  private val scenarioGen: Gen[Scenario] = {
+    val payload = Gen.oneOf(Some("a"), Some("b"), None)
+    val perKey = for {
+      open <- Gen.option(Gen.zip(payload, Gen.choose(2, 4)))
+      closed <- Gen.option(Gen.zip(payload, Gen.choose(1, 2)))
+      // 0-2 batch versions with distinct days: a version may repeat the
+      // open row exactly (re-delivered), be older, or be newer
+      days <- Gen.choose(0, 2).flatMap(n => Gen.pick(n, 1 to 5))
+      vs <- Gen.listOfN(days.size, payload)
+    } yield (open, closed, days.zip(vs))
+    Gen.listOfN(12, perKey).map { keys =>
+      val perKeyRows = keys.zipWithIndex.map { case ((open, closed, batch), i) =>
+        val (g, k) = (i % 2, s"k${i / 2}")
+        (open.map { case (v, d) => Hist(g, k, v, d, d, None, current = true) },
+          closed.map { case (v, d) => Hist(g, k, v, d, d, Some(d + 1), current = false) },
+          batch.map { case (d, v) => Version(g, k, v, d) })
+      }
+      Scenario(perKeyRows.flatMap(_._1), perKeyRows.flatMap(_._2), perKeyRows.flatMap(_._3))
+    }
+  }
+
+  /** The four SCD2 cases per key. Timestamp strategy: the batch's latest
+    * version is newer than the open row's. Check strategy (one batch row
+    * per key: the latest): the payloads differ. */
+  private def model(s: Scenario, checkStrategy: Boolean, hardDeletes: Boolean): Seq[Hist] = {
+    val latest = s.batch.groupBy(b => (b.g, b.k)).map { case (key, vs) => key -> vs.maxBy(_.day) }
+    val open = s.open.map(o => (o.g, o.k) -> o).toMap
+    def opened(n: Version) =
+      Hist(n.g, n.k, n.v, n.day, if (checkStrategy) RunDay else n.day, None, current = true)
+    val reconciled = (open.keySet ++ latest.keySet).toSeq.flatMap { key =>
+      (open.get(key), latest.get(key)) match {
+        case (Some(o), Some(n)) if (if (checkStrategy) o.v != n.v else n.day > o.at) =>
+          Seq(o.copy(to = Some(if (checkStrategy) RunDay else n.day), current = false), opened(n))
+        case (Some(o), None) if hardDeletes => Seq(o.copy(to = Some(RunDay), current = false))
+        case (Some(o), _) => Seq(o)
+        case (None, Some(n)) => Seq(opened(n))
+        case (None, None) => Nil
+      }
+    }
+    s.closed ++ reconciled
+  }
+
+  test("both strategies match a plain-Scala SCD2 model over random histories and batches") {
+    def histDf(rows: Seq[Hist]) = rows.map(h => (h.g, h.k, h.v, day(h.at), day(h.from),
+        h.to.map(day), h.current))
+      .toDF("g", "k", "v", "updated_at", "valid_from", "valid_to", "is_current")
+    def sorted(rows: Seq[Hist]) = rows.map(_.toString).sorted
+    val prop = Prop.forAll(scenarioGen) { s =>
+      val history = histDf(s.open ++ s.closed)
+      val batch = s.batch.map(b => (b.g, b.k, b.v, day(b.day))).toDF("g", "k", "v", "updated_at")
+      // the check strategy's batch is one row per key: the latest version
+      val checkBatch = Upsert.latestByKey(batch, Seq("g", "k"), "updated_at", "updated_at")
+      Prop.all(Seq(false, true).flatMap { hardDeletes =>
+        val byTimestamp = Scd2.merge(history, batch, Seq("g", "k"), "updated_at",
+          invalidateHardDeletes = hardDeletes, deleteTs = Some(day(RunDay)))
+        val byCheck = Scd2.mergeCheckCols(history, checkBatch, Seq("g", "k"), Seq("v"),
+          day(RunDay), invalidateHardDeletes = hardDeletes)
+        Seq(
+          (s"timestamp, hardDeletes=$hardDeletes", byTimestamp, false),
+          (s"check, hardDeletes=$hardDeletes", byCheck, true)).map { case (label, df, check) =>
+          val got = df.select("g", "k", "v", "updated_at", "valid_from", "valid_to", "is_current")
+            .collect().toSeq.map { r =>
+              def d(i: Int) = r.getTimestamp(i).toLocalDateTime.getDayOfMonth
+              Hist(r.getInt(0), r.getString(1), Option(r.getString(2)), d(3), d(4),
+                if (r.isNullAt(5)) None else Some(d(5)), r.getBoolean(6))
+            }
+          (sorted(got) == sorted(model(s, check, hardDeletes))) :| label
+        }
+      }: _*)
+    }
+    val result = Check.check(Check.Parameters.default.withMinSuccessfulTests(8).withWorkers(1), prop)
+    assert(result.passed, Pretty.pretty(result))
   }
 }
