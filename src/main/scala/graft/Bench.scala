@@ -52,9 +52,10 @@ object Bench {
   // in the noise. Dropping the session releases the generated-class
   // loaders, letting the sweeper reclaim whole nmethod regions instead of
   // evicting live ones. Session startup is untimed. Spark's class cache
-  // (2000 classes, SparkSessionFactory) holds a stopped block's classes,
-  // and through them its executor loader, until they are evicted; the
-  // driver-side classes serve later blocks. The code heap stays far inside
+  // (2000 classes, SparkSessionFactory) keeps a stopped block's classes,
+  // all compiled under the driver's loader (local tasks run under it,
+  // DriverLoaderPlugin), so each of them serves later blocks, tasks
+  // included, until it is evicted. The code heap stays far inside
   // the code cache with it (build.sbt); same-window sf0.01 boards (4
   // cores) read 0 failed, 25 ceilings raised, and 2 and 0 retries
   // (st11/st13 at 11% host steal: executor run time tripled at flat CPU

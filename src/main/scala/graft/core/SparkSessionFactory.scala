@@ -32,14 +32,19 @@ import org.apache.spark.sql.SparkSession
   *     reuse their compiled classes instead of paying Janino again. The
   *     conf is static and JVM-wide: `CodeGenerator` sizes its cache once,
   *     from the conf active when it first initialises, so only the first
-  *     session of a JVM sets it. The cache key is (context class loader,
-  *     source), so the driver and each SparkContext's executor threads
-  *     hold their own copy of a class. The largest working set measured
-  *     is Bench's first 40-entry session block at sf0.01 (the memo
-  *     readers): 1,120 distinct classes, driver and executor copies
-  *     together, counted with an unbounded cache (4 cores, 2026-10); the
-  *     other four blocks compiled 564–878 more. The cache splits its size
-  *     over four LRU segments, hence the headroom above 1,120.
+  *     session of a JVM sets it. The largest working set measured is
+  *     Bench's first 40-entry session block at sf0.01 (the memo readers):
+  *     1,120 distinct classes, driver and executor copies together,
+  *     counted with an unbounded cache (4 cores, 2026-10); the other four
+  *     blocks compiled 564–878 more. The cache splits its size over four
+  *     LRU segments, hence the headroom above 1,120.
+  *   - one copy per generated class in local mode: the cache key is
+  *     (context class loader, source), and each session's tasks would
+  *     otherwise compile their own copy under that session's executor
+  *     loader. `DriverLoaderPlugin` (`spark.plugins`) runs local-mode tasks
+  *     under the driver's loader, so a task finds the class the driver
+  *     compiled, and so does every later session and SparkContext of the
+  *     JVM. On a cluster the plugin does nothing.
   */
 object SparkSessionFactory {
 
@@ -63,6 +68,7 @@ object SparkSessionFactory {
     .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     .config("spark.ui.enabled", "false")
     .config("spark.sql.codegen.cache.maxEntries", "2000")
+    .config("spark.plugins", "graft.core.DriverLoaderPlugin")
 
   /** Local session sized by SPARK_GRAFT_CPUS (driver contract default 32,
     * mirroring the grading harness), shuffle partitions = 32 per the

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.EmFunctions
 import graft.operators.IntervalJoin
+import graft.plans.ClockLiteral.clock_lit
 
 /** Marts layer: the unified-event union, daily weather impacts with the
   * alert interval join, and state disaster trend analytics.
@@ -83,7 +84,7 @@ object Marts {
       .withColumn("is_long_duration_event", coalesce(col("event_duration_days") > 30, lit(false)))
       .withColumn("is_high_impact_event", col("risk_level").isin("CRITICAL", "HIGH"))
       .withColumn("funding_eligibility", lit("FEMA_ELIGIBLE"))
-      .withColumn("last_updated", lit(runTs))
+      .withColumn("last_updated", clock_lit(runTs))
       .withColumnRenamed("fips_code", "state_fips_code")
   }
 
@@ -93,7 +94,7 @@ object Marts {
     * join (IntervalJoin.byDay) — hash join on the day key instead of a
     * BroadcastNestedLoopJoin, the 100 TB-safe shape. */
   def weatherImpacts(stgCoagmet: DataFrame, stgNoaa: DataFrame, asOf: Date, runTs: Timestamp): DataFrame = {
-    val obs = stgCoagmet.filter(col("observation_date") >= date_sub(lit(asOf), 90))
+    val obs = stgCoagmet.filter(col("observation_date") >= date_sub(clock_lit(asOf), 90))
 
     // Decimal-backed averages/sums (EmFunctions.dsum/davg): staged
     // measurements are 2-dp validated values — the reference declares them
@@ -124,7 +125,7 @@ object Marts {
       )
 
     val alerts = stgNoaa
-      .filter(col("effective_date") >= date_sub(lit(asOf), 90) && col("state_code") === "CO")
+      .filter(col("effective_date") >= date_sub(clock_lit(asOf), 90) && col("state_code") === "CO")
       .select(
         col("alert_id"), col("weather_event"), col("risk_level").as("alert_risk_level"),
         col("effective_date"), coalesce(col("expires_date"), col("effective_date")).as("end_date")
@@ -206,7 +207,7 @@ object Marts {
         col("weather_event").as("concurrent_alert_type"),
         col("alert_risk_level").as("concurrent_alert_risk"),
         lit("PUBLIC").as("data_classification"),
-        lit(runTs).as("analysis_timestamp"),
+        clock_lit(runTs).as("analysis_timestamp"),
         col("last_processed_at")
       )
       // one row per (station, day) by construction: the alert side was
@@ -225,7 +226,7 @@ object Marts {
     * counts (A1), seasonal distribution, LAG-based YoY (W1), agricultural
     * loss correlation (J2), and risk ratings. */
   def disasterAnalytics(events: DataFrame, stgUsda: DataFrame, asOf: Date, runTs: Timestamp): DataFrame = {
-    val history = events.filter(col("event_date") >= date_sub(lit(asOf), 3650))
+    val history = events.filter(col("event_date") >= date_sub(clock_lit(asOf), 3650))
 
     val trends = history
       .groupBy(col("state_code"), col("state_name"),
@@ -245,7 +246,7 @@ object Marts {
       )
 
     val agLosses = stgUsda
-      .filter(col("program_year") >= year(lit(asOf)) - 10)
+      .filter(col("program_year") >= year(clock_lit(asOf)) - 10)
       .groupBy(col("state_code"), col("program_year"))
       .agg(
         EmFunctions.dsum(col("indemnity_amount_usd")).cast("double").as("total_indemnity"),
@@ -263,7 +264,7 @@ object Marts {
       .drop(agLosses("state_code")).drop("program_year")
       .withColumn("analytics_id",
         EmFunctions.surrogateId(col("state_code"), col("disaster_year"), col("event_category")))
-      .withColumn("analysis_date", lit(asOf))
+      .withColumn("analysis_date", clock_lit(asOf))
       .withColumn("high_risk_event_percentage",
         round(col("high_risk_events") / col("event_count") * 100, 2))
       .withColumn("long_duration_percentage",
@@ -282,6 +283,6 @@ object Marts {
           .when(col("event_count") > col("prev_year_event_count") * 1.2, "INCREASING")
           .when(col("event_count") < col("prev_year_event_count") * 0.8, "DECREASING")
           .otherwise("STABLE"))
-      .withColumn("analytics_generated_at", lit(runTs))
+      .withColumn("analytics_generated_at", clock_lit(runTs))
   }
 }

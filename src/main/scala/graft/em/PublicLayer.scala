@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.EmFunctions
+import graft.plans.ClockLiteral.clock_lit
 
 /** Public/API serving layer (gold): API-shaped disaster view with public
   * codes, privacy-thresholded agricultural rollups, severity-ordered alert
@@ -24,7 +25,7 @@ object PublicLayer {
     val active = events.filter(
       col("event_type") === "DISASTER" &&
         col("data_classification") === "PUBLIC" &&
-        col("event_date") >= date_sub(lit(asOf), 365))
+        col("event_date") >= date_sub(clock_lit(asOf), 365))
 
     val w = Window.partitionBy("state_code", "event_date").orderBy("event_id")
     active.select(
@@ -47,14 +48,14 @@ object PublicLayer {
       col("risk_level"),
       when(col("is_high_impact_event"), "HIGH").otherwise("STANDARD").as("impact_level"),
       when(col("risk_level").isin("HIGH", "CRITICAL"), "ACTIVE_MONITORING_REQUIRED")
-        .when(col("event_end_date").isNull || col("event_end_date") > lit(asOf).cast("timestamp"), "ONGOING")
+        .when(col("event_end_date").isNull || col("event_end_date") > clock_lit(asOf).cast("timestamp"), "ONGOING")
         .otherwise("RESOLVED").as("status"),
       col("funding_eligibility").as("federal_assistance_available"),
       lit(true).as("is_active"),
       lit("PUBLIC").as("data_classification"),
       lit("emergency_management_api").as("data_source"),
-      lit(runTs).as("last_updated"),
-      date_format(lit(runTs), "yyyy-MM-dd HH:00:00").as("api_hour_bucket")
+      clock_lit(runTs).as("last_updated"),
+      date_format(clock_lit(runTs), "yyyy-MM-dd HH:00:00").as("api_hour_bucket")
     )
   }
 
@@ -62,7 +63,7 @@ object PublicLayer {
     * key (O2) used by the reference's API view (ops/public_ops.py:108-115). */
   def publicWeatherAlerts(stgNoaa: DataFrame, asOf: Date, runTs: Timestamp): DataFrame =
     stgNoaa
-      .filter(col("expires_datetime").isNull || col("expires_datetime") >= lit(asOf).cast("timestamp"))
+      .filter(col("expires_datetime").isNull || col("expires_datetime") >= clock_lit(asOf).cast("timestamp"))
       .select(
         col("alert_id").as("alert_api_id"),
         col("weather_event"),
@@ -78,7 +79,7 @@ object PublicLayer {
         EmFunctions.priorityRank(col("severity_level"),
           Seq("EXTREME", "SEVERE", "MODERATE", "MINOR")).as("severity_rank"),
         lit("ACTIVE").as("alert_status"),
-        lit(runTs).as("last_updated")
+        clock_lit(runTs).as("last_updated")
       )
       .orderBy(col("severity_rank"), col("effective_datetime").desc)
 
@@ -87,7 +88,7 @@ object PublicLayer {
     * privacyRound, guarded county loss ratio. */
   def publicAgriculturalData(stgUsda: DataFrame, asOf: Date): DataFrame =
     stgUsda
-      .filter(col("program_year") >= year(lit(asOf)) - 5 && col("data_classification") === "PUBLIC")
+      .filter(col("program_year") >= year(clock_lit(asOf)) - 5 && col("data_classification") === "PUBLIC")
       .groupBy("state_code", "county_code", "program_year", "commodity_name")
       .agg(
         count(lit(1)).as("policy_count"),
@@ -188,9 +189,9 @@ object PublicLayer {
       ).select(lit(name).as("dataset_name"), col("*"))
 
     val ev = leg(
-      events.filter(col("event_date") >= date_sub(lit(asOf), 365)),
+      events.filter(col("event_date") >= date_sub(clock_lit(asOf), 365)),
       "EMERGENCY_EVENTS",
-      col("event_date") >= date_sub(lit(asOf), 30),
+      col("event_date") >= date_sub(clock_lit(asOf), 30),
       col("risk_level").isin("HIGH", "CRITICAL"),
       col("event_category"),
       EmFunctions.davg(col("event_duration_days"), 6),
@@ -198,15 +199,15 @@ object PublicLayer {
     val wi = leg(
       impacts, // the gold view is already 90-day bounded, like the model's WHERE
       "WEATHER_IMPACTS",
-      col("impact_date") >= date_sub(lit(asOf), 7),
+      col("impact_date") >= date_sub(clock_lit(asOf), 7),
       col("impact_category").isin("MODERATE", "SEVERE"),
       col("impact_category"),
       EmFunctions.davg(col("total_impact_score"), 6),
       col("analysis_timestamp"))
     val an = leg(
-      analytics.filter(col("disaster_year") >= year(lit(asOf)) - 5),
+      analytics.filter(col("disaster_year") >= year(clock_lit(asOf)) - 5),
       "DISASTER_ANALYTICS",
-      col("disaster_year") === year(lit(asOf)),
+      col("disaster_year") === year(clock_lit(asOf)),
       col("annual_disaster_risk_rating").isin("HIGH", "VERY_HIGH"),
       col("event_category"),
       EmFunctions.davg(col("event_count"), 6),
@@ -224,9 +225,9 @@ object PublicLayer {
         .when(col("states_with_events") >= 30, "REGIONAL_COVERAGE")
         .when(col("states_with_events") >= 10, "MULTI_STATE_COVERAGE")
         .otherwise("LIMITED_COVERAGE").as("geographic_coverage"),
-      when(col("last_dataset_update") >= lit(runTs) - expr("INTERVAL 6 HOUR"), "CURRENT")
-        .when(col("last_dataset_update") >= lit(runTs) - expr("INTERVAL 24 HOUR"), "RECENT")
-        .when(col("last_dataset_update") >= lit(runTs) - expr("INTERVAL 48 HOUR"), "STALE")
+      when(col("last_dataset_update") >= clock_lit(runTs) - expr("INTERVAL 6 HOUR"), "CURRENT")
+        .when(col("last_dataset_update") >= clock_lit(runTs) - expr("INTERVAL 24 HOUR"), "RECENT")
+        .when(col("last_dataset_update") >= clock_lit(runTs) - expr("INTERVAL 48 HOUR"), "STALE")
         .otherwise("OUTDATED").as("dataset_freshness"),
       when(col("dataset_name") === "EMERGENCY_EVENTS" && col("total_events") === 0,
         "DATA_MISSING")
@@ -234,7 +235,7 @@ object PublicLayer {
           col("dataset_name").isin("EMERGENCY_EVENTS", "WEATHER_IMPACTS"),
           "NO_RECENT_ACTIVITY")
         .otherwise("OPERATIONAL").as("compliance_status"),
-      lit(runTs).as("performance_check_timestamp"))
+      clock_lit(runTs).as("performance_check_timestamp"))
   }
 
   /** data_quality_metrics: per-source profile rows unioned (A4) — totals,
@@ -246,7 +247,7 @@ object PublicLayer {
         sum(col(keyCol).isNull.cast("int")).cast("long").as("null_keys"),
         countDistinct(col(keyCol)).as("distinct_keys"),
         max(col(tsCol)).as("last_processed_at"),
-        count(when(col(tsCol) >= date_sub(lit(new Date(runTs.getTime)), 7), 1)).as("rows_last_7d")
+        count(when(col(tsCol) >= date_sub(clock_lit(new Date(runTs.getTime)), 7), 1)).as("rows_last_7d")
       ).select(
         lit(name).as("source_name"),
         col("total_rows"),

@@ -5,10 +5,15 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.plans.ClockLiteral.clock_lit
+
 /** Staging layer: standardize + validate the four raw feeds (SURVEY §2.2
   * P1–P3). Each transform is a pure DataFrame function with an injected
   * `runTs` clock (reference uses CURRENT_TIMESTAMP()/CURRENT_DATE()
-  * everywhere — injected here for reproducibility, SURVEY §7.4.3).
+  * everywhere — injected here for reproducibility, SURVEY §7.4.3). The
+  * clock enters plans as `clock_lit` (graft.plans.ClockLiteral), so a run
+  * at a new clock reuses the previous run's generated classes; Marts and
+  * PublicLayer do the same with `runTs` and `asOf`.
   *
   * Reference semantics: stg_fema_disasters.sql:20-54,
   * stg_noaa_weather.sql:19-79, stg_coagmet_data.sql:19-84,
@@ -20,8 +25,8 @@ object Staging {
     * (database.py:148-154, data_classification macro). */
   private def auditCols(df: DataFrame, retentionDays: Int, runTs: Timestamp): DataFrame =
     df.withColumn("data_classification", lit("PUBLIC"))
-      .withColumn("retention_date", date_add(to_date(lit(runTs)), retentionDays))
-      .withColumn("processed_at", lit(runTs))
+      .withColumn("retention_date", date_add(to_date(clock_lit(runTs)), retentionDays))
+      .withColumn("processed_at", clock_lit(runTs))
       .withColumn("processing_version", lit("1.0.0"))
 
   private def rangeValid(c: Column, lo: Double, hi: Double): Column =

@@ -15,7 +15,7 @@ import graft.operators.Upsert
   * RUNTIME NOTE: this environment has no Kafka broker and no
   * spark-sql-kafka connector jar, so these paths are compile-time
   * verified only; the DataFrame transforms they wrap (KafkaEnvelope
-  * wrap/unwrap, Upsert.upsertParquet, the PROCTIME stamp) are the tested
+  * wrap/unwrap, Upsert.upsertParquet) are the tested
   * surface — StreamingJobs exercises the identical pipeline over file
   * streams. Deploying against a real cluster needs only the connector
   * jar on the classpath and a reachable `bootstrapServers`.
@@ -62,8 +62,8 @@ object KafkaIO {
       .start()
 
   /** S11/ST1 consumer: keyed JSON envelope stream → typed rows (PERMISSIVE
-    * parse keeps malformed values for quarantine) stamped with a
-    * processing-time column (ST3 PROCTIME parity). */
+    * parse keeps malformed values for quarantine). No processing-time
+    * column, as in StreamingJobs.passThroughToBronze. */
   def readStream(spark: SparkSession, schema: StructType, cfg: KafkaConfig): DataFrame = {
     val reader = spark.readStream.format("kafka")
       .option("kafka.bootstrap.servers", cfg.bootstrapServers)
@@ -74,7 +74,6 @@ object KafkaIO {
     val envelope = capped.load()
       .select(col("key").cast("string").as("key"), col("value").cast("string").as("value"))
     KafkaEnvelope.unwrap(envelope, schema)
-      .withColumn("proc_time", current_timestamp())
   }
 
   /** ST2–ST4 over Kafka: the format("kafka") twin of
@@ -97,7 +96,7 @@ object KafkaIO {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         Upsert.upsertParquet(
           spark,
-          batch.drop("proc_time", "__msg_key", "__unparsed"),
+          batch.drop("__msg_key", "__unparsed"),
           bronzePath, keys, versionCol, tiebreak)
       }
       .start()

@@ -93,9 +93,12 @@ object StreamingJobs {
     } finally new scala.reflect.io.Directory(staged).deleteRecursively(): Unit
   }
 
-  /** ST2–ST4: pass-through pipeline — stream of typed rows, stamped with a
-    * processing-time column (Flink PROCTIME parity), checkpointed, upserted
-    * into a bronze parquet table via idempotent foreachBatch. */
+  /** ST2–ST4: pass-through pipeline — stream of typed rows, checkpointed,
+    * upserted into a bronze parquet table via idempotent foreachBatch.
+    * Bronze keeps no processing-time column, and none is added: the sink
+    * runs the stream's plan as an RDD, so a column dropped inside
+    * `foreachBatch` would still be computed, and a `current_timestamp()`
+    * one puts each micro-batch's time into its generated source. */
   def passThroughToBronze(
       spark: SparkSession,
       srcDir: String,
@@ -109,13 +112,12 @@ object StreamingJobs {
     val stream = spark.readStream
       .schema(schema)
       .parquet(srcDir)
-      .withColumn("proc_time", current_timestamp())
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // window-dedup upsert => re-delivered batches are idempotent
-        Upsert.upsertParquet(spark, batch.drop("proc_time"), bronzePath, keys, versionCol, tiebreak)
+        Upsert.upsertParquet(spark, batch, bronzePath, keys, versionCol, tiebreak)
       }
       .start()
   }

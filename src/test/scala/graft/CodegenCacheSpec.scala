@@ -20,7 +20,8 @@ class CodegenCacheSpec extends SparkSpecBase {
 
   test("a warm plan compiles nothing after more than 100 distinct plans ran since") {
     // a distinct literal per plan, from a base no other suite uses: each
-    // plan compiles its own classes, on the driver and on the executor
+    // plan compiles its own classes, once, on the driver (its tasks reuse
+    // them, CompileOnceSpec)
     val base = 1000000007L * (1 + scala.util.Random.nextInt(1 << 20))
     def plan(i: Int): Long =
       spark.range(0, 64, 1, 1).select((col("id") * lit(base + i)).as("x")).collect().map(_.getLong(0)).sum
