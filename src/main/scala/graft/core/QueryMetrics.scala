@@ -87,10 +87,11 @@ object QueryMetrics {
   /** The counters of every reading, in order. */
   val Keys: Seq[String] = Seq("jobs", "stages", "tasks", "task_ends", "executor_run_ms", "executor_cpu_ns",
     "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes", PeakKey, "sizing_misses",
-    "codegen_compiles", "codegen_ms")
+    "graph_local_solves", "codegen_compiles", "codegen_ms")
   private val Zero = Keys.map(_ -> 0L)
 
-  /** `n` occurrences of `counter` in `scope` (1 for a degraded path),
+  /** `n` occurrences of `counter` in `scope` (1 for a degraded or
+    * alternative path taken),
     * posted on the listener bus so it is ordered with, and read like, the
     * scope's job events. */
   final case class Counted(scope: String, counter: String, n: Long = 1) extends SparkListenerEvent

@@ -21,9 +21,13 @@ object DedupQueries {
     * pairs → iterative connected components, the most expensive DAG in
     * the dedup block, built once per (session, dir) for every reader
     * [[graft.SparkEntry.board]] declares, as a curation stack
-    * materializes the cluster assignment once per corpus snapshot. A lone
-    * oracle replay recomputes; the un-memoized build plan stays audited
-    * in PlanAuditSpec (`build:neardup_clusters`). */
+    * materializes the cluster assignment once per corpus snapshot. At
+    * board scale the pair checkpoint sizes to one partition, so the
+    * components are solved in one task ([[Graph.connectedComponents]]'s
+    * one-task path) rather than one Spark job per stage of every round. A
+    * lone oracle replay recomputes; the un-memoized build plan stays
+    * audited in PlanAuditSpec (`build:neardup_clusters`) with the
+    * distributed loop forced, the shape a 100 TB corpus runs. */
   private val clustersMemo = graft.core.FrameMemo("neardup_clusters")
 
   /** Session-memoized candidate-pair statistics frame

@@ -57,12 +57,17 @@ object CheckpointBridge {
     * in single-wave tasks (what AQE's coalescing achieved per exchange,
     * achieved here once for every downstream stage), while a 100 TB
     * frame saturates the configured parallelism — no constant tuned to
-    * either scale. When the storage-info lookup has no entry for the
-    * checkpoint (blocks dropped, or block-status reporting not caught up)
-    * the count falls back to the checkpoint's own partition count, under
-    * the same clamp: the layout the data already has, never a silent
-    * single partition. The miss adds 1 to the `sizing_misses` counter of
-    * the calling thread's [[graft.core.QueryMetrics]] scope. */
+    * either scale. The bytes are read from the block manager master,
+    * which every block put reports to before its task ends, so the size
+    * of a checkpoint whose job has returned is exact on every call. (The
+    * `getRDDStorageInfo` view is fed by the listener bus instead and can
+    * lag the job that wrote the blocks; the graph operators pick a
+    * one-task or a distributed path on this count, so a lagging read
+    * would pick the path by timing.) When the checkpoint has no block
+    * left (blocks dropped) the count falls back to its own partition
+    * count, under the same clamp: the layout the data already has, never
+    * a silent single partition. The miss adds 1 to the `sizing_misses`
+    * counter of the calling thread's [[graft.core.QueryMetrics]] scope. */
   def sizedPartitionsFor(checkpointed: org.apache.spark.sql.DataFrame): Int = {
     val conf = checkpointed.sparkSession.sessionState.conf
     val maxP = conf.numShufflePartitions
@@ -71,16 +76,28 @@ object CheckpointBridge {
     val wanted = backingRdd(checkpointed) match {
       case Some(rdd) =>
         val sc = checkpointed.sparkSession.sparkContext
-        sc.getRDDStorageInfo.find(_.id == rdd.id) match {
-          case Some(i) => (i.memSize + i.diskSize + advisory - 1) / advisory
-          case None =>
-            graft.core.QueryMetrics.count(sc, "sizing_misses")
-            rdd.getNumPartitions.toLong
+        val blocks = sc.env.blockManager.master.getStorageStatus.toSeq
+          .flatMap(_.rddBlocks.collect { case (org.apache.spark.storage.RDDBlockId(id, _), s) if id == rdd.id => s })
+        if (blocks.nonEmpty) (blocks.map(s => s.memSize + s.diskSize).sum + advisory - 1) / advisory
+        else {
+          graft.core.QueryMetrics.count(sc, "sizing_misses")
+          rdd.getNumPartitions.toLong
         }
       case None => 0L
     }
     math.max(1, math.min(maxP.toLong, wanted)).toInt
   }
+
+  /** A DataFrame over rows already in Catalyst's internal form — the
+    * output of a solver that read a checkpoint's `queryExecution.toRdd`
+    * (graft.operators.Graph's one-task path). `internalCreateDataFrame`
+    * skips the external-Row encoder both ways; `schema` must describe the
+    * rows exactly, as for any LogicalRDD. */
+  def fromInternalRows(
+      spark: org.apache.spark.sql.SparkSession,
+      rows: RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].internalCreateDataFrame(rows, schema)
 
   /** Eager `localCheckpoint` that KEEPS a usable hash partitioning.
     *

@@ -19,7 +19,7 @@ class BenchArtifactSpec extends AnyFunSuite {
   private val results =
     Seq((oddName, 0.12345, 1), ("failed_q", -1.0, 0)) ++ (1 to 12).map(i => (f"q$i%02d", i.toDouble, 0))
   private def reading(jobs: Long) = ListMap("jobs" -> jobs, "tasks" -> 3 * jobs, "task_ends" -> 3 * jobs,
-    "codegen_compiles" -> 2 * jobs, "codegen_ms" -> 15 * jobs)
+    "graph_local_solves" -> jobs % 2, "codegen_compiles" -> 2 * jobs, "codegen_ms" -> 15 * jobs)
   // counters for every entry and both memos; the idle memo's are not charged
   private val counters = (results.map(_._1) ++ Seq("build:spec_built", "build:spec_idle"))
     .zipWithIndex.map { case (k, i) => k -> reading(i.toLong) }.toMap
@@ -67,6 +67,13 @@ class BenchArtifactSpec extends AnyFunSuite {
     }
     // the keys are those of every QueryMetrics reading
     assert(Set("codegen_compiles", "codegen_ms").subsetOf(graft.core.QueryMetrics.Keys.toSet))
+  }
+
+  test("each counters record says how often its entry solved a graph recurrence in one task") {
+    for (k <- keys(full.get("counters")))
+      assert(full.get("counters").get(k).get("graph_local_solves").asLong ==
+        counters(k)("graph_local_solves"), k)
+    assert(graft.core.QueryMetrics.Keys.contains("graph_local_solves"))
   }
 
   test("numbers keep their decimal places; the -1 marker counts as zero in the total") {

@@ -75,12 +75,34 @@ class PartitionedCheckpointSpec extends SparkSpecBase {
       // a hit sizes by the persisted bytes: a few KB is one advisory partition
       assert(QueryMetrics.scoped(sc, scope)(sizedPartitionsFor(cp)) === 1)
       assert(metrics.take(scope)("sizing_misses") === 0)
-      // with the blocks gone the storage-info lookup misses; the count is the
+      // with the blocks gone the block lookup misses; the count is the
       // layout the checkpoint has, not a silent single partition, and the
       // miss shows in the scope's counters
       backingRdd(cp).get.unpersist(blocking = true)
       assert(QueryMetrics.scoped(sc, scope)(sizedPartitionsFor(cp)) === 8)
       assert(metrics.take(scope)("sizing_misses") === 1)
     } finally metrics.detach()
+  }
+
+  test("sizedPartitionsFor reads the blocks a returned job wrote even while the status store lags") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graftbridge.CheckpointBridge.{backingRdd, sizedPartitionsFor}
+    import org.apache.spark.sql.graftbridge.StatusQueueBridge
+    val sc = spark.sparkContext
+    // a listener that holds up the status queue at every job start, the
+    // lag of a busy host: the block updates of the checkpoint job queue
+    // behind it, so getRDDStorageInfo has no entry for the checkpoint when
+    // its job has returned
+    val slow = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = Thread.sleep(1000)
+    }
+    StatusQueueBridge.add(sc, slow)
+    try {
+      val cp = spark.range(0, 1000, 1, 8).toDF("x").localCheckpoint(true)
+      val id = backingRdd(cp).get.id
+      assert(!sc.getRDDStorageInfo.exists(_.id == id))
+      // a few KB: one advisory partition, not the 8 of a lookup miss
+      assert(sizedPartitionsFor(cp) === 1)
+    } finally StatusQueueBridge.remove(sc, slow)
   }
 }

@@ -156,8 +156,13 @@ class PlanAuditSpec extends SparkSpecBase {
     // per-round edge⋈labels joins read the edge side in place — 11 → 8
     // (the 8th is the build's own sizing repartition, visible only under
     // the audit's AQE-off conditions; at runtime it replaces four
-    // per-round edge exchanges — probed tasks 137 → 71)
-    "g2_label_propagation" -> 8,
+    // per-round edge exchanges — probed tasks 137 → 71). 8 → 7 once the
+    // audit forces the distributed loop (distributedGraphs): the sized
+    // count is then the session's shuffle partitions, the width every
+    // exchange of the loop has, where the old sf0.001 audit measured one
+    // partition and paid the re-alignment exchange of a layout that now
+    // takes the one-task path instead
+    "g2_label_propagation" -> 7,
     // round 15: sparse half-rounds moved the node-spine restore out of
     // the per-iteration checkpoints into the returned plan — the 2
     // exchanges are the epilogue's two |V|-row spine left joins.
@@ -165,8 +170,10 @@ class PlanAuditSpec extends SparkSpecBase {
     // count) re-aligns to the score frames' exchange width in the
     // epilogue under the audit's AQE-off conditions; at runtime the
     // declared edge/node layouts drop the operator from 84 stage-jobs /
-    // 171 tasks to 75 / 100 (probed, same window: 4.39 → 3.72 s)
-    "g3_hits" -> 3,
+    // 171 tasks to 75 / 100 (probed, same window: 4.39 → 3.72 s). 3 → 2
+    // with the distributed loop forced, as for g2: at the shuffle
+    // partition count the node spine already has the score frames' width
+    "g3_hits" -> 2,
     "j10_json_extract" -> 0,
     "j11_overlap_join" -> 3,
     "j1_dim_enrich_agg" -> 1,
@@ -315,16 +322,29 @@ class PlanAuditSpec extends SparkSpecBase {
       shuffles = PlanAudit.shuffleCount(df))
   }
 
+  /** Runs `body` with the graph recurrences on their distributed loop.
+    * Every sf0.001 graph sizes its edge checkpoint to one partition and
+    * would take the one-task path (one checkpoint, no exchange to audit);
+    * a few-byte advisory partition size sizes it past one partition, so
+    * the pins below keep auditing the plan a 100 TB graph runs. With AQE
+    * off nothing else reads the advisory size. */
+  private def distributedGraphs[T](body: => T): T = {
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "16")
+    try body finally spark.conf.set(key, prev)
+  }
+
   private lazy val fired: Map[String, Either[String, Fired]] = {
     // AQE off for the WHOLE audit pass: shuffleCount needs the concrete
     // executedPlan (under AQE it's an opaque adaptive wrapper), and the
     // budget table is defined at these exact conditions
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    try distributedGraphs(SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       name -> (try Right(audit(fn))
       catch { case e: Throwable => Left(s"${String.valueOf(e.getMessage).take(120)}") })
-    }.toMap
+    }.toMap)
     finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
@@ -412,7 +432,7 @@ class PlanAuditSpec extends SparkSpecBase {
     // the post-checkpoint remainder depends on the build-time AQE mode —
     // the audit pins the AQE-off shape, the same conditions `fired` uses
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    try distributedGraphs {
       // (name, frame, pinned exchange count, bounded-BNLJ reason or null —
       // same contract as bnljBounded: the only tolerated nested-loop is a
       // provably tiny broadcast side)
