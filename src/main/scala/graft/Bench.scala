@@ -44,23 +44,6 @@ object Bench {
   private[graft] val timedBoard: Seq[String] =
     SparkEntry.board.filter(_.untimedBecause.isEmpty).map(_.name)
 
-  // Recycle the SparkSession every BlockSize queries: one long-lived session
-  // running 150+ queries x 2 passes outgrows the JVM code cache, and the
-  // sweeper evicts hot codegen methods from ROTATING victims — a map-only
-  // query intermittently times 10-50x its isolated cost (j10 11.5 s
-  // official vs 0.2 s isolated, round 5), so a real regression could hide
-  // in the noise. Dropping the session releases the generated-class
-  // loaders, letting the sweeper reclaim whole nmethod regions instead of
-  // evicting live ones. Session startup is untimed. Spark's class cache
-  // (2000 classes, SparkSessionFactory) keeps a stopped block's classes,
-  // all compiled under the driver's loader (local tasks run under it,
-  // DriverLoaderPlugin), so each of them serves later blocks, tasks
-  // included, until it is evicted. The code heap stays far inside
-  // the code cache with it (build.sbt); same-window sf0.01 boards (4
-  // cores) read 0 failed, 25 ceilings raised, and 2 and 0 retries
-  // (st11/st13 at 11% host steal: executor run time tripled at flat CPU
-  // time) against the 100-class cache's 0 and 23 (at 7% and 37% steal).
-  private val BlockSize = 40
   // Two timed passes per query, per-query MIN: this host shows bursty
   // hypervisor steal that inflates a rotating victim 5-20x per pass
   // (BASELINE.md wave-7 note: three same-day full runs spanned 155-208 s
@@ -194,20 +177,11 @@ object Bench {
       .flatMap(n => readers.getOrElse(n, Seq(n))).distinct
   }
 
-  /** Session blocks of at most `size` entries, memo readers placed first,
-    * so all readers of a memo share the block whose warmup pass builds it:
-    * one build per memo per run, and a retried pass hits the live memo.
-    * Within a block the readers run last, so a build follows the block's
-    * other warmups instead of a cold JVM. Fails if one memo's readers
-    * would span two blocks. */
-  private[graft] def blocks(names: Seq[String], memos: String => Set[String],
-      size: Int = BlockSize): Seq[Seq[String]] = {
-    val placed = names.sortBy(n => (memos(n).isEmpty, n)).grouped(size).toSeq
-    val split = placed.flatMap(_.flatMap(memos).distinct).groupBy(identity)
-      .collect { case (m, in) if in.size > 1 => m }
-    require(split.isEmpty, s"readers of ${split.toSeq.sorted.mkString(", ")} would span two blocks")
-    placed.map(_.sortBy(n => (memos(n).nonEmpty, n)))
-  }
+  /** The run order of a selection: memo readers after every other entry,
+    * so each memo builds once per run, in the warm-up pass, after the JVM
+    * has warmed on the rest of the board. */
+  private[graft] def runOrder(names: Seq[String], memos: String => Set[String]): Seq[String] =
+    names.sortBy(memos(_).nonEmpty)
 
   /** The two stdout lines of a run: the full per-query record first (for
     * the build log / BASELINE.md), then a compact summary as the LAST
@@ -226,7 +200,7 @@ object Bench {
       memos: Seq[(String, Long, Long, Double)], counters: Map[String, ListMap[String, Long]],
       refTimes: Map[String, Double], steal: Option[(Long, Double)]): (String, String) = {
     // Charge memo builds to the timed board: min-of-two passes report only
-    // WARM consumer times, and the block's warmup pass builds each memo
+    // WARM consumer times, and the warm-up pass builds each memo
     // once. Every memo that recomputed rides the board as `build:<memo>`,
     // valued at the wall seconds of its builds (eager localCheckpoint
     // included) as FrameMemo measured them, so the charge reconciles with
@@ -247,7 +221,7 @@ object Bench {
       .put("cores", Runtime.getRuntime.availableProcessors)
       .put("load_avg_1m",
         java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage)
-      .put("cold", false).put("recycle_every", BlockSize).put("passes", Passes)
+      .put("cold", false).put("passes", Passes)
       .put("retry_ceiling_sec", RetryCeilingSec)
       .put("ceiling_ref", if (refTimes.isEmpty) null else CeilingRefPath)
     // every registered FrameMemo: hits vs recomputes per memo — the
@@ -315,72 +289,45 @@ object Bench {
     // Spark counters per timed query (its reported pass) and per memo
     // build (summed over the run, as build_sec is)
     val counters = scala.collection.mutable.Map.empty[String, ListMap[String, Long]]
-    val results = blocks(names, memos).flatMap { blockNames =>
-      val block = blockNames.map(n => n -> runs(n))
-      val spark = graft.core.SparkSessionFactory.local("graft-bench")
-      val sc = spark.sparkContext
-      val metrics = QueryMetrics.attach(sc)
-      // Warm the fresh JVM session: parquet footers + one pass through the
-      // shuffle, join, window and codegen machinery so the first timed
-      // query doesn't absorb one-time JIT/session costs.
-      Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "documents", "embeddings").foreach { t =>
-        graft.core.Tables.parquet(spark, s"$sfDir/$t.parquet").limit(1).count(): Unit
-      }
-      locally {
-        import org.apache.spark.sql.expressions.Window
-        import org.apache.spark.sql.functions._
-        val o = graft.core.Tables.parquet(spark, s"$sfDir/orders.parquet").limit(5000)
-        val c = graft.core.Tables.parquet(spark, s"$sfDir/customer.parquet").limit(5000)
-        o.join(c, col("o_custkey") === col("c_custkey"))
-          .groupBy("o_orderstatus").agg(sum("o_totalprice"), countDistinct("o_custkey"))
-          .count(): Unit
-        o.select(row_number().over(
-          Window.partitionBy("o_orderstatus").orderBy("o_orderkey")).as("rn")).count(): Unit
-      }
-      // Untimed warmup pass over THIS block: JIT-compiles each query's
-      // generated code and fills the footer/OS page caches, so the timed
-      // pass measures steady-state throughput (what a long-running
-      // cluster job sees), not one-time JVM warmup.
-      block.foreach { case (_, fn) =>
-        try { force(fn(spark, sfDir)): Unit } catch { case _: Throwable => () }
-      }
-      val timed = block.map { case (name, fn) =>
-        def onePass(): (Double, Boolean, ListMap[String, Long]) = {
-          val t0 = System.nanoTime()
-          val ok = try { QueryMetrics.scoped(sc, name)(force(fn(spark, sfDir))); true }
-            catch { case _: Throwable => false }
-          val t = (System.nanoTime() - t0) / 1e9
-          (t, ok, metrics.take(name))
-        }
-        // min over SUCCESSFUL passes only: a pass that throws typically
-        // fails fast, and letting its short elapsed time win the min would
-        // mask a regression behind a fast failure. All-passes-failed
-        // records the -1 failure marker (never a time) and the counters
-        // of the last failed pass.
-        val first = (1 to Passes).map(_ => onePass())
-        var (best, _, bestCounters) = first.filter(_._2).minByOption(_._1)
-          .getOrElse((-1.0, false, first.last._3))
-        var retries = 0
-        val ceiling = ceilingFor(refTimes, name)
-        while (best > ceiling && retries < MaxRetries) {
-          retries += 1
-          val (t, ok, c) = onePass()
-          if (ok && t < best) { best = t; bestCounters = c }
-        }
-        counters(name) = bestCounters
-        (name, best, retries)
-      }
-      FrameMemo.allStats.foreach { case (n, _, _) =>
-        val k = s"build:$n"
-        val c = metrics.take(k)
-        counters(k) = counters.get(k).fold(c)(QueryMetrics.merge(_, c))
-      }
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      timed
+    val spark = graft.core.SparkSessionFactory.local("graft-bench")
+    val sc = spark.sparkContext
+    val metrics = QueryMetrics.attach(sc)
+    val ordered = runOrder(names, memos).map(n => n -> runs(n))
+    // Untimed warm-up pass over the whole selection: JIT-compiles each
+    // query's generated code, fills the footer/OS page caches and builds
+    // each memo, so the timed passes measure steady-state throughput (what
+    // a long-running cluster job sees), not one-time JVM warmup.
+    ordered.foreach { case (_, fn) =>
+      try { force(fn(spark, sfDir)): Unit } catch { case _: Throwable => () }
     }
+    val results = ordered.map { case (name, fn) =>
+      def onePass(): (Double, Boolean, ListMap[String, Long]) = {
+        val t0 = System.nanoTime()
+        val ok = try { QueryMetrics.scoped(sc, name)(force(fn(spark, sfDir))); true }
+          catch { case _: Throwable => false }
+        val t = (System.nanoTime() - t0) / 1e9
+        (t, ok, metrics.take(name))
+      }
+      // min over SUCCESSFUL passes only: a pass that throws typically
+      // fails fast, and letting its short elapsed time win the min would
+      // mask a regression behind a fast failure. All-passes-failed
+      // records the -1 failure marker (never a time) and the counters
+      // of the last failed pass.
+      val first = (1 to Passes).map(_ => onePass())
+      var (best, _, bestCounters) = first.filter(_._2).minByOption(_._1)
+        .getOrElse((-1.0, false, first.last._3))
+      var retries = 0
+      val ceiling = ceilingFor(refTimes, name)
+      while (best > ceiling && retries < MaxRetries) {
+        retries += 1
+        val (t, ok, c) = onePass()
+        if (ok && t < best) { best = t; bestCounters = c }
+      }
+      counters(name) = bestCounters
+      (name, best, retries)
+    }
+    FrameMemo.allStats.foreach { case (n, _, _) => counters(s"build:$n") = metrics.take(s"build:$n") }
+    spark.stop()
     val steal = for ((s0, t0) <- stealStart; (s1, t1) <- stealSample() if t1 > t0)
       yield (s1 - s0, (s1 - s0).toDouble / (t1 - t0) * 100.0)
     val (full, compact) =

@@ -21,9 +21,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Lifecycle (bounded, not until-JVM-death), ported unchanged from the
   * proven trade-pairs implementation:
   *   - each entry carries the checkpointed RDD handle so its blocks are
-  *     releasable — [[release]] frees one session's entries (call on
-  *     session recycle; eager unpersist, so no returned frame may still
-  *     be in flight);
+  *     releasable — [[release]] frees one session's entries (call to
+  *     free a live session's memo blocks; eager unpersist, so no returned
+  *     frame may still be in flight);
   *   - every access purges entries whose session has stopped (their
   *     blocks died with the executors; the map reference was the leak);
   *   - insertion beyond [[maxEntries]] drops the oldest entry —
@@ -125,9 +125,10 @@ final class FrameMemo private (val name: String, val maxEntries: Int) {
 
   /** Release hook: frees the checkpoint blocks and map entries of one
     * session — or, with the None default, of EVERY entry, live sessions
-    * included. Call when recycling a long-lived session, and only when no
-    * previously-returned DataFrame is still in flight: the blocks are
-    * unpersisted EAGERLY here (the recycle contract — Wave11Spec pins it)
+    * included. Call to free a session's memo blocks while it lives on, and
+    * only when no previously-returned DataFrame is still in flight: the
+    * blocks are unpersisted EAGERLY here (the release contract — Wave11Spec
+    * pins it)
     * and a localCheckpoint's truncated lineage cannot recompute them for
     * a concurrent reader. The next access recomputes from source; results
     * are unaffected. */

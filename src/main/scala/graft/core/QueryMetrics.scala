@@ -132,11 +132,4 @@ object QueryMetrics {
   /** Adds 1 to `counter` of this thread's current scope; no-op outside one. */
   def count(sc: SparkContext, counter: String): Unit =
     Option(sc.getLocalProperty(ScopeProperty)).foreach(s => ListenerBusBridge.post(sc, Counted(s, counter)))
-
-  /** Sums two readings of one scope; the peak keeps the larger value. */
-  def merge(a: ListMap[String, Long], b: ListMap[String, Long]): ListMap[String, Long] =
-    ListMap.from((a.keys ++ b.keys.filterNot(a.contains)).map { k =>
-      val (x, y) = (a.getOrElse(k, 0L), b.getOrElse(k, 0L))
-      k -> (if (k == PeakKey) math.max(x, y) else x + y)
-    })
 }

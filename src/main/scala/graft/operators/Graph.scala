@@ -39,9 +39,10 @@ import org.apache.spark.sql.types._
   * single task over that checkpoint and checkpoints the result once
   * ([[solveInOneTask]]). The replay is row for row the distributed result
   * on every input, converged or not: the same round bounds and
-  * tie-breaks, the same handling of null endpoints (SQL equality never
-  * matches null), and exact 64-bit arithmetic (`Math.*Exact`, as the
-  * engine's ANSI SQL evaluates it, so an overflow fails both paths). The
+  * tie-breaks, and exact 64-bit arithmetic (`Math.*Exact`, as the
+  * engine's ANSI SQL evaluates it, so an overflow fails both paths). An
+  * edge with a null endpoint fails every operator on both paths, checked
+  * before the edge checkpoint ([[nonNullEndpoints]]). The
   * gate reads the size the loop already measures, so nothing parallel is
   * lost and there is no option to set; each time it is taken the calling
   * scope's `graph_local_solves` counter ([[graft.core.QueryMetrics]])
@@ -67,6 +68,7 @@ object Graph {
     val s0 = edges
       .select(col(srcCol).as("a"), col(dstCol).as("b"))
       .unionByName(edges.select(col(dstCol).as("a"), col(srcCol).as("b")))
+      .transform(nonNullEndpoints("connectedComponents", "a", "b"))
       .distinct()
       .localCheckpoint(true)
     val p = sizedPartitionsFor(s0)
@@ -246,6 +248,7 @@ object Graph {
     // parallelism; a conf constant would be wrong at one end or the other.
     val e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
+      .transform(nonNullEndpoints("pageRankInt", "src", "dst"))
       .distinct()
       .localCheckpoint(true)
     val p = sizedPartitionsFor(e)
@@ -313,18 +316,20 @@ object Graph {
       // Unlike connectedComponents (unbounded rounds, convergence check per
       // round), the iteration count here is FIXED and small, so the rounds
       // compose into ONE lazy plan with no per-round materialization
-      // barrier: the only checkpoints are the shared edge/node frames above,
-      // and Catalyst plans all `iterations` shuffle rounds in a single job.
-      // For large iteration counts (>~10) a periodic checkpoint would bound
-      // plan growth; at the analytic 5-20 range this is measurably faster
-      // (no 5x blocking materialization of the |V|-row rank frame).
+      // barrier: Catalyst plans all `iterations` shuffle rounds in a single
+      // job, the checkpoint of the result. For large iteration counts
+      // (>~10) a periodic checkpoint would bound plan growth; at the
+      // analytic 5-20 range this is measurably faster (no 5x blocking
+      // materialization of the |V|-row rank frame).
       if (!redistributeDangling) {
         var ranks = nodes.withColumn("rank", lit(scale))
         for (_ <- 1 to iterations) ranks = round(ed, nodes, None)(ranks)
-        // ed/nodes checkpoint blocks MUST stay persisted: the returned lazy
-        // plan re-reads both on every action (they are the loop's shared
-        // inputs).
-        ranks
+        // checkpointing the |V|-row result lets the |E|-row shared inputs
+        // go now: a returned lazy plan would keep them persisted until a
+        // driver GC lets the ContextCleaner find the frame unreachable
+        val out = ranks.localCheckpoint(true)
+        Seq(nodes, ed).foreach(backingRdd(_).foreach(_.unpersist(false)))
+        out
       } else {
         // dangling node set (no out-edges) is static: checkpoint once,
         // keyed like nodes so the per-round dangling-mass join reads it
@@ -411,6 +416,7 @@ object Graph {
   ): DataFrame = {
     val e0 = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
+      .transform(nonNullEndpoints("labelPropagation", "src", "dst"))
       .distinct()
       .localCheckpoint(true)
     val p = sizedPartitionsFor(e0)
@@ -453,16 +459,19 @@ object Graph {
         val noIn = noInOf(e, allNodes).localCheckpoint(true)
         var labels = allNodes.withColumn("label", col("node"))
         for (_ <- 1 to iterations) labels = round(e, noIn)(labels)
-        (named(labels), allNodes)
+        // the rounds run in the result's checkpoint job, so the |E|-row edge
+        // frame goes now (the pageRankInt lazy path's release)
+        val out = named(labels).localCheckpoint(true)
+        Seq(e, noIn).foreach(backingRdd(_).foreach(_.unpersist(false)))
+        if (isolated.isEmpty) backingRdd(allNodes).foreach(_.unpersist(false))
+        (out, allNodes)
       }
     isolated match {
       case None => communities
       case Some(n) =>
         // every round's output node set equals allNodes by construction
         // (dst-grouped rows ∪ the noIn carry-forward), so the anti-join
-        // probes the CHECKPOINTED node frame — probing `communities`
-        // would embed the n-round LP plan twice and execute every
-        // shuffle round a second time per action
+        // probes the node frame, kept persisted for it above
         val extra = n.select(col(isolatedCol).cast("long").as("node")).distinct()
           .join(allNodes, Seq("node"), "left_anti")
           .withColumn("community", col("node"))
@@ -523,6 +532,7 @@ object Graph {
     require(iterations >= 1, s"hitsInt needs iterations >= 1, got $iterations")
     val e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
+      .transform(nonNullEndpoints("hitsInt", "src", "dst"))
       .distinct()
       .localCheckpoint(true)
     val p = sizedPartitionsFor(e)
@@ -636,6 +646,18 @@ object Graph {
       .select(col("cluster_id"), col("id").as("keep_doc_id"), col("cluster_size"))
   }
 
+  /** Fails the query at the first edge with a null endpoint: SQL equality
+    * never matches null, so such an edge would join nothing yet form its
+    * own group and node row, a node no recurrence here defines.
+    * assert_true yields null on every clean row (the filter keeps them
+    * all), so the check rides the edge checkpoint's job (the [[Scd2]]
+    * `updatedAt` idiom). */
+  private def nonNullEndpoints(op: String, a: String, b: String)(e: DataFrame): DataFrame =
+    e.filter(assert_true(col(a).isNotNull && col(b).isNotNull,
+      concat(lit(s"Graph.$op: edge ("), coalesce(col(a).cast("string"), lit("null")), lit(", "),
+        coalesce(col(b).cast("string"), lit("null")),
+        lit(") has a null endpoint, which joins nothing; drop or fill it upstream"))).isNull)
+
   /** Distinct endpoints of a (src, dst) frame as one `node` column. */
   private def nodesOf(e: DataFrame): DataFrame =
     e.select(col("src").as("node")).unionByName(e.select(col("dst").as("node"))).distinct()
@@ -664,33 +686,25 @@ object Graph {
     case _ => false
   }
 
-  /** A solver's view of a checkpointed (src, dst) edge list: endpoint
-    * values indexed densely in first-seen order, index `n` standing for a
-    * null endpoint. SQL equality never matches null, so a null endpoint
-    * joins nothing, yet it forms its own group and its own node row. */
+  /** A solver's view of a checkpointed (src, dst) edge list, whose
+    * endpoints are never null ([[nonNullEndpoints]]): endpoint values
+    * indexed densely in first-seen order. */
   private final class EdgeIndex(rows: Iterator[InternalRow], dt: DataType) {
     private val index = mutable.HashMap.empty[Any, Int]
     private val values = mutable.ArrayBuffer.empty[Any]
-    var hasNull = false
-    private def id(r: InternalRow, i: Int): Int =
-      if (r.isNullAt(i)) { hasNull = true; -1 }
-      else {
-        val v = r.get(i, dt)
-        index.getOrElseUpdate(v, { values += v; values.size - 1 })
-      }
-    private val ends = {
+    private def id(r: InternalRow, i: Int): Int = {
+      val v = r.get(i, dt)
+      index.getOrElseUpdate(v, { values += v; values.size - 1 })
+    }
+    val (src, dst) = {
       val (s, d) = (new mutable.ArrayBuilder.ofInt, new mutable.ArrayBuilder.ofInt)
       rows.foreach { r => s += id(r, 0); d += id(r, 1) }
       (s.result(), d.result())
     }
+    /** Distinct nodes: `count()` of the distributed node frame. */
     val n: Int = values.size
-    val src: Array[Int] = ends._1.map(i => if (i < 0) n else i)
-    val dst: Array[Int] = ends._2.map(i => if (i < 0) n else i)
     def value(i: Int): Any = values(i)
     def long(i: Int): Long = values(i).asInstanceOf[Long]
-    /** Distinct node rows, the null node included: `count()` of the
-      * distributed node frame. */
-    def nodeRows: Long = n + (if (hasNull) 1L else 0L)
   }
 
   /** [[connectedComponents]]' rounds over the symmetric (a, b) rows:
@@ -709,52 +723,38 @@ object Graph {
       val next = comp.clone()
       for (k <- g.src.indices) {
         val (a, b) = (g.src(k), g.dst(k))
-        if (a < n && b < n && comp(b) < next(a)) next(a) = comp(b)
+        if (comp(b) < next(a)) next(a) = comp(b)
       }
       changed = !java.util.Arrays.equals(comp, next)
       comp = next
       iter += 1
     }
-    Iterator.tabulate(n)(v => InternalRow(g.value(v), g.value(byRank(comp(v))))) ++
-      Iterator.fill(if (g.hasNull) 1 else 0)(InternalRow(null, null))
+    Iterator.tabulate(n)(v => InternalRow(g.value(v), g.value(byRank(comp(v)))))
   }
 
   /** [[labelPropagation]]'s rounds. A node keeps a row in a round when it
-    * received a vote or has no in-edge at all (pinned to its own id);
-    * the null dst group votes like any other and the null node carries its
-    * own row, so the null id can hold two rows, as in the distributed
-    * union. */
+    * received a vote or has no in-edge at all (pinned to its own id). */
   private def majorityRounds(iterations: Int)(rows: Iterator[InternalRow]): Iterator[InternalRow] = {
     val g = new EdgeIndex(rows, LongType)
     val n = g.n
     val id = Array.tabulate(n)(g.long)
-    val hasIn = new Array[Boolean](n + 1)
+    val hasIn = new Array[Boolean](n)
     g.dst.foreach(hasIn(_) = true)
-    // voters per dst (index n: the null group); a null source joins no label
-    val voters = g.src.indices.filter(g.src(_) < n).groupBy(g.dst(_)).map {
-      case (d, ks) => d -> ks.map(g.src(_)).toArray }
+    val voters = g.src.indices.groupBy(g.dst(_)).map { case (d, ks) => d -> ks.map(g.src(_)).toArray }
     var label = id.clone()
     var present = Array.fill(n)(true)
-    val nullNode: List[Any] = if (g.hasNull) List(null) else Nil
-    var nullLabels = nullNode
     for (_ <- 1 to iterations) {
       val next = new Array[Long](n)
       val nextPresent = new Array[Boolean](n)
-      var nullGroup: List[Any] = Nil
       for ((d, srcs) <- voters) {
         val votes = srcs.filter(present(_)).map(label(_)).sorted
-        if (votes.nonEmpty) {
-          val m = modeOfSorted(votes)
-          if (d < n) { next(d) = m; nextPresent(d) = true } else nullGroup = List(m)
-        }
+        if (votes.nonEmpty) { next(d) = modeOfSorted(votes); nextPresent(d) = true }
       }
       for (v <- 0 until n if !hasIn(v)) { next(v) = id(v); nextPresent(v) = true }
       label = next
       present = nextPresent
-      nullLabels = nullGroup ++ nullNode
     }
-    (0 until n).iterator.filter(present(_)).map(v => InternalRow(id(v), label(v))) ++
-      nullLabels.iterator.map(l => InternalRow(null, l))
+    (0 until n).iterator.filter(present(_)).map(v => InternalRow(id(v), label(v)))
   }
 
   /** The most frequent value of an ascending array, ties to the smallest:
@@ -771,47 +771,42 @@ object Graph {
   }
 
   /** [[pageRankInt]]'s rounds. Out-degree counts every distinct edge of a
-    * source, a null dst included; the dangling share sums the non-null
-    * dangling nodes over |V| node rows (the null node included). */
+    * source; the dangling share sums the dangling nodes' ranks over |V|. */
   private def rankRounds(iterations: Int, scale: Long, base: Long, redistribute: Boolean)(
       rows: Iterator[InternalRow]): Iterator[InternalRow] = {
     import Math.{addExact => add, multiplyExact => mul}
     val g = new EdgeIndex(rows, LongType)
     val n = g.n
     val outdeg = new Array[Long](n)
-    g.src.foreach(s => if (s < n) outdeg(s) += 1)
-    val nV = math.max(g.nodeRows, 1L)
+    g.src.foreach(outdeg(_) += 1)
+    val nV = math.max(n.toLong, 1L)
     var rank = Array.fill(n)(scale)
-    var nullRank = scale
     for (_ <- 1 to iterations) {
       val contrib = new Array[Long](n)
       for (k <- g.src.indices) {
         val (s, d) = (g.src(k), g.dst(k))
-        if (s < n && d < n) contrib(d) = add(contrib(d), rank(s) / outdeg(s))
+        contrib(d) = add(contrib(d), rank(s) / outdeg(s))
       }
       val dshare =
         if (!redistribute) 0L
         else (0 until n).filter(outdeg(_) == 0).foldLeft(0L)((acc, v) => add(acc, rank(v))) / nV
       rank = Array.tabulate(n)(v => add(base, mul(85L, add(contrib(v), dshare)) / 100L))
-      nullRank = add(base, mul(85L, dshare) / 100L)
     }
-    Iterator.tabulate(n)(v => InternalRow(g.long(v), rank(v))) ++
-      Iterator.fill(if (g.hasNull) 1 else 0)(InternalRow(null, nullRank))
+    Iterator.tabulate(n)(v => InternalRow(g.long(v), rank(v)))
   }
 
   /** [[hitsInt]]'s rounds on dense score arrays (an absent row is a zero
-    * row). A null endpoint's group still adds its mass to the half-round's
-    * normalizer, while its own score is never read. */
+    * row). */
   private def hubAuthRounds(iterations: Int, scale: Long)(
       rows: Iterator[InternalRow]): Iterator[InternalRow] = {
     import Math.{addExact => add, multiplyExact => mul}
     val g = new EdgeIndex(rows, LongType)
     val n = g.n
-    val nV = math.max(g.nodeRows, 1L)
-    // mass summed into `to` over the edges whose `from` end joins a score
+    val nV = math.max(n.toLong, 1L)
+    // mass summed into `to` over the edges, read from the `from` end's score
     def half(from: Array[Int], to: Array[Int], score: Array[Long]): Array[Long] = {
-      val mass = new Array[Long](n + 1)
-      for (k <- from.indices if from(k) < n) mass(to(k)) = add(mass(to(k)), score(from(k)))
+      val mass = new Array[Long](n)
+      for (k <- from.indices) mass(to(k)) = add(mass(to(k)), score(from(k)))
       val norm = math.max(mass.foldLeft(0L)(add) / nV, 1L)
       Array.tabulate(n)(v => mul(mass(v), scale) / norm)
     }
@@ -821,7 +816,6 @@ object Graph {
       auth = half(g.src, g.dst, hub)
       hub = half(g.dst, g.src, auth)
     }
-    Iterator.tabulate(n)(v => InternalRow(g.long(v), hub(v), auth(v))) ++
-      Iterator.fill(if (g.hasNull) 1 else 0)(InternalRow(null, 0L, 0L))
+    Iterator.tabulate(n)(v => InternalRow(g.long(v), hub(v), auth(v)))
   }
 }

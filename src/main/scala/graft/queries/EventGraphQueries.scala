@@ -28,9 +28,10 @@ object EventGraphQueries {
 
   /** Release hook: frees the checkpoint blocks and map entries of one
     * session — or, with the None default, of EVERY entry, live sessions
-    * included. Call when recycling a long-lived session, and only when no
-    * previously-returned graph DataFrame is still in flight: the blocks
-    * are unpersisted EAGERLY (the recycle contract — Wave11Spec pins it)
+    * included. Call to free a session's trade-pairs blocks while it lives
+    * on, and only when no previously-returned graph DataFrame is still in
+    * flight: the blocks are unpersisted EAGERLY (the release contract —
+    * Wave11Spec pins it)
     * and a localCheckpoint's truncated lineage cannot recompute them for
     * a concurrent reader. The next access recomputes from source; results
     * are unaffected. */

@@ -38,7 +38,7 @@ class BenchArtifactSpec extends AnyFunSuite {
   }
 
   test("both lines carry the board's key sets") {
-    val env = Set("sf", "commit", "cores", "load_avg_1m", "cold", "recycle_every", "passes",
+    val env = Set("sf", "commit", "cores", "load_avg_1m", "cold", "passes",
       "retry_ceiling_sec", "ceiling_ref", "frame_memo", "steal", "closing_board", "retries",
       "n_failed", "twins_excluded", "metric", "value", "unit")
     assert(keys(full) == env ++ Set("queries", "ceilings_raised", "counters"))

@@ -99,15 +99,14 @@ class FrameMemoSpec extends SparkSpecBase {
     memo.release()
   }
 
-  test("bench recycle cadence: a fresh session recomputes the key; per-session release leaves it intact") {
-    // Bench recycles the SparkSession every ~40 queries (mid-block for the
-    // em/retrieval/graph memo families): the next get on the NEW session
-    // must be an independent recompute with identical rows — never a
-    // missing-block read of the old session's checkpoint. A genuinely
+  test("a new session rebuilds its own entry; releasing the old one keeps it") {
+    // Specs and perfbench run several sessions in one JVM: a get on a NEW
+    // session must be an independent recompute with identical rows — never
+    // a missing-block read of the old session's checkpoint. A genuinely
     // stopped second context is untestable in one JVM (Wave11Spec
     // precedent); the stopped-session purge shares per-session release's
-    // removal path, which this pins under the recycle interleaving.
-    val memo = FrameMemo("spec_recycle")
+    // removal path, which this pins with two live sessions.
+    val memo = FrameMemo("spec_new_session")
     val oldS = spark.newSession()
     val rowsOld = memo.get(oldS, "k")(frame(5)).collect().map(_.toString).sorted
     val newS = spark.newSession()
@@ -115,7 +114,7 @@ class FrameMemoSpec extends SparkSpecBase {
     val onNew = memo.get(newS, "k")({ rebuilt = true; frame(5) })
     assert(rebuilt, "a new session must rebuild — entries are (session, key)-scoped")
     assert(memo.rddIds.size == 2, "both sessions' entries coexist until release/purge")
-    memo.release(Some(oldS)) // the recycle hook for the dropped session
+    memo.release(Some(oldS)) // drop the old session's entry
     assert(memo.rddIds.size == 1, "releasing the old session must keep the new entry")
     assert(onNew.collect().map(_.toString).sorted.sameElements(rowsOld),
       "the recomputed frame must be row-identical after the old session's blocks are gone")

@@ -14,8 +14,9 @@ import graft.operators.Graph
   * one-task path; a few-byte advisory partition size sizes the same edge
   * checkpoint past one partition and forces the distributed loop. Both
   * must return the same rows under the same schema, nullability included,
-  * on random graphs with self-loops, duplicate and reversed edges,
-  * isolated nodes and null endpoints, converged or not. */
+  * on random graphs with self-loops, duplicate and reversed edges and
+  * isolated nodes, converged or not, and both must fail on an edge with a
+  * null endpoint. */
 class GraphOneTaskSpec extends SparkSpecBase {
   import spark.implicits._
   private val sc = spark.sparkContext
@@ -63,11 +64,16 @@ class GraphOneTaskSpec extends SparkSpecBase {
   }
 
   // small id space: self-loops, duplicates and reversed pairs come up often
-  private val endpoint = Gen.frequency(1 -> Gen.const(None), 12 -> Gen.choose(0L, 9L).map(Some(_)))
+  private val endpoint = Gen.choose(0L, 9L)
   private val edgeList = Gen.choose(0, 24).flatMap(Gen.listOfN(_, Gen.zip(endpoint, endpoint)))
   private val isolatedIds = Gen.listOf(Gen.choose(0L, 14L))
 
-  private def edgesDf(es: Seq[(Option[Long], Option[Long])]) = es.toDF("src", "dst")
+  private def edgesDf(es: Seq[(Long, Long)]) = es.toDF("src", "dst")
+
+  /** The messages along the cause chain of what `run` throws. */
+  private def failure(run: => Any): String =
+    Iterator.iterate[Throwable](intercept[Exception](run))(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString("\n")
 
   test("connected components: one task == distributed for int, bigint and string ids") {
     val prop = Prop.forAllNoShrink(edgeList, isolatedIds, Gen.choose(0, 4)) { (es, iso, maxIter) =>
@@ -84,7 +90,7 @@ class GraphOneTaskSpec extends SparkSpecBase {
   }
 
   test("connected components on a chain longer than maxIter stop unconverged on both paths") {
-    val chain = (1L to 9L).map(i => (Option(i + 1), Option(i))).toDF("a", "b")
+    val chain = (1L to 9L).map(i => (i + 1, i)).toDF("a", "b")
     val nodes = (0L to 11L).toDF("id")
     val run = () => Graph.connectedComponents(nodes, chain, "id", "a", "b", maxIter = 3)
     val (rows, _, _) = oneTask(run())
@@ -123,11 +129,7 @@ class GraphOneTaskSpec extends SparkSpecBase {
 
   test("a scale too large for 64 bits fails loudly on both paths") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L)).toDF("src", "dst")
-    def overflows(run: => Long): Boolean = {
-      val e = intercept[Exception](run)
-      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        .exists(t => String.valueOf(t.getMessage).toLowerCase.contains("overflow"))
-    }
+    def overflows(run: => Long): Boolean = failure(run).toLowerCase.contains("overflow")
     val huge = Long.MaxValue / 4
     for (dangling <- Seq(false, true)) {
       assert(overflows(oneTask(Graph.pageRankInt(edges, "src", "dst", 3, huge, dangling))._1.size))
@@ -135,6 +137,19 @@ class GraphOneTaskSpec extends SparkSpecBase {
     }
     assert(overflows(oneTask(Graph.hitsInt(edges, "src", "dst", 2, huge))._1.size))
     assert(overflows(distributed(Graph.hitsInt(edges, "src", "dst", 2, huge))._1.size))
+  }
+
+  Seq[(String, DataFrame => DataFrame)](
+    "connectedComponents" -> (Graph.connectedComponentsFromEdges(_, "src", "dst")),
+    "labelPropagation" -> (Graph.labelPropagation(_, "src", "dst")),
+    "pageRankInt" -> (Graph.pageRankInt(_, "src", "dst", redistributeDangling = true)),
+    "hitsInt" -> (Graph.hitsInt(_, "src", "dst"))
+  ).foreach { case (op, run) =>
+    test(s"$op: an edge with a null endpoint fails loudly on both paths") {
+      val edges = Seq((Some(1L), Some(2L)), (Some(2L), None), (Some(3L), Some(1L))).toDF("src", "dst")
+      for (m <- Seq(failure(oneTask(run(edges))), failure(distributed(run(edges)))))
+        assert(m.contains(s"Graph.$op: edge (") && m.contains("has a null endpoint"), m)
+    }
   }
 
   test("the distributed min-label round folds its convergence test into its checkpoint job") {

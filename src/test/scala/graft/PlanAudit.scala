@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** Shared plan-metric helpers for PlanAuditSpec and ShuffleBudgetGen. */
@@ -11,8 +12,9 @@ object PlanAudit {
     * executedPlan is an opaque AdaptiveSparkPlanExec leaf and the count
     * would read 0 for everything. ReusedExchangeExec deliberately not
     * counted — a reused exchange shuffles once. */
-  def shuffleCount(df: DataFrame): Int = {
-    val plan = df.queryExecution.executedPlan
+  def shuffleCount(df: DataFrame): Int = shuffleCount(df.queryExecution.executedPlan)
+
+  def shuffleCount(plan: SparkPlan): Int = {
     require(!plan.getClass.getSimpleName.startsWith("AdaptiveSparkPlan"),
       "shuffleCount needs spark.sql.adaptive.enabled=false")
     plan.collect { case _: ShuffleExchangeExec => 1 }.sum

@@ -149,20 +149,11 @@ class PlanAuditSpec extends SparkSpecBase {
     "em_surrogate_ids" -> 0,
     "em_usage_metrics" -> 2,
     "em_weather_impacts" -> 0,
-    "g1_pagerank" -> 5,
+    // g1/g1b/g2 return a checkpointed result: their rounds run inside the
+    // operator and are pinned by the rounds-plan test below
+    "g1_pagerank" -> 0,
     "g1b_pagerank_dangling" -> 0,
-    // round 16: the edge checkpoint declares its hash layout on src
-    // (CheckpointBridge.localCheckpointHashPartitioned), so the four
-    // per-round edge⋈labels joins read the edge side in place — 11 → 8
-    // (the 8th is the build's own sizing repartition, visible only under
-    // the audit's AQE-off conditions; at runtime it replaces four
-    // per-round edge exchanges — probed tasks 137 → 71). 8 → 7 once the
-    // audit forces the distributed loop (distributedGraphs): the sized
-    // count is then the session's shuffle partitions, the width every
-    // exchange of the loop has, where the old sf0.001 audit measured one
-    // partition and paid the re-alignment exchange of a layout that now
-    // takes the one-task path instead
-    "g2_label_propagation" -> 7,
+    "g2_label_propagation" -> 0,
     // round 15: sparse half-rounds moved the node-spine restore out of
     // the per-iteration checkpoints into the returned plan — the 2
     // exchanges are the epilogue's two |V|-row spine left joins.
@@ -472,6 +463,51 @@ class PlanAuditSpec extends SparkSpecBase {
           if (shuffles != budget)
             Some(s"$name: $shuffles shuffles != pinned $budget") else None
         ).flatten
+      }
+      assert(violations.isEmpty, violations.mkString("\n"))
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+  }
+
+  test("the distributed PageRank and label-propagation rounds keep their exchange counts") {
+    // both operators run their rounds as ONE lazy plan, executed by the
+    // checkpoint of the result: the last localCheckpoint the entry runs
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.apache.spark.sql.graftbridge.ListenerBusBridge
+    val pins = Seq(
+      // 5 rounds, one contribution aggregate exchange each
+      "g1_pagerank" -> 5,
+      // round 16: the edge checkpoint declares its hash layout on src
+      // (CheckpointBridge.localCheckpointHashPartitioned), so the four
+      // per-round edge⋈labels joins read the edge side in place — 11 → 8
+      // (the 8th is the build's own sizing repartition, visible only under
+      // the audit's AQE-off conditions; at runtime it replaces four
+      // per-round edge exchanges — probed tasks 137 → 71). 8 → 7 once the
+      // audit forces the distributed loop (distributedGraphs): the sized
+      // count is then the session's shuffle partitions, the width every
+      // exchange of the loop has, where the old sf0.001 audit measured one
+      // partition and paid the re-alignment exchange of a layout that now
+      // takes the one-task path instead
+      "g2_label_propagation" -> 7)
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try distributedGraphs {
+      val violations = pins.flatMap { case (name, pin) =>
+        val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+        val listener = new QueryExecutionListener {
+          def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+            if (funcName == "localCheckpoint") plans.add(qe.executedPlan)
+          def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+        }
+        spark.listenerManager.register(listener)
+        try {
+          SparkEntry.queries(name)(spark, Sf0001)
+          ListenerBusBridge.drain(spark.sparkContext)
+        } finally spark.listenerManager.unregister(listener)
+        val rounds = plans.toArray(Array.empty[SparkPlan]).lastOption
+        val shuffles = rounds.map(PlanAudit.shuffleCount)
+        if (shuffles.contains(pin)) None
+        else Some(s"$name: rounds plan has $shuffles shuffles, pinned $pin:\n${rounds.getOrElse("")}")
       }
       assert(violations.isEmpty, violations.mkString("\n"))
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)

@@ -105,12 +105,4 @@ class QueryMetricsSpec extends SparkSpecBase {
     intercept[IllegalStateException](memo.get(spark, "k")(failing))
     assert(sc.getLocalProperty(QueryMetrics.ScopeProperty) == null)
   }
-
-  test("merge sums two readings and keeps the larger peak") {
-    val a = scala.collection.immutable.ListMap("jobs" -> 2L, "peak_execution_memory_bytes" -> 5L)
-    val b = scala.collection.immutable.ListMap("jobs" -> 3L, "peak_execution_memory_bytes" -> 4L,
-      "sizing_misses" -> 1L)
-    assert(QueryMetrics.merge(a, b).toSeq ==
-      Seq("jobs" -> 5L, "peak_execution_memory_bytes" -> 5L, "sizing_misses" -> 1L))
-  }
 }

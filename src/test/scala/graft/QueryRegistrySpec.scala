@@ -8,7 +8,7 @@ import graft.QuerySpec.{CapturedOracle, Declared, RowsOnly}
 /** The board registry's contract: [[QuerySpec.board]] refuses a
   * declaration table that disagrees with the query objects, naming the
   * entry; Bench and Verify refuse an allowlist naming anything off the
-  * board; and Bench's session blocks never split a memo's readers. */
+  * board; and Bench runs every memo reader after the other entries. */
 class QueryRegistrySpec extends AnyFunSuite {
 
   private val noop: (SparkSession, String) => DataFrame = (_, _) => null
@@ -73,38 +73,11 @@ class QueryRegistrySpec extends AnyFunSuite {
       Seq("g1_pagerank", "g1b_pagerank_dangling", "g2_label_propagation", "g3_hits"))
   }
 
-  private def memosOf(names: Map[String, Set[String]]): String => Set[String] =
-    names.withDefaultValue(Set.empty)
-
-  test("the board's timed pass puts every memo's readers in the first block") {
-    val memos = memosOf(SparkEntry.board.map(q => q.name -> q.memos).toMap)
-    val blocks = Bench.blocks(Bench.timedBoard, memos, size = 40)
-    val readers = Bench.timedBoard.filter(memos(_).nonEmpty).toSet
-    assert(readers.nonEmpty && readers.subsetOf(blocks.head.toSet))
-    assert(blocks.flatten.sorted == Bench.timedBoard.sorted && blocks.forall(_.size <= 40))
-  }
-
-  test("block placement never splits a memo's readers across blocks") {
-    val rnd = new scala.util.Random(7)
-    (1 to 500).foreach { _ =>
-      val size = 1 + rnd.nextInt(12)
-      val entries = (0 until rnd.nextInt(40)).map { i =>
-        s"q$i" -> (0 until 3).filter(_ => rnd.nextInt(6) == 0).map(m => s"m$m").toSet
-      }
-      val memos = memosOf(entries.toMap)
-      val names = rnd.shuffle(entries.map(_._1))
-      val nReaders = entries.count(_._2.nonEmpty)
-      scala.util.Try(Bench.blocks(names, memos, size)).fold(
-        e => assert(e.isInstanceOf[IllegalArgumentException] && nReaders > size, e.getMessage),
-        blocks => {
-          assert(blocks.flatten.sorted == names.sorted && blocks.forall(_.size <= size))
-          entries.flatMap(_._2).distinct.foreach { m =>
-            assert(blocks.count(_.exists(memos(_).contains(m))) == 1, s"$m split across blocks")
-          }
-        })
-    }
-    // more readers of one memo than a block holds cannot be placed
-    val crowded = memosOf((1 to 5).map(i => s"q$i" -> Set("m")).toMap)
-    assert(failure(Bench.blocks((1 to 5).map(i => s"q$i"), crowded, size = 4)).contains("readers of m"))
+  test("the run order covers the selection and puts every memo reader last") {
+    val memos = SparkEntry.board.map(q => q.name -> q.memos).toMap.withDefaultValue(Set.empty[String])
+    val order = Bench.runOrder(Bench.timedBoard, memos)
+    assert(order.sorted == Bench.timedBoard.sorted)
+    val firstReader = order.indexWhere(memos(_).nonEmpty)
+    assert(firstReader > 0 && order.drop(firstReader).forall(memos(_).nonEmpty), order)
   }
 }

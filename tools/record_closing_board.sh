@@ -4,7 +4,7 @@
 # while the driver's single BENCH_rN run — taken under whatever load the
 # host happened to carry — was the only machine-readable number, so
 # round-over-round comparisons had to band-read. This script runs the
-# official configuration (sf0.1, min-of-two, recycle-40, per-class retry
+# official configuration (sf0.1, one session, min-of-two, per-class retry
 # ceilings) and writes tools/closing_board.json; Bench embeds that file
 # verbatim as the "closing_board" field of every subsequent JSON line, so
 # BENCH_r<N> carries BOTH runs: the driver's and the builder's idle one.
