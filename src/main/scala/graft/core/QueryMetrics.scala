@@ -87,7 +87,7 @@ object QueryMetrics {
   /** The counters of every reading, in order. */
   val Keys: Seq[String] = Seq("jobs", "stages", "tasks", "task_ends", "executor_run_ms", "executor_cpu_ns",
     "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes", PeakKey, "sizing_misses",
-    "graph_local_solves", "codegen_compiles", "codegen_ms")
+    "graph_local_solves", "stream_batches", "codegen_compiles", "codegen_ms")
   private val Zero = Keys.map(_ -> 0L)
 
   /** `n` occurrences of `counter` in `scope` (1 for a degraded or
@@ -129,7 +129,7 @@ object QueryMetrics {
     finally sc.setLocalProperty(ScopeProperty, outer)
   }
 
-  /** Adds 1 to `counter` of this thread's current scope; no-op outside one. */
-  def count(sc: SparkContext, counter: String): Unit =
-    Option(sc.getLocalProperty(ScopeProperty)).foreach(s => ListenerBusBridge.post(sc, Counted(s, counter)))
+  /** Adds `n` to `counter` of this thread's current scope; no-op outside one. */
+  def count(sc: SparkContext, counter: String, n: Long = 1): Unit =
+    Option(sc.getLocalProperty(ScopeProperty)).foreach(s => ListenerBusBridge.post(sc, Counted(s, counter, n)))
 }

@@ -80,10 +80,13 @@ object Tables {
     *     `spark.read.parquet` as is, so its error is Spark's own.
     *
     * Not used where the input changes on every call: `Upsert` targets,
-    * `StreamingJobs.passThroughToBronze`, staged temp directories,
-    * `streamingCdcApply`'s `pathGlobFilter` read and the incremental
-    * near-dup's signature-index reads keep a bare `spark.read.parquet` —
-    * there the memo would only ever miss and keep dead entries. */
+    * the incremental near-dup's signature-index and match reads, and
+    * every `StreamingJobs` stream over a non-board directory (the
+    * `passThroughToBronze` source, landing directories, staged temp
+    * directories, `streamingCdcApply`'s `pathGlobFilter` read and the
+    * st22 batch files) keep a bare `spark.read.parquet` — there the memo
+    * would only ever miss and keep dead entries. Board-table streams read
+    * through it. */
   def parquet(spark: SparkSession, path: String): DataFrame =
     fileIdentity(spark, path) match {
       case None => spark.read.parquet(path)

@@ -49,9 +49,9 @@ object KafkaTransport {
     KafkaEnvelope.unwrap(envelopeStream(spark, source), schema)
 
   /** Wire a wrapped envelope frame to the matching sink: the Kafka branch
-    * is the production writeStream (checkpointed, exactly-once per the
-    * connector's idempotent producer), the twin appends parquet. Returns
-    * the started query. */
+    * is the production writeStream (checkpointed, `acks=all` as in the
+    * reference producer, resources/kafka.py:56-60), the twin appends
+    * parquet. Returns the started query. */
   def writeEnvelope(
       df: DataFrame,
       sink: Source,
@@ -62,6 +62,7 @@ object KafkaTransport {
         .format("kafka")
         .option("kafka.bootstrap.servers", servers)
         .option("topic", topic)
+        .option("kafka.acks", "all")
         .option("checkpointLocation", checkpointDir)
         .start()
     case FileTwin(dir, fmt) =>

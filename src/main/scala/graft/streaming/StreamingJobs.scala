@@ -2,16 +2,21 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQueryProgress, Trigger}
+import scala.reflect.io.Directory
 
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode,
+  StreamingQueryProgress, Trigger}
+
+import graft.core.QueryMetrics
 import graft.operators.{Dedup, Upsert}
 
 /** Structured Streaming re-expression of the reference's Kafka→Flink→
   * StarRocks path (SURVEY §2.9). Sources here are file streams (no Kafka
   * broker in this environment); the transforms are source-agnostic — swap
-  * `readStream.format("kafka")` in and everything downstream holds.
+  * a Kafka source in (`KafkaTransport`) and everything downstream holds.
+  * Every stream is read by [[parquetStream]] and run by [[drain]].
   */
 object StreamingJobs {
 
@@ -46,10 +51,26 @@ object StreamingJobs {
       finally spark.conf.set("spark.sql.shuffle.partitions", prev)
     }
 
-  /** The one memory-sink runner: starts `df` as a query named
-    * `<prefix>_<n>` under the 8-partition scope, drains everything
-    * available, stops it, and returns the sink table (a batch frame)
-    * together with the query's progress reports. */
+  /** The one streaming runner: starts the query `writer` describes under
+    * the 8-partition scope, drains everything available, stops it, and
+    * returns its progress reports. The number of distinct batches it ran
+    * is added to the calling scope's `stream_batches` counter. */
+  private def drain(spark: SparkSession, writer: DataStreamWriter[Row]): Array[StreamingQueryProgress] = {
+    val progress = withScopedShufflePartitions(spark, 8) {
+      val q = writer.start()
+      try { q.processAllAvailable(); q.recentProgress }
+      finally q.stop()
+    }
+    QueryMetrics.count(spark.sparkContext, "stream_batches", progress.map(_.batchId).distinct.length)
+    progress
+  }
+
+  /** [[drain]] into a memory sink: runs `df` as a query named
+    * `<prefix>_<n>` and returns the sink's rows as a batch frame together
+    * with the query's progress reports. The sink registers a temporary
+    * view over its rows; the frame is resolved before the view is dropped,
+    * so the rows live exactly as long as the caller's frame, not for the
+    * rest of the session. */
   private def drainToMemory(
       spark: SparkSession,
       df: DataFrame,
@@ -57,25 +78,42 @@ object StreamingJobs {
       prefix: String
   ): (DataFrame, Array[StreamingQueryProgress]) = {
     val name = s"${prefix}_${counter.incrementAndGet()}"
-    val progress = withScopedShufflePartitions(spark, 8) {
-      val q = df.writeStream.outputMode(outputMode).format("memory").queryName(name).start()
-      try { q.processAllAvailable(); q.recentProgress }
-      finally q.stop()
-    }
-    (spark.table(name), progress)
+    try {
+      val progress = drain(spark, df.writeStream.outputMode(outputMode).format("memory").queryName(name))
+      (spark.table(name), progress)
+    } finally spark.catalog.dropTempView(name): Unit
   }
 
-  /** File-source stream over the single `<table>.parquet` file in `sfDir`,
-    * typed with that file's schema. Events read their nanosecond `ts` as
-    * raw longs and normalize it, exactly as `Tables.events` does. */
-  private def fileStream(spark: SparkSession, sfDir: String, table: String): DataFrame = {
-    val file = s"$table.parquet"
-    val events = table == "events"
-    if (events) spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = graft.core.Tables.parquet(spark, s"$sfDir/$file").schema
-    val stream = spark.readStream.schema(schema).option("pathGlobFilter", file).parquet(sfDir)
-    if (events) graft.core.Tables.normalizeTs(stream) else stream
+  /** The one parquet stream reader: a file-source stream over `dir` (only
+    * the files matching `glob`, when given), typed with a schema read up
+    * front. `memoised` takes that schema from [[graft.core.Tables.parquet]],
+    * for board tables, which do not change between calls; every other
+    * input (staged, landing or test directories) is inferred bare.
+    * `nanos` reads nanosecond timestamps as raw longs (the conf changes
+    * the inferred schema, so it is set first) and normalizes a `ts`
+    * column, whether its writer left raw nanos, NTZ or a timestamp, as
+    * `Tables.events` does. */
+  private def parquetStream(
+      spark: SparkSession,
+      dir: String,
+      glob: Option[String] = None,
+      nanos: Boolean = false,
+      memoised: Boolean = false,
+      maxFilesPerTrigger: Option[Int] = None
+  ): DataFrame = {
+    if (nanos) spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val schema =
+      if (memoised) graft.core.Tables.parquet(spark, glob.fold(dir)(g => s"$dir/$g")).schema
+      else glob.foldLeft(spark.read)(_.option("pathGlobFilter", _)).parquet(dir).schema
+    val reader = glob.foldLeft(spark.readStream.schema(schema))(_.option("pathGlobFilter", _))
+    val stream = maxFilesPerTrigger.foldLeft(reader)(_.option("maxFilesPerTrigger", _)).parquet(dir)
+    if (nanos && schema.fieldNames.contains("ts")) graft.core.Tables.normalizeTs(stream) else stream
   }
+
+  /** The board table `<table>.parquet` in `sfDir` as a stream (memoised
+    * schema; events with their nanosecond `ts` normalized). */
+  private def fileStream(spark: SparkSession, sfDir: String, table: String): DataFrame =
+    parquetStream(spark, sfDir, Some(s"$table.parquet"), nanos = table == "events", memoised = true)
 
   /** Stages `input` in a fresh temp directory, streams it back through
     * `plan` into the memory sink, and deletes the directory after the
@@ -87,10 +125,8 @@ object StreamingJobs {
     val staged = Files.createTempDirectory(s"graft_${prefix}_input_").toFile
     try {
       input.write.mode("overwrite").parquet(staged.getPath)
-      val schema = spark.read.parquet(staged.getPath).schema
-      drainToMemory(spark, plan(spark.readStream.schema(schema).parquet(staged.getPath)),
-        "append", prefix)._1
-    } finally new scala.reflect.io.Directory(staged).deleteRecursively(): Unit
+      drainToMemory(spark, plan(parquetStream(spark, staged.getPath)), "append", prefix)._1
+    } finally new Directory(staged).deleteRecursively(): Unit
   }
 
   /** ST2–ST4: pass-through pipeline — stream of typed rows, checkpointed,
@@ -108,11 +144,7 @@ object StreamingJobs {
       versionCol: String,
       tiebreak: String
   ): org.apache.spark.sql.streaming.StreamingQuery = {
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream
-      .schema(schema)
-      .parquet(srcDir)
-    stream.writeStream
+    parquetStream(spark, srcDir).writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -311,19 +343,10 @@ object StreamingJobs {
     * watermarked streaming dropDuplicates (duplicate re-deliveries within
     * the watermark horizon are suppressed). */
   def streamingDedup(spark: SparkSession, srcDir: String, keys: Seq[String]): DataFrame = {
-    val deduped = landingEventsStream(spark, srcDir)
+    val deduped = parquetStream(spark, srcDir, nanos = true)
       .withWatermark("ts", "1 hour")
       .dropDuplicates(keys)
     drainToMemory(spark, deduped, "append", "dedup")._1
-  }
-
-  /** File-source stream over every parquet file in a landing directory.
-    * `ts` may be raw nanos, NTZ, or a proper timestamp depending on the
-    * writer; normalizeTs maps all three to TimestampType. */
-  private def landingEventsStream(spark: SparkSession, srcDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(srcDir).schema
-    graft.core.Tables.normalizeTs(spark.readStream.schema(schema).parquet(srcDir))
   }
 
   /** ST9: INGEST-TIME benchmark decontamination — the d9 screen as a
@@ -479,12 +502,8 @@ object StreamingJobs {
       maxFilesPerTrigger: Option[Int] = None
   ): DataFrame = {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.option("pathGlobFilter", glob).parquet(sfDir).schema
-    val reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val stream = reader
-      .parquet(sfDir)
+    val stream = parquetStream(spark, sfDir, Some(glob), nanos = true,
+        maxFilesPerTrigger = maxFilesPerTrigger)
       .select(
         col("user_id").as[Long],
         col("event_id").as[Long],
@@ -618,7 +637,7 @@ object StreamingJobs {
     // unix_seconds FLOORS; the former `ts div 1e9` nanos path truncated
     // toward zero — second buckets would differ by 1 s for pre-1970
     // timestamps (none exist in any feed; noted in case that changes)
-    val stream = landingEventsStream(spark, srcDir)
+    val stream = parquetStream(spark, srcDir, nanos = true)
       .select(col("user_id").as[Long], expr("unix_seconds(ts)").as("ts_s").as[Long])
     drainToMemory(spark, sessionPlan(stream, gapSeconds), "append", "sessions")._1
   }
@@ -808,55 +827,6 @@ object StreamingJobs {
     if (portable) Dedup.portableSignatures(df, "doc_id", "text", n = 3, k = 32)
     else Dedup.minHashSignatures(df, "doc_id", "text", n = 3, k = 32)
 
-  /** ST22: d18's incremental near-dup at INGEST time — the continuous
-    * arm of the daily-ingest dedup story. The signature index IS the
-    * state, and it lives in PARQUET, not the state store: each
-    * micro-batch computes its own portable MinHash signatures, LSH-probes
-    * the persisted index (`Dedup.incrementalNearDup` — band equi join,
-    * signatures move, text never does), appends its matches to the
-    * output, and appends its ADMITTED (unmatched) signatures to the
-    * index, so the next batch dedups against everything admitted before
-    * it. State-store footprint: zero. Index footprint: ~1 KB per
-    * admitted doc, on storage where a year of corpus fits.
-    *
-    * Batch boundaries are part of the semantics (docs in the same batch
-    * don't see each other — keep-ALL within a batch, keep-first across
-    * batches), so this harness pins them: documents are staged one FILE
-    * per logical batch (doc_id mod nBatches; repartition(1) is the
-    * fixture-staging seam, same class as st13's sentinel staging) and the
-    * file-source stream runs AvailableNow with maxFilesPerTrigger=1 in
-    * forced-mtime order. The admitted delta is written to a scratch dir
-    * and file-moved into the index so no job ever appends to a path it is
-    * simultaneously reading.
-    *
-    * The oracle replays the same three-stage recurrence in SQL: batch 0
-    * all admitted, batch 1 probed against batch 0's admits, batch 2
-    * probed against batch 0 ∪ admitted-batch-1. */
-  /** @param compactEveryNBatches in-flight compaction cadence: after
-    *         every Nth micro-batch's delta move, run
-    *         [[graft.operators.Dedup.compactSignatureIndex]] (threshold
-    *         semantics — a no-op until the directory is actually
-    *         fragmented past `compactMaxFiles`). Safe INSIDE foreachBatch:
-    *         callbacks are serialized per query and the batch's probe +
-    *         delta move have both completed, so nothing is reading the
-    *         index when it is rewritten — the same
-    *         never-rewrite-a-read-path rule the delta file-move exists
-    *         for. 0 disables (the post-drain pass still runs). Default 64
-    *         per the index-fragmentation table in BASELINE.md (round
-    *         12, after the st10 attribution): probe cost is flat to
-    *         ~10² fragments and ×2.1 by ~10³, so compacting every 64
-    *         admitted deltas keeps the index an order of magnitude below
-    *         the measured pain point for the cost of one bounded rewrite
-    *         per 64 batches.
-    * @param compactMaxFiles fragmentation threshold handed through to
-    *         compactSignatureIndex at each cadence point (and post-drain).
-    * @param stagingBase explicit staging/index directory. None (the
-    *         default) auto-names a pid+start+counter-scoped dir under /tmp
-    *         and runs the stale-tree reclaim sweep; Some(dir) hands
-    *         ownership to the caller (no sweep — the caller knows its own
-    *         lifecycle) and lets a test read the index listing
-    *         DETERMINISTICALLY instead of guessing which /tmp dir was
-    *         this run's by mtime. */
   /** One micro-batch of the incremental near-dup recurrence — the
     * [[streamingIncrementalNearDup]] foreachBatch body, factored out so
     * the crash-replay spec (Wave11Spec) can drive the exact production
@@ -951,6 +921,57 @@ object StreamingJobs {
     } finally sigs.unpersist()
   }
 
+  /** ST22: d18's incremental near-dup at INGEST time — the continuous
+    * arm of the daily-ingest dedup story. The signature index IS the
+    * state, and it lives in PARQUET, not the state store: each
+    * micro-batch computes its own portable MinHash signatures, LSH-probes
+    * the persisted index (`Dedup.incrementalNearDup` — band equi join,
+    * signatures move, text never does), appends its matches to the
+    * output, and appends its ADMITTED (unmatched) signatures to the
+    * index, so the next batch dedups against everything admitted before
+    * it. State-store footprint: zero. Index footprint: ~1 KB per
+    * admitted doc, on storage where a year of corpus fits.
+    *
+    * Batch boundaries are part of the semantics (docs in the same batch
+    * don't see each other — keep-ALL within a batch, keep-first across
+    * batches), so this harness pins them: documents are staged one FILE
+    * per logical batch (doc_id mod nBatches; the staging write is the
+    * fixture seam, same class as st13's sentinel staging) and the
+    * file-source stream runs AvailableNow with maxFilesPerTrigger=1 in
+    * forced-mtime order. The admitted delta is written to a scratch dir
+    * and file-moved into the index so no job ever appends to a path it is
+    * simultaneously reading.
+    *
+    * The oracle replays the same three-stage recurrence in SQL: batch 0
+    * all admitted, batch 1 probed against batch 0's admits, batch 2
+    * probed against batch 0 ∪ admitted-batch-1.
+    *
+    * @param compactEveryNBatches in-flight compaction cadence: after
+    *         every Nth micro-batch's delta move, run
+    *         [[graft.operators.Dedup.compactSignatureIndex]] (threshold
+    *         semantics — a no-op until the directory is actually
+    *         fragmented past `compactMaxFiles`). Safe INSIDE foreachBatch:
+    *         callbacks are serialized per query and the batch's probe +
+    *         delta move have both completed, so nothing is reading the
+    *         index when it is rewritten — the same
+    *         never-rewrite-a-read-path rule the delta file-move exists
+    *         for. 0 disables (the post-drain pass still runs). Default 64
+    *         per the index-fragmentation table in BASELINE.md (round
+    *         12, after the st10 attribution): probe cost is flat to
+    *         ~10² fragments and ×2.1 by ~10³, so compacting every 64
+    *         admitted deltas keeps the index an order of magnitude below
+    *         the measured pain point for the cost of one bounded rewrite
+    *         per 64 batches.
+    * @param compactMaxFiles fragmentation threshold handed through to
+    *         compactSignatureIndex at each cadence point (and post-drain).
+    * @param stagingBase explicit staging/index directory, owned by the
+    *         caller: cleared at the start of the call and never deleted,
+    *         so a test can read the run's index listing from it. None (the
+    *         default) stages under a fresh `Files.createTempDirectory` and
+    *         deletes it before returning; the matches are read back into
+    *         an eager `localCheckpoint` first, so the returned frame reads
+    *         nothing from it.
+    */
   def streamingIncrementalNearDup(
       spark: SparkSession,
       sfDir: String,
@@ -961,151 +982,68 @@ object StreamingJobs {
       portable: Boolean = true
   ): DataFrame = {
     val docs = graft.core.Tables(spark, sfDir).documents.select(col("doc_id"), col("text"))
-    // pid in the path: the counter restarts with every JVM, so two
-    // concurrent processes (parallel test + bench runs) would otherwise
-    // collide on the same staging dir and delete each other's live
-    // checkpoint/index mid-run. The process START time rides along as an
-    // ownership token: (pid, start) names a process INSTANCE, so the
-    // reclaim below can tell a pid-reuse squatter from the true owner —
-    // the thing pid-liveness alone cannot.
-    val selfHandle = ProcessHandle.current()
-    val selfStart: Long =
-      selfHandle.info().startInstant().map[Long](_.toEpochMilli: java.lang.Long).orElse(0L)
-    val base = stagingBase.getOrElse(
-      s"/tmp/graft_st22_${selfHandle.pid()}_${selfStart}_${counter.incrementAndGet()}")
-    // pid-scoped names never collide, so stale trees would otherwise
-    // accumulate forever. Reclaim rules, NEVER touching a live owner's
-    // tree (a caller may still be reading a prior run's matches frame):
-    //  - own-pid dirs: never reclaimed (this JVM reclaims nothing of its
-    //    own; the next JVM does).
-    //  - current format graft_st22_<pid>_<startMs>_<counter>: reclaimed
-    //    unless a LIVE process with that pid AND that start instant
-    //    exists — (pid, start) names a process instance, so a pid-reuse
-    //    squatter (alive, different start) no longer keeps a dead run's
-    //    tree forever, and a genuinely live owner is never mistaken for
-    //    one regardless of how old the dir's mtime is.
-    //  - legacy 1-2-token names (pre-ownership-token rounds): reclaimed
-    //    only when the owner is DEAD **and** the 24 h mtime TTL has
-    //    expired. The conjunction is deliberate: a live process whose pid
-    //    happens to equal the parsed token (counter-as-pid collision, or a
-    //    genuinely long-lived legacy-named run) must never lose its tree,
-    //    so liveness always blocks reclaim; the TTL then only slows
-    //    reclamation of the dead-owner case, which is the safe direction.
-    locally {
-      import scala.reflect.io.Directory
-      val ttlMs = 24L * 3600 * 1000
-      val now = System.currentTimeMillis()
-      val sweepCandidates =
-        if (stagingBase.isDefined) Array.empty[java.io.File] // caller-owned dir: no sweep
-        else Option(new java.io.File("/tmp").listFiles()).getOrElse(Array.empty)
-      sweepCandidates
-        .filter(f => f.isDirectory && f.getName.startsWith("graft_st22_"))
-        .foreach { f =>
-          val toks = f.getName.stripPrefix("graft_st22_").split("_")
-          val pidTok = toks.headOption.flatMap(_.toLongOption)
-          val startTok = if (toks.length >= 3) toks(1).toLongOption else None
-          val isSelf = pidTok.contains(selfHandle.pid())
-          val owner = pidTok.flatMap { pid =>
-            val h = ProcessHandle.of(pid)
-            if (h.isPresent) Some(h.get) else None
-          }
-          val ownerAlive = owner.exists(_.isAlive)
-          // a live process whose start instant WE can't read (restricted
-          // /proc: hidepid, cross-user containers) must be kept — treating
-          // unreadable-as-mismatch would delete a live run's tree, the
-          // exact catastrophe the token exists to prevent. Reclaim needs
-          // POSITIVE evidence: owner dead, or alive with a READABLE start
-          // that differs (pid reuse).
-          val ownerStart: Option[Long] = owner.flatMap { h =>
-            val s = h.info().startInstant()
-            if (s.isPresent) Some(s.get.toEpochMilli) else None
-          }
-          val reclaim = startTok match {
-            case Some(0L) => // owner recorded no readable start instant at
-              // CREATION: liveness is the only evidence either side has
-              !ownerAlive
-            case Some(st) => // ownership-token format
-              !ownerAlive || ownerStart.exists(_ != st)
-            case None => // legacy format: owner-dead AND TTL-expired
-              !ownerAlive && f.lastModified() < now - ttlMs
-          }
-          if (!isSelf && reclaim) {
-            new Directory(f).deleteRecursively(): Unit
-          }
+    // a caller-owned base may hold an earlier run's checkpoint; start clean
+    stagingBase.foreach(b => new Directory(new java.io.File(b)).deleteRecursively(): Unit)
+    val base = stagingBase.getOrElse(Files.createTempDirectory("graft_st22_").toString)
+    try {
+      val inDir = s"$base/in"
+      val idxDir = s"$base/index"
+      val matchDir = s"$base/matches"
+      new java.io.File(inDir).mkdirs()
+      // ONE scan + ONE write job stages every batch: partitionBy(bt) after a
+      // repartition on bt leaves exactly one file per batch value (each
+      // (task, bt) pair writes one file, and every bt lands on one task) —
+      // the one-file-per-logical-batch harness seam without per-batch
+      // filtered rescans
+      val staged = s"$base/stage"
+      docs.withColumn("bt", pmod(col("doc_id"), lit(nBatches)))
+        .repartition(nBatches, col("bt"))
+        .write.partitionBy("bt").mode("overwrite").parquet(staged)
+      (0 until nBatches).foreach { i =>
+        // an empty residue class (fewer docs than batches, or an id gap)
+        // writes no bt=i directory — that logical batch simply never
+        // arrives, which is exactly the empty-batch semantics
+        val parts = Option(new java.io.File(s"$staged/bt=$i").listFiles())
+          .getOrElse(Array.empty[java.io.File])
+          .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
+        parts.headOption.foreach { part =>
+          val dst = new java.io.File(s"$inDir/batch_$i.parquet")
+          java.nio.file.Files.move(part.toPath, dst.toPath)
+          // pinned, strictly increasing mtimes: the file source processes
+          // oldest-first, making batch order deterministic
+          dst.setLastModified(1700000000000L + i * 60000L)
         }
-      // a same-pid leftover at this exact path (pid reuse after reboot)
-      // would corrupt batch accounting; start clean
-      if (new java.io.File(base).exists()) {
-        new Directory(new java.io.File(base)).deleteRecursively(): Unit
       }
-    }
-    val inDir = s"$base/in"
-    val idxDir = s"$base/index"
-    val matchDir = s"$base/matches"
-    new java.io.File(inDir).mkdirs()
+      // empty index with the PRE-BANDED signature schema (scheme-tagged
+      // bh_* columns alongside h0..h31), so batch 0 probes cleanly AND
+      // every probe unpivots stored band hashes instead of re-hashing
+      // the whole index per batch (Dedup.withBandHashCols — admitted
+      // deltas come back pre-banded, keeping the index uniform; the
+      // variant/k/bands ride the column names so a mismatched probe
+      // recomputes instead of silently missing)
+      Dedup.withBandHashCols(signaturesOf(docs.limit(0), portable), k = 32, bands = 8,
+          portable = portable)
+        .write.mode("overwrite").parquet(idxDir)
+      // empty matches frame with the output schema (no-match corpora return
+      // an empty-but-typed result instead of a missing dir)
+      spark.range(0).select(col("id").as("new_id"), col("id").as("idx_id"),
+        col("id").cast("double").as("est_jaccard"))
+        .write.mode("overwrite").parquet(matchDir)
 
-    // ONE scan + ONE write job stages every batch: partitionBy(bt) after a
-    // repartition on bt leaves exactly one file per batch value (each
-    // (task, bt) pair writes one file, and every bt lands on one task) —
-    // the one-file-per-logical-batch harness seam without per-batch
-    // filtered rescans
-    val staged = s"$base/stage"
-    docs.withColumn("bt", pmod(col("doc_id"), lit(nBatches)))
-      .repartition(nBatches, col("bt"))
-      .write.partitionBy("bt").mode("overwrite").parquet(staged)
-    (0 until nBatches).foreach { i =>
-      // an empty residue class (fewer docs than batches, or an id gap)
-      // writes no bt=i directory — that logical batch simply never
-      // arrives, which is exactly the empty-batch semantics
-      val parts = Option(new java.io.File(s"$staged/bt=$i").listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
-      parts.headOption.foreach { part =>
-        val dst = new java.io.File(s"$inDir/batch_$i.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        // pinned, strictly increasing mtimes: the file source processes
-        // oldest-first, making batch order deterministic
-        dst.setLastModified(1700000000000L + i * 60000L)
-      }
-    }
-    // empty index with the PRE-BANDED signature schema (scheme-tagged
-    // bh_* columns alongside h0..h31), so batch 0 probes cleanly AND
-    // every probe unpivots stored band hashes instead of re-hashing
-    // the whole index per batch (Dedup.withBandHashCols — admitted
-    // deltas come back pre-banded, keeping the index uniform; the
-    // variant/k/bands ride the column names so a mismatched probe
-    // recomputes instead of silently missing)
-    Dedup.withBandHashCols(signaturesOf(docs.limit(0), portable), k = 32, bands = 8,
-        portable = portable)
-      .write.mode("overwrite").parquet(idxDir)
-    // empty matches frame with the output schema (no-match corpora return
-    // an empty-but-typed result instead of a missing dir)
-    spark.range(0).select(col("id").as("new_id"), col("id").as("idx_id"),
-      col("id").cast("double").as("est_jaccard"))
-      .write.mode("overwrite").parquet(matchDir)
-
-    val schema = docs.schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inDir)
-    withScopedShufflePartitions(spark, 8) {
-      val q = stream.writeStream
+      drain(spark, parquetStream(spark, inDir, maxFilesPerTrigger = Some(1)).writeStream
         .trigger(Trigger.AvailableNow())
         .option("checkpointLocation", s"$base/ckpt")
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           runIncrementalBatch(spark, base, idxDir, matchDir, batch, batchId,
             portable = portable, compactEveryNBatches = compactEveryNBatches,
             compactMaxFiles = compactMaxFiles)
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    // post-drain compaction point: catches whatever the in-flight cadence
-    // left behind (the tail batches since the last cadence firing, or
-    // everything when the cadence is disabled). Under the threshold, as
-    // in the default board run, it's a directory-listing no-op.
-    Dedup.compactSignatureIndex(spark, idxDir, maxFiles = compactMaxFiles)
-    spark.read.parquet(matchDir)
+        }): Unit
+      // post-drain compaction point: catches whatever the in-flight cadence
+      // left behind (the tail batches since the last cadence firing, or
+      // everything when the cadence is disabled). Under the threshold, as
+      // in the default board run, it's a directory-listing no-op.
+      Dedup.compactSignatureIndex(spark, idxDir, maxFiles = compactMaxFiles)
+      spark.read.parquet(matchDir).localCheckpoint()
+    } finally if (stagingBase.isEmpty) new Directory(new java.io.File(base)).deleteRecursively(): Unit
   }
 }

@@ -19,7 +19,7 @@ class BenchArtifactSpec extends AnyFunSuite {
   private val results =
     Seq((oddName, 0.12345, 1), ("failed_q", -1.0, 0)) ++ (1 to 12).map(i => (f"q$i%02d", i.toDouble, 0))
   private def reading(jobs: Long) = ListMap("jobs" -> jobs, "tasks" -> 3 * jobs, "task_ends" -> 3 * jobs,
-    "graph_local_solves" -> jobs % 2, "codegen_compiles" -> 2 * jobs, "codegen_ms" -> 15 * jobs)
+    "graph_local_solves" -> jobs % 2, "stream_batches" -> jobs % 3, "codegen_compiles" -> 2 * jobs, "codegen_ms" -> 15 * jobs)
   // counters for every entry and both memos; the idle memo's are not charged
   private val counters = (results.map(_._1) ++ Seq("build:spec_built", "build:spec_idle"))
     .zipWithIndex.map { case (k, i) => k -> reading(i.toLong) }.toMap
@@ -74,6 +74,13 @@ class BenchArtifactSpec extends AnyFunSuite {
       assert(full.get("counters").get(k).get("graph_local_solves").asLong ==
         counters(k)("graph_local_solves"), k)
     assert(graft.core.QueryMetrics.Keys.contains("graph_local_solves"))
+  }
+
+  test("each counters record says how many micro-batches its entry's streams ran") {
+    for (k <- keys(full.get("counters")))
+      assert(full.get("counters").get(k).get("stream_batches").asLong ==
+        counters(k)("stream_batches"), k)
+    assert(graft.core.QueryMetrics.Keys.contains("stream_batches"))
   }
 
   test("numbers keep their decimal places; the -1 marker counts as zero in the total") {

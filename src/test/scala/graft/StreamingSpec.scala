@@ -48,19 +48,32 @@ class StreamingSpec extends SparkSpecBase {
   }
 
   test("every streaming entry stops its query, restores the partition scope and leaves no staged input") {
-    // staged-input dirs with their mtimes: a dir rewritten in place counts
-    // as left behind too
+    // staged dirs (st13/st19/st20 inputs, st22's staging tree) with their
+    // mtimes: a dir rewritten in place counts as left behind too
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    def stagedInputs(): Set[(String, Long)] =
+    def stagedTrees(): Set[(String, Long)] =
       Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(_.getName.matches("graft_st\\d+_input_.*"))
+        .filter(f => f.isDirectory && f.getName.matches("graft_st\\d+_.*"))
         .map(f => (f.getName, f.lastModified())).toSet
+    def tempViews(): Set[String] =
+      spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
     graft.queries.StreamingQueries.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val before = stagedInputs()
+      val (trees, views) = (stagedTrees(), tempViews())
       fn(spark, Sf0001).count(): Unit
       assert(spark.streams.active.isEmpty, s"$name left a query running")
       assert(spark.conf.get("spark.sql.shuffle.partitions") == "8", s"$name leaked its partition scope")
-      assert((stagedInputs() -- before).isEmpty, s"$name left staged input behind")
+      assert((stagedTrees() -- trees).isEmpty, s"$name left a staged tree behind")
+      assert((tempViews() -- views).isEmpty, s"$name left a temporary view behind")
     }
+  }
+
+  test("a drained query's batches are counted in the calling scope: st22 runs three") {
+    val metrics = graft.core.QueryMetrics.attach(spark.sparkContext)
+    try {
+      graft.core.QueryMetrics.scoped(spark.sparkContext, "st22") {
+        StreamingJobs.streamingIncrementalNearDup(spark, Sf0001).count()
+      }: Unit
+      assert(metrics.take("st22")("stream_batches") == 3)
+    } finally metrics.detach()
   }
 }

@@ -45,6 +45,22 @@ class TransportAndAuditSpec extends SparkSpecBase {
     assert(e.getMessage.toLowerCase.contains("kafka"))
   }
 
+  test("kafka branch assembles the production writer (fails only on the absent connector)") {
+    // The sink twin of the reader case above: the envelope writeStream is
+    // built up to sink resolution, and the only error is the missing kafka
+    // DATA SOURCE, not a config/logic error in our code.
+    val dir = Files.createTempDirectory("ksink").toString
+    val ckpt = Files.createTempDirectory("ksink_ckpt").toString
+    KafkaEnvelope.wrap(Seq((1L, "flood")).toDF("id", "kind"), col("id"), dataSource = "fema")
+      .write.parquet(s"$dir/batch0")
+    val envelopes = KafkaTransport.envelopeStream(spark, KafkaTransport.FileTwin(s"$dir/batch0"))
+    val e = intercept[Exception] {
+      KafkaTransport.writeEnvelope(envelopes, KafkaTransport.KafkaTopic("broker:9092", "events"), ckpt)
+    }
+    assert(e.getMessage.toLowerCase.contains("kafka"))
+    assert(spark.streams.active.isEmpty)
+  }
+
   test("lineage and compliance audit records append with the macro column sets") {
     val ts = Timestamp.valueOf("2024-09-24 12:00:00")
     val lineagePath = Files.createTempDirectory("lineage").toString + "/log"
